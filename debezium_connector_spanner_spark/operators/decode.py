@@ -1,13 +1,10 @@
 """Decode operators D1-D7 (SURVEY.md §2.2).
 
 Record-type demux, mod explosion with positional mod_number, JSON row
-images -> typed structs. Two decode paths:
-
-- ``from_json`` (JVM, whole-stage-codegen, the hot path), and
-- an Arrow-batched pandas UDF (``decode_json_pandas``) for the
-  dynamic-schema fallback, mirroring the reference's
-  cache-invalidate-and-retry (/root/reference
-  db/metadata/SchemaRegistry.java:78-86). Never per-row Python.
+images -> typed structs via ``from_json`` (JVM, whole-stage codegen).
+A schema that changes mid-stream is handled by the engine's optimistic
+decode plus rollback-and-retry, mirroring the reference's
+cache-invalidate-and-retry (db/metadata/SchemaRegistry.java:78-86).
 
 Mod null-pattern semantics (db/model/Mod.java:18-96): keys always
 present; old_values null on INSERT; new_values null on DELETE. Per-mod
@@ -18,13 +15,9 @@ mod_type mapping (processor/SpannerChangeRecordEmitter.java:42-52).
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from debezium_connector_spanner_spark.sources.event_schema import (
     DATA_CHANGE,
@@ -96,7 +89,6 @@ def explode_mods(events: DataFrame) -> DataFrame:
 def decode_mods(
     events: DataFrame,
     schema: TableSchema,
-    use_pandas_udf: bool = False,
     include_old: bool = False,
 ) -> DataFrame:
     """D2+D6+D7: explode mods and decode JSON images against `schema`.
@@ -112,22 +104,13 @@ def decode_mods(
     val_struct = schema.spark_struct(schema.value_columns, json_shape=True)
 
     m = explode_mods(events)
-    if use_pandas_udf:
-        keys = decode_json_pandas(key_struct)(F.col("mod.keys"))
-        vals = decode_json_pandas(val_struct)(F.col("mod.new_values"))
-        olds = (
-            decode_json_pandas(val_struct)(F.col("mod.old_values"))
-            if include_old
-            else F.lit(None).cast(val_struct)
-        )
-    else:
-        keys = F.from_json(F.col("mod.keys"), key_struct)
-        vals = F.from_json(F.col("mod.new_values"), val_struct)
-        olds = (
-            F.from_json(F.col("mod.old_values"), val_struct)
-            if include_old
-            else F.lit(None).cast(val_struct)
-        )
+    keys = F.from_json(F.col("mod.keys"), key_struct)
+    vals = F.from_json(F.col("mod.new_values"), val_struct)
+    olds = (
+        F.from_json(F.col("mod.old_values"), val_struct)
+        if include_old
+        else F.lit(None).cast(val_struct)
+    )
 
     if schema.needs_cast():
         # JSON shape != sink shape (BYTES base64 string -> binary): apply
@@ -249,40 +232,3 @@ def dedup_identity(decoded: DataFrame) -> DataFrame:
     return decoded.dropDuplicates(
         ["partition_token", "commit_ts", "server_txn_id", "record_sequence", "mod_number"]
     )
-
-
-def decode_json_pandas(struct_type: T.StructType):
-    """Arrow-vectorized JSON object decode -> struct column.
-
-    Used when the decode schema is discovered per batch (dynamic schema
-    epochs) — the pandas UDF is rebuilt per schema version, mirroring the
-    reference's schema-registry invalidation. Batched via Arrow; the JSON
-    parse itself is C (pandas/stdlib json) per element.
-    """
-    fields = [(f.name, f.dataType.simpleString()) for f in struct_type.fields]
-
-    @pandas_udf(struct_type)
-    def _decode_inner(s: pd.Series) -> pd.DataFrame:
-        parsed = s.map(lambda x: json.loads(x) if x is not None else None)
-        cols = {}
-        for name, typ in fields:
-            vals = parsed.map(lambda o: None if o is None else o.get(name))
-            if typ in ("bigint", "int"):
-                vals = pd.to_numeric(vals, errors="coerce").astype("Int64")
-            elif typ in ("double", "float"):
-                vals = pd.to_numeric(vals, errors="coerce").astype("float64")
-            elif typ == "boolean":
-                vals = vals.astype("boolean")
-            elif typ == "string":
-                vals = vals.map(lambda v: v if v is None or isinstance(v, str) else json.dumps(v))
-            cols[name] = vals
-        return pd.DataFrame(cols)
-
-    def _decode(col: F.Column) -> F.Column:
-        # Arrow struct rows can't be null from a pandas UDF; restore
-        # from_json's null-in -> null-struct-out contract at the plan level
-        return F.when(col.isNull(), F.lit(None).cast(struct_type)).otherwise(
-            _decode_inner(col)
-        )
-
-    return _decode

@@ -23,19 +23,14 @@ event client-side when the TVF result set drains
 ``{"partition_end_record": {"end_timestamp": ...}}``.
 
 Cost model (r5, measured at 411k events / 110MB of documents): the
-whole-document ``parse_json`` is the floor — Catalyst column-prunes the
-UNUSED extractions per job (the control pass never builds ``mods``, the
-merge fold never builds ``column_types``), but every job still lexes
-every document byte, so the dialect runs ~2.5-3x the columnar struct
-wire wall (the same Jackson-parse tax the reference pays, there
-single-threaded). Two alternatives were measured and REJECTED:
-decode-once ``persist()`` of the decoded slice (in-memory columnar cache
-build of the fat repeated column_types strings costs more than the
-second pruned parse it saves — 26-31s either way) and pre-demuxing
-record_type from a text prefix (fragile against legitimate JSON
-formatting variance). On a real cluster the fix is upstream: land the
-log as parquet/proto (the other two dialects), keeping pg_json as the
-compatibility reader.
+whole-document ``parse_json`` is the floor — Catalyst column-prunes
+UNUSED extractions, but the scan still lexes every document byte, so
+the dialect runs ~2.5-3x the columnar struct wire wall (the same
+Jackson-parse tax the reference pays, there single-threaded).
+Pre-demuxing record_type from a text prefix was REJECTED (fragile
+against legitimate JSON formatting variance). On a real cluster the fix
+is upstream: land the log as parquet/proto (the other two dialects),
+keeping pg_json as the compatibility reader.
 """
 
 from __future__ import annotations

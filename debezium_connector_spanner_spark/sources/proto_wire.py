@@ -751,7 +751,6 @@ def _decode_data_batch(
     cts: pa.Array,
     idx_data: np.ndarray,
     schema: pa.Schema,
-    include_mods: bool = True,
 ) -> pa.RecordBatch:
     nd = idx_data.shape[0]
     rows, fields, kst, ival, vs, ve = _parse_events(data, dstarts, dends)
@@ -818,36 +817,26 @@ def _decode_data_batch(
             ct_arr[rows_l] = run_cts[run_ids]
     ct_list = ct_arr.tolist()
 
-    if include_mods:
-        # mods: regroup step-major occurrences into per-row order (stable)
-        order = np.argsort(r7, kind="stable")
-        ms, me = s7[order], e7[order]
-        counts = np.bincount(r7, minlength=nd)
-        mrows, mf, _, _, mvs, mve = _parse_events(data, ms, me)
-        nm = ms.shape[0]
+    # mods: regroup step-major occurrences into per-row order (stable)
+    order = np.argsort(r7, kind="stable")
+    ms, me = s7[order], e7[order]
+    counts = np.bincount(r7, minlength=nd)
+    mrows, mf, _, _, mvs, mve = _parse_events(data, ms, me)
+    nm = ms.shape[0]
 
-        def mod_str(f: int) -> pa.Array:
-            m = mf == f
-            return _str_col(data, nm, mrows[m], mvs[m], mve[m])
+    def mod_str(f: int) -> pa.Array:
+        m = mf == f
+        return _str_col(data, nm, mrows[m], mvs[m], mve[m])
 
-        mods_struct = pa.StructArray.from_arrays(
-            [mod_str(1), mod_str(2), mod_str(3)],
-            ["keys", "new_values", "old_values"],
-        )
-        mod_offsets = np.zeros(nd + 1, np.int32)
-        mod_offsets[1:] = np.cumsum(counts)
-        mods_arr = pa.ListArray.from_arrays(
-            pa.array(mod_offsets, type=pa.int32()), mods_struct
-        )
-    else:
-        # projection hint from the caller (Catalyst can't column-prune
-        # through mapInArrow): the control pass never reads mods, and the
-        # mod JSON payloads are the bulk of the gathered bytes — emit
-        # empty lists and skip the child parse + gather entirely
-        empty_struct = pa.array([], type=_PA_MODS.value_type)
-        mods_arr = pa.ListArray.from_arrays(
-            pa.array(np.zeros(nd + 1, np.int32), type=pa.int32()), empty_struct
-        )
+    mods_struct = pa.StructArray.from_arrays(
+        [mod_str(1), mod_str(2), mod_str(3)],
+        ["keys", "new_values", "old_values"],
+    )
+    mod_offsets = np.zeros(nd + 1, np.int32)
+    mod_offsets[1:] = np.cumsum(counts)
+    mods_arr = pa.ListArray.from_arrays(
+        pa.array(mod_offsets, type=pa.int32()), mods_struct
+    )
 
     def bool_col(rws: np.ndarray, iv: np.ndarray) -> pa.Array:
         arr = np.zeros(nd, bool)
@@ -922,7 +911,7 @@ def _decode_ctrl_batch(
     return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
-def decode_proto_wire(log: DataFrame, include_mods: bool = True) -> DataFrame:
+def decode_proto_wire(log: DataFrame) -> DataFrame:
     """Proto wire log -> canonical EVENT_LOG_SCHEMA DataFrame.
 
     Vectorized: numpy varint automaton over the batch's concatenated
@@ -930,11 +919,8 @@ def decode_proto_wire(log: DataFrame, include_mods: bool = True) -> DataFrame:
     no per-row Python objects for DataChange records. Runs AFTER the
     scan's token/commit_ts pruning (the filters sit on plain log
     columns), so only the batch's pruned slice pays the decode.
-    ``include_mods=False`` is the caller-side projection hint for
-    consumers that never read mods (the engine's control pass): the mod
-    payloads are the bulk of the wire bytes, and Catalyst cannot prune
-    columns through mapInArrow. Differential-tested against
-    decode_proto_wire_pandas / decode_record (tests/test_proto_wire.py)."""
+    Differential-tested against decode_proto_wire_pandas / decode_record
+    (tests/test_proto_wire.py)."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
@@ -977,7 +963,6 @@ def decode_proto_wire(log: DataFrame, include_mods: bool = True) -> DataFrame:
                     cts,
                     idx_data,
                     schema,
-                    include_mods,
                 )
             idx_ctrl = np.flatnonzero(rtype != 1)
             if idx_ctrl.size:

@@ -14,8 +14,13 @@ machine. Per batch (reference parity in parentheses, files under
    partitions at once — partition_token IN (active) via broadcast join
    against the per-token offset table, commit_ts in (offset, batch_end].
    Token dirs + sorted row groups give partition/rowgroup pruning.
-3. **Progress**: per-token aggregates (count, max ts, end markers) drive
-   offsets, heartbeat handling (K2) and per-partition lineage metrics (M1/M3).
+3. **Progress**: one ``Observation`` on that scan, below every table and
+   record-type filter, collects the control rows (heartbeats, child
+   partitions, end markers) and the distinct data-row schemas while the
+   merges consume the scan — one log scan per batch, like the
+   reference's single change-stream query (db/dao/ChangeStreamDao.java:
+   65-84). The driver derives per-token progress from it, which drives
+   offsets, heartbeat handling (K2) and per-partition lineage (M1/M3).
 4. **Decode + fold + MERGE** (D1-D9, O5/O12, K1): events are routed BY
    TABLE (processor/SpannerEventDispatcher.java:45-87,
    schema/KafkaSpannerTableSchemaFactory.java:104-142): each configured
@@ -127,7 +132,6 @@ class CdcReplayEngine:
         base_df: DataFrame | None = None,
         tables: dict[str, tuple[TableSchema, DataFrame | None]] | None = None,
         n_buckets: int = 16,
-        use_pandas_udf_decode: bool = False,
         sink_mode: str = "mor",
         compact_every: int = 6,
         compact_mode: str = "async",  # 'async' (maintenance lane) | 'sync'
@@ -193,7 +197,6 @@ class CdcReplayEngine:
         self.events_path = events_path
         self.table_root = table_root
         self.checkpoint_dir = checkpoint_dir
-        self.use_pandas_udf_decode = use_pandas_udf_decode
         self.sink_mode = sink_mode
         self.compact_every = compact_every
         self.compact_mode = compact_mode
@@ -265,6 +268,7 @@ class CdcReplayEngine:
         # create / checkpoint write): every violation reported at once
         # (config/validation/ConfigurationValidator.java:33-59)
         from debezium_connector_spanner_spark.config import (
+            WIRE_LOG_DIR,
             ConfigValidationError,
             validate_engine_config,
         )
@@ -369,29 +373,24 @@ class CdcReplayEngine:
         # this lands on the session's 2MB floor (the swept local optimum);
         # at sf1 (13.4GB) a 2MB split spawns ~6,600 tasks per scan of
         # which >90% own no row group — measured 6.8s vs 0.4s for the SAME
-        # pruned window at 13/32MB splits (tools/diag_scan_cost.py). The
-        # value is derived from input size and core count, never a
-        # constant tuned to one scale; _run() sets it for the replay's
-        # jobs and close() restores the session default.
+        # pruned window at 13/32MB splits (the split-size sweep recorded
+        # in OPTIMIZATION_r06.md). The value is derived from input size
+        # and core count, never a constant tuned to one scale; _run() sets
+        # it for the replay's jobs and close() restores the session
+        # default. Validation guarantees the log dir exists; an empty log
+        # keeps the session default.
+        ev_dir = os.path.join(self.events_path, WIRE_LOG_DIR[self.wire_format])
+        total = sum(
+            os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(ev_dir) for f in fs
+        )
         self._scan_split_bytes = None
-        try:
-            sub = {"pg_json": "events_pg", "proto": "events_proto"}.get(
-                self.wire_format, "events"
-            )
-            ev_dir = os.path.join(self.events_path, sub)
-            total = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(ev_dir)
-                for f in fs
-            )
+        if total:
             cores = max(1, spark.sparkContext.defaultParallelism)
             per_batch = total / max(1, self.n_batches)
             self._scan_split_bytes = int(
                 min(max(per_batch / (4 * cores), 2 * 1024 * 1024), 64 * 1024 * 1024)
             )
-        except OSError:
-            pass  # missing dir (exotic tests): keep the session default
-        self._prev_split_conf = None
+        self._prev_confs: dict[str, str | None] | None = None
 
     # ------------------------------------------------------------- layout
     def _table_path(self, name: str) -> str:
@@ -486,14 +485,15 @@ class CdcReplayEngine:
                 pool.shutdown(wait=True, cancel_futures=True)
                 setattr(self, attr, None)
         self._compact_futures.clear()
-        # restore the session's scan split size (the adaptive value is
-        # scoped to this replay's jobs; queries after run() see the
-        # session default again)
-        if self._prev_split_conf is not None:
-            self.spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", self._prev_split_conf
-            )
-            self._prev_split_conf = None
+        # restore the session confs _run() scoped to this replay's jobs;
+        # queries after run() see the session defaults again
+        if self._prev_confs is not None:
+            for key, value in self._prev_confs.items():
+                if value is None:
+                    self.spark.conf.unset(key)
+                else:
+                    self.spark.conf.set(key, value)
+            self._prev_confs = None
 
     def _checkpoint(self, snapshot_ids: dict[str, int], sync: bool = False) -> None:
         state = {
@@ -652,17 +652,24 @@ class CdcReplayEngine:
             self.close()
 
     def _run(self, max_batches: int | None = None) -> dict:
-        # batch jobs (ctrl + merges) run in the high-weight ingest pool;
+        # batch jobs (the per-table merges) run in the high-weight ingest pool;
         # per-batch worker threads inherit this via InheritableThreadLocal.
         # The maintenance lane overrides to 'maint' in its own thread.
         self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "ingest")
-        if self._scan_split_bytes is not None and self._prev_split_conf is None:
-            self._prev_split_conf = self.spark.conf.get(
-                "spark.sql.files.maxPartitionBytes"
-            )
-            self.spark.conf.set(
-                "spark.sql.files.maxPartitionBytes", str(self._scan_split_bytes)
-            )
+        if self._prev_confs is None:
+            # AQE replaces a query stage whose output is empty with an
+            # empty relation, and the batch scan's progress Observation
+            # inside that stage is then never reported (a window holding
+            # only control rows feeds the merge an empty slice)
+            rules = "spark.sql.adaptive.optimizer.excludedRules"
+            keep_obs = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+            excluded = self.spark.conf.get(rules, None)
+            confs = {rules: f"{excluded},{keep_obs}" if excluded else keep_obs}
+            if self._scan_split_bytes is not None:
+                confs["spark.sql.files.maxPartitionBytes"] = str(self._scan_split_bytes)
+            self._prev_confs = {k: self.spark.conf.get(k, None) for k in confs}
+            for key, value in confs.items():
+                self.spark.conf.set(key, value)
         done = 0
         totals = {"events": 0, "mods": 0, "wall_s": 0.0}
 
@@ -860,92 +867,65 @@ class CdcReplayEngine:
         tasks = self._scaler.step(self._work_units(active, batch_end_us))
         salt_width = max(min(16, self._scaler.tasks_max), tasks)
         scan = self._active_scan(active, batch_end_us) if active else None
-        # NOTE (r5, measured): decode-once persist of the wire-dialect
-        # scan was tried and REJECTED — for proto the vectorized kernel
-        # is cheaper than the cache round-trip (9.6s vs 12.1s replay),
-        # and for pg the in-memory columnar cache build costs more than
-        # the second pruned parse it saves (26-31s either way at 411k
-        # events). Per-job Catalyst pruning (ctrl never extracts mods,
-        # the fold never reads column_types) is the winning shape.
         if scan is not None:
             self.meter.on_query()  # one change-stream query per batch window
 
         events = 0
         mods = 0
         lineage = []
-        new_children: dict[str, list[str]] = {}
+        new_children: dict[str, tuple[list[str], int]] = {}
         finished: list[str] = []
         salted_used: list[str] = []
         snapshot_ids = self._snapshot_ids()
 
         if scan is not None:
-            # deliberately NOT persisted: the control pass and the
-            # decode+merge prune different column sets; caching would
-            # materialize all columns (incl. the heavy mods JSON) while the
-            # pruned parquet re-read is row-group-pruned and cheaper
-            t_stage = time.monotonic()
-            # --- control + schema pass: ONE small aggregate job. Control
-            # rows drive heartbeats / end markers / child registration;
-            # data rows contribute only their count and distinct
-            # (table, column_types) pairs (dictionary-encoded -> cheap). ---
-            is_data = F.col("record_type") == DATA_CHANGE
-            ctrl_src = scan
-            if self.wire_format == "proto":
-                # projection hint through the Python kernel: the control
-                # aggregate below never reads mods, but Catalyst cannot
-                # column-prune through mapInArrow, so the ctrl pass gets
-                # its own mods-free decode of the same pruned raw slice
-                # (struct gets this for free from parquet column pruning;
-                # pg gets it from Catalyst pruning the mods extraction)
-                from debezium_connector_spanner_spark.sources.proto_wire import (
-                    decode_proto_wire,
-                )
-
-                ctrl_src = decode_proto_wire(
-                    self._active_scan(active, batch_end_us, decode=False).drop(
-                        "_offset_us"
-                    ),
-                    include_mods=False,
-                )
-            ctrl_df = (
-                ctrl_src.groupBy("partition_token")
-                .agg(
-                    F.sum((~is_data).cast("long")).alias("n_ctrl"),
-                    F.sum(is_data.cast("long")).alias("n_data"),
-                    F.max(F.unix_micros("commit_ts")).alias("max_ts_us"),
-                    F.sum((F.col("record_type") == HEARTBEAT).cast("long")).alias("n_hb"),
-                    F.max((F.col("record_type") == PARTITION_END).cast("boolean")).alias("ended"),
-                    F.collect_set(
-                        F.when(
-                            is_data,
-                            F.struct(
-                                F.col("table_name").alias("tbl"),
-                                F.col("column_types").alias("cols"),
-                            ),
-                        )
-                    ).alias("schemas"),
-                    F.collect_list(
-                        F.when(
-                            F.col("record_type") == CHILD_PARTITIONS,
-                            F.struct(
-                                F.col("child_partitions").alias("cps"),
-                                F.unix_micros("commit_ts").alias("start_us"),
-                            ),
-                        )
-                    ).alias("children"),
-                )
-            )
-            # OPTIMISTIC overlap: the control job and the per-table
-            # decode+merge jobs run as concurrent Spark jobs (driver
-            # threads; the scheduler interleaves their tasks). Each merge
-            # decodes with the table's CURRENT schema; if the control pass
-            # then reveals new column_types for a table, that table's
-            # optimistic snapshot is rolled back and re-merged with the
-            # evolved schema — exactly the reference's
-            # cache-invalidate-and-retry (db/metadata/SchemaRegistry.java:
-            # 78-86), paid only on the rare schema-change batch.
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark.sql import Observation
+
+            t_stage = time.monotonic()
+            # --- progress + schema observation, riding the merge scan.
+            # It sits below the D10 filter, the per-table filters and the
+            # DATA_CHANGE filter (Catalyst does not push filters through
+            # CollectMetrics), so it sees every row of the pruned window:
+            # the control rows (heartbeats / child partitions / end
+            # markers, ~2% of records) and the distinct data-row
+            # (table, column_types) pairs. Each merge's first action is a
+            # whole-scan write (assume_all_buckets), so the observation is
+            # complete when the merges return (an empty slice included:
+            # _run turns off AQE's empty-stage pruning). ---
+            is_data = F.col("record_type") == DATA_CHANGE
+            scan_obs = Observation(f"scan-{batch_id}")
+            scan = scan.observe(
+                scan_obs,
+                F.collect_list(
+                    F.when(
+                        ~is_data,
+                        F.struct(
+                            "partition_token",
+                            "record_type",
+                            F.unix_micros("commit_ts").alias("ts_us"),
+                            "child_partitions",
+                        ),
+                    )
+                ).alias("ctrl"),
+                F.collect_set(
+                    F.when(
+                        is_data,
+                        F.struct(
+                            F.col("table_name").alias("tbl"),
+                            F.col("column_types").alias("cols"),
+                        ),
+                    )
+                ).alias("schemas"),
+            )
+            # OPTIMISTIC decode: each per-table merge decodes with the
+            # table's CURRENT schema; if the observation then reveals new
+            # column_types for a table, that table's optimistic snapshot is
+            # rolled back and re-merged with the evolved schema — exactly
+            # the reference's cache-invalidate-and-retry
+            # (db/metadata/SchemaRegistry.java:78-86), paid only on the
+            # rare schema-change batch.
             data_scan = self._data_scan(scan)
             cached = None
             if len(self.tables) > 1:
@@ -967,6 +947,14 @@ class CdcReplayEngine:
                     "mods",
                 ).persist()
                 data_scan = cached
+            merge_tables = [n for n in self.tables if self._table_allowed(n)]
+            if cached is not None or not merge_tables:
+                # one whole-scan action completes the observation: it
+                # builds the shared cache before the concurrent merges read
+                # it (a merge could otherwise finish on a partition another
+                # merge cached but has not yet reported), or, when D10
+                # leaves no table to merge, it is the batch's only read
+                data_scan.write.format("noop").mode("overwrite").save()
             prev_sids = dict(snapshot_ids)
             schemas_used = {n: st.schema for n, st in self.tables.items()}
             # C3 adaptive skew: choose this batch's fold shape per table
@@ -983,13 +971,12 @@ class CdcReplayEngine:
             }
             salted_used = sorted(n for n, v in salted_tables.items() if v)
             attempts: dict[str, tuple] = {}
-            with ThreadPoolExecutor(max_workers=1 + len(self.tables)) as ex:
+            with ThreadPoolExecutor(max_workers=max(1, len(merge_tables))) as ex:
                 def _timed(fn, *a):
                     s0 = time.monotonic()
                     out = fn(*a)
                     return out, round(time.monotonic() - s0, 3)
 
-                ctrl_future = ex.submit(_timed, ctrl_df.collect)
                 merge_futures = {
                     n: ex.submit(
                         _timed,
@@ -1003,26 +990,19 @@ class CdcReplayEngine:
                         salted_tables[n],
                         salt_width,
                     )
-                    for n in self.tables
-                    if self._table_allowed(n)
+                    for n in merge_tables
                 }
                 for n, fut in merge_futures.items():
                     attempts[n], t_merge = fut.result()
                     timings[f"merge_{n}_s"] = t_merge
-                ctrl, timings["ctrl_s"] = ctrl_future.result()
             timings["overlap_s"] = round(time.monotonic() - t_stage, 3)
+            seen = scan_obs.get
 
             # merge observed schemas per table (additive, widening)
             observed: dict[str, set] = {}
-            for r in ctrl:
-                for s in r["schemas"]:
-                    if (
-                        s
-                        and s["tbl"] in self.tables
-                        and s["cols"]
-                        and self._table_allowed(s["tbl"])
-                    ):
-                        observed.setdefault(s["tbl"], set()).add(s["cols"])
+            for s in seen["schemas"]:
+                if s["tbl"] in self.tables and s["cols"] and self._table_allowed(s["tbl"]):
+                    observed.setdefault(s["tbl"], set()).add(s["cols"])
             for name, col_jsons in sorted(observed.items()):
                 st = self.tables[name]
                 for s_json in sorted(col_jsons):
@@ -1065,21 +1045,32 @@ class CdcReplayEngine:
             if cached is not None:
                 cached.unpersist()
 
-            ctrl_by_token = {}
-            for r in ctrl:
-                ctrl_by_token[r["partition_token"]] = r
-                if r["ended"]:
-                    finished.append(r["partition_token"])
-                # O3 dedup: register each child once, whichever parent
-                # announced it (O2 merge-owner collapses under one driver)
-                for c in r["children"]:
-                    for cp in c["cps"]:
-                        tok = cp["token"]
-                        if tok not in self.tokens and tok not in new_children:
-                            new_children[tok] = (
-                                list(cp["parent_partition_tokens"]),
-                                c["start_us"],
-                            )
+            # per-token progress from the control rows. Set semantics for
+            # end markers and child announcements: a duplicated control
+            # row cannot change DAG state.
+            n_ctrl: dict[str, int] = {}
+            n_hb: dict[str, int] = {}
+            ctrl_max_ts: dict[str, int] = {}
+            ended: set[str] = set()
+            announced: set[tuple] = set()
+            for r in seen["ctrl"]:
+                tok, rt = r["partition_token"], r["record_type"]
+                n_ctrl[tok] = n_ctrl.get(tok, 0) + 1
+                n_hb[tok] = n_hb.get(tok, 0) + (rt == HEARTBEAT)
+                ctrl_max_ts[tok] = max(ctrl_max_ts.get(tok, 0), r["ts_us"])
+                if rt == PARTITION_END:
+                    ended.add(tok)
+                elif rt == CHILD_PARTITIONS:
+                    for cp in r["child_partitions"]:
+                        announced.add(
+                            (r["ts_us"], cp["token"], tuple(cp["parent_partition_tokens"]))
+                        )
+            finished = sorted(ended)
+            # O3 dedup: register each child once, whichever parent
+            # announced it (O2 merge-owner collapses under one driver)
+            for start_us, tok, parents in sorted(announced):
+                if tok not in self.tokens and tok not in new_children:
+                    new_children[tok] = (list(parents), start_us)
 
             # --- harvest the data-pass observations (per-token lineage
             # rode along with the merge jobs; no extra Spark job) ---
@@ -1167,25 +1158,23 @@ class CdcReplayEngine:
                             timings["compact_submitted"] = 1.0
 
             for tok in active:
-                r = ctrl_by_token.get(tok)
-                n_ctrl = r["n_ctrl"] if r else 0
+                n_c = n_ctrl.get(tok, 0)
                 n_d = data_counts.get(tok, 0)
-                if n_ctrl or n_d:
-                    max_ts = max(
-                        (r["max_ts_us"] if r else 0) or 0, data_max_ts.get(tok, 0) or 0
-                    )
+                if n_c or n_d:
                     lineage.append(
                         {
                             "token": tok,
-                            "events": n_ctrl + n_d,
+                            "events": n_c + n_d,
                             "data": n_d,
-                            "heartbeats": r["n_hb"] if r else 0,
-                            "max_ts_us": max_ts,
+                            "heartbeats": n_hb.get(tok, 0),
+                            "max_ts_us": max(
+                                ctrl_max_ts.get(tok, 0), data_max_ts.get(tok, 0)
+                            ),
                         }
                     )
             # global counters stay exact even past the per-token
             # observation cap (lineage is then control-rows-only)
-            events = sum(r["n_ctrl"] for r in ctrl) + mods
+            events = sum(n_ctrl.values()) + mods
 
         # O7/O8 liveness: flag active partitions with no progress
         progressed = {ln["token"] for ln in lineage}
@@ -1343,7 +1332,7 @@ class CdcReplayEngine:
         from pyspark.sql import Observation
 
         table = self.tables[name].table
-        decoded = decode_mods(scan, schema, use_pandas_udf=self.use_pandas_udf_decode)
+        decoded = decode_mods(scan, schema)
         obs = Observation(f"batch-{batch_id}-{name}-a{attempt}")
         is_rec = F.col("mod_number") == 0  # 1 per record, not per mod
         obs_aggs = [
@@ -1442,10 +1431,7 @@ class CdcReplayEngine:
             windows, "w_lo long, w_hi long, w_stamp long"
         )
         ev = self._events_df().where(F.col("table_name") == name)
-        decoded = decode_mods(
-            ev, self.tables[name].schema, use_pandas_udf=self.use_pandas_udf_decode,
-            include_old=True,
-        )
+        decoded = decode_mods(ev, self.tables[name].schema, include_old=True)
         ts = F.unix_micros("commit_ts")
         joined = decoded.join(
             F.broadcast(wdf), (ts > F.col("w_lo")) & (ts <= F.col("w_hi")), "left"

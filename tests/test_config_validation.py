@@ -169,6 +169,25 @@ def test_engine_constructor_raises_with_full_list(spark, tmp_root):
     assert isinstance(ei.value, ValueError)  # back-compat exception type
 
 
+def test_empty_wire_log_keeps_session_split_size(spark, tmp_root):
+    """An existing but empty log dir passes validation; the scan split
+    size is then left to the session default instead of being derived
+    from zero bytes."""
+    fx = os.path.join(tmp_root, "fx-empty")
+    os.makedirs(os.path.join(fx, "events"))
+    eng = CdcReplayEngine(
+        spark,
+        fx,
+        os.path.join(tmp_root, "t"),
+        os.path.join(tmp_root, "c"),
+        start_us=EPOCH_MICROS,
+        end_us=EPOCH_MICROS + 1_000_000,
+        initial_schema=REPOS_SCHEMA_V1,
+        n_buckets=2,
+    )
+    assert eng._scan_split_bytes is None
+
+
 def test_driver_window_covers_all_pipeline_queries():
     """The driver's correctness gate checks only the FIRST 50 queries()
     entries (r4 blemish: 18 pipeline ops registered past the window).

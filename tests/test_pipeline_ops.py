@@ -211,30 +211,6 @@ def test_real_media_kernels_decode_and_extract(spark):
     assert np.allclose(out[3]["features"], _stub_features(junk))
 
 
-def test_pandas_udf_decode_matches_native(spark, tmp_root):
-    """The Arrow pandas-UDF decode path (dynamic-schema fallback) must
-    agree with the from_json fast path."""
-    from debezium_connector_spanner_spark.fixtures.generator import (
-        GeneratorConfig,
-        write_fixture,
-    )
-    from debezium_connector_spanner_spark.operators.decode import decode_mods
-    from debezium_connector_spanner_spark.sources.event_schema import (
-        EVENT_LOG_SCHEMA,
-        REPOS_SCHEMA_V1,
-    )
-
-    fx = os.path.join(tmp_root, "fx")
-    write_fixture(fx, GeneratorConfig(n_repos=4, paths_per_repo=3))
-    ev = spark.read.schema(EVENT_LOG_SCHEMA).parquet(os.path.join(fx, "events"))
-    a = decode_mods(ev, REPOS_SCHEMA_V1, use_pandas_udf=False, include_old=True)
-    b = decode_mods(ev, REPOS_SCHEMA_V1, use_pandas_udf=True, include_old=True)
-    cols = ["repo", "path", "op", "seq", "vals", "olds"]
-    ra = sorted(map(str, a.select(cols).collect()))
-    rb = sorted(map(str, b.select(cols).collect()))
-    assert ra == rb
-
-
 def test_cow_mode_matches_mor(spark, tmp_root):
     """Copy-on-write and merge-on-read sinks must produce identical final
     state."""

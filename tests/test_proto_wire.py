@@ -240,6 +240,40 @@ def test_proto_replay_matches_oracle(spark, tmp_root):
     pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
 
 
+def test_proto_replay_decodes_once_per_batch(spark, tmp_root, monkeypatch):
+    """Each batch's pruned slice goes through the Python decode kernel
+    exactly once: the progress observation rides the merge's decoded
+    scan instead of a second, mods-free decode."""
+    from debezium_connector_spanner_spark.sources import proto_wire
+
+    fx = _fixture(tmp_root)
+    eng = CdcReplayEngine(
+        spark,
+        fx,
+        os.path.join(tmp_root, "t"),
+        os.path.join(tmp_root, "c"),
+        start_us=EPOCH_MICROS,
+        end_us=EPOCH_MICROS + CFG.duration_s * 1_000_000,
+        n_batches=3,
+        initial_schema=REPOS_SCHEMA_V1,
+        base_df=spark.read.parquet(os.path.join(fx, "base_repos.parquet")),
+        n_buckets=4,
+        wire_format="proto",
+    )
+    eng._events_df()  # the whole-log view for envelope_stream, built once
+    calls = []
+
+    def counting(log, **kw):
+        calls.append(1)
+        return decode_proto_wire(log, **kw)
+
+    monkeypatch.setattr(proto_wire, "decode_proto_wire", counting)
+    eng.run()
+    scanned = [m for m in eng.metrics() if m["active_tokens"]]
+    assert len(scanned) >= 3
+    assert len(calls) == len(scanned)
+
+
 def test_lifecycle_records_surface_without_changing_replay(spark, tmp_root):
     """A proto log containing PartitionStartRecord / PartitionEventRecord
     rows replays to the identical final state (the DAG gate keys on
@@ -443,39 +477,3 @@ def test_vectorized_decode_edge_records(spark):
     assert d["mods"][0]["old_values"] is not None
     # empty pruned slice through the kernel
     assert decode_proto_wire(log.where("commit_ts < timestamp'1970-01-02'")).count() == 0
-
-
-def test_light_decode_skips_mods_matches_otherwise(spark, tmp_root):
-    """include_mods=False (the ctrl-pass projection hint) must match the
-    full decode on every column except mods, which becomes empty lists
-    for data records (null for control records, as always)."""
-    fx = _fixture(tmp_root)
-    log = spark.read.schema(PROTO_LOG_SCHEMA).parquet(
-        os.path.join(fx, "events_proto")
-    )
-    cols = [f.name for f in EVENT_LOG_SCHEMA.fields if f.name != "mods"]
-    sort_keys = ["partition_token", "commit_ts", "record_sequence", "record_type"]
-
-    def norm(df):
-        pdf = df.select(
-            *[
-                F.to_json(F.col(c)).alias(c) if c == "child_partitions" else F.col(c)
-                for c in cols
-            ]
-        ).toPandas()
-        return pdf.sort_values(sort_keys, na_position="first").reset_index(drop=True)
-
-    full = decode_proto_wire(log)
-    light = decode_proto_wire(log, include_mods=False)
-    pd.testing.assert_frame_equal(norm(light), norm(full))
-    # data rows: empty (not null) mods; control rows: null mods
-    agg = light.groupBy(
-        (F.col("record_type") == "data_change").alias("is_data")
-    ).agg(
-        F.sum(F.col("mods").isNull().cast("long")).alias("nulls"),
-        F.sum(F.size("mods")).alias("total_mods"),
-    )
-    rows = {r["is_data"]: r for r in agg.collect()}
-    assert rows[True]["nulls"] == 0 and rows[True]["total_mods"] == 0
-    # control rows keep NULL mods -> size() is null -> sum over them null
-    assert rows[False]["nulls"] > 0 and rows[False]["total_mods"] is None

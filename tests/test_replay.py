@@ -118,6 +118,30 @@ def test_resume_discards_uncheckpointed_snapshot(spark, tmp_root):
     _assert_matches_oracle(eng2, fx)
 
 
+def test_include_filter_matching_no_table_still_progresses(spark, tmp_root):
+    """D10 leaves no configured table to merge: no merge consumes the
+    batch scan, yet the progress observation must still see every
+    control row — offsets advance, every partition finishes, and the
+    table keeps its base state."""
+    fx = os.path.join(tmp_root, "fx")
+    write_fixture(fx, CFG)
+    eng = _mk_engine(spark, fx, tmp_root, table_include="^no_such_table$")
+    rules = "spark.sql.adaptive.optimizer.excludedRules"
+    before = spark.conf.get(rules, None)
+    totals = eng.run()
+    assert spark.conf.get(rules, None) == before  # scoped to the replay's jobs
+    assert eng.frontier_us == eng.end_us
+    assert eng.tokens and all(s.state == "FINISHED" for s in eng.tokens.values())
+    ev = spark.read.parquet(os.path.join(fx, "events"))
+    assert totals["events"] == ev.where("record_type != 'data_change'").count()
+    assert totals["mods"] == 0
+    base = spark.read.parquet(os.path.join(fx, "base_repos.parquet"))
+    cols = base.columns
+    got = eng.final_state().select(cols).toPandas().sort_values(["repo", "path"])
+    want = base.toPandas().sort_values(["repo", "path"])
+    pd.testing.assert_frame_equal(got.reset_index(drop=True), want.reset_index(drop=True))
+
+
 def test_watermark_monotone(spark, tmp_root):
     fx = os.path.join(tmp_root, "fx")
     write_fixture(fx, CFG)
