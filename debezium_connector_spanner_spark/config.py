@@ -13,8 +13,8 @@ The reference validates Kafka-Connect properties (connection JSON,
 heartbeat interval bounds, capture mode, start/end instants, table
 regexes, change-stream existence); the Spark engine's analogues are the
 constructor parameters validated here (log path + wire-format stream
-presence, replay window, fold/sink/GC/scaler knobs, table filters,
-checkpoint-resume compatibility).
+presence, replay window, fold/sink/sizing knobs, table filters,
+checkpoint-resume compatibility), all declared once in ``EngineConfig``.
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ END_AFTER_START_MSG = "End time must be after start time"
 WIRE_FORMATS = ("struct", "pg_json", "proto")
 WIRE_LOG_DIR = {"struct": "events", "pg_json": "events_pg", "proto": "events_proto"}
 SINK_MODES = ("mor", "cow")
-COMPACT_MODES = ("async", "sync")
 SKEW_MODES = ("adaptive", "fused", "salted")
 STUCK_POLICIES = ("metric", "requery", "fail")
 
@@ -80,154 +79,158 @@ def _regex(errors, field, value):
         errors.append(ConfigError(field, value, f"not a valid regex: {e}"))
 
 
-def validate_engine_config(
-    *,
-    events_path: str,
-    checkpoint_dir: str,
-    start_us,
-    end_us,
-    n_batches,
-    n_buckets,
-    wire_format: str,
-    sink_mode: str,
-    compact_mode: str,
-    compact_every,
-    skew_mode: str,
-    skew_threshold,
-    stuck_policy: str,
-    table_include,
-    table_exclude,
-    max_events_per_batch,
-    gc_every,
-    gc_keep,
-    grow_bucket_bytes,
-    scaler_min,
-    scaler_max,
-    desired_tokens_per_task,
-    events_per_task_target,
-    token_inlist_max,
-    tables: dict | None,
-    checkpoint: dict | None,
-) -> list[ConfigError]:
-    """Every rule, every violation; [] means the config is valid.
+@dataclass(frozen=True)
+class EngineConfig:
+    """Every ``CdcReplayEngine`` option, declared once: name, default and
+    the reason it exists. ``validate`` holds every rule."""
 
-    ``checkpoint`` is the latest persisted engine state if the
-    checkpoint_dir already holds one (resume), else None (fresh start).
-    """
-    errors: list[ConfigError] = []
+    events_path: str
+    table_root: str
+    checkpoint_dir: str
+    start_us: int
+    end_us: int
+    # fixed replay windows over [start_us, end_us] (K3 sizing may split
+    # them further, see max_events_per_batch)
+    n_batches: int = 8
+    # key-hash buckets of each new sink table (grow_bucket_bytes may
+    # double them later)
+    n_buckets: int = 16
+    # 'mor' appends folded delta files and compacts them in the
+    # maintenance lane; 'cow' rewrites touched buckets per batch. Each is
+    # the other's check in the tests.
+    sink_mode: str = "mor"
+    # 'adaptive': per batch per table, pick the fused single-shuffle fold
+    # unless the previous batch OBSERVED a hot key (one key holding >=
+    # engine.SKEW_THRESHOLD of the records), in which case the two-phase
+    # salted fold runs. 'fused' / 'salted' pin the strategy; 'fused' is
+    # the tests' reference fold. Reference parity: dynamic load
+    # rebalancing, task/leader/rebalancer/TaskPartitionEqualSharingRebalancer.java:40-80.
+    skew_mode: str = "adaptive"
+    # D10 table routing regexes (config/SpannerTableFilter.java:23-38);
+    # include wins over exclude
+    table_include: str | None = None
+    table_exclude: str | None = None
+    # K3 batch sizing: windows sized from a checkpointed events/µs rate
+    # model so batch cost stays bounded as the input grows. None = the
+    # fixed n_batches windows.
+    max_events_per_batch: int | None = None
+    # O7/O8 action on a stuck partition: 'metric' records only,
+    # 'requery' re-scans the window, 'fail' raises (the reference's
+    # watchdog escalation)
+    stuck_policy: str = "metric"
+    # D1/D2 wire shape: 'struct' (canonical columnar log), 'pg_json'
+    # (PostgreSQL-dialect one-JSON-document-per-record log under
+    # events_pg/, decoded via sources/pg_json.py), or 'proto'
+    # (serialized proto3 records under events_proto/, decoded via
+    # sources/proto_wire.py). Everything past the wire decode is
+    # format-independent.
+    wire_format: str = "struct"
+    # auto-bucket scaling: after a compaction, if avg base bytes per
+    # bucket exceeds this, double n_buckets via the metadata-only
+    # grow_buckets renumbering (sources/lake.py). None = fixed count.
+    # On a cluster target ~256-512MB; tests use tiny values.
+    grow_bucket_bytes: int | None = None
 
-    # --- paths / stream existence (ConnectionValidator +
-    # ChangeStreamValidator: the stream must exist before streaming) ---
-    if not events_path:
-        errors.append(ConfigError("events_path", events_path, FIELD_NOT_SPECIFIED_MSG))
-    elif not os.path.isdir(events_path):
-        errors.append(ConfigError("events_path", events_path, PATH_FIELD_INCORRECT_MSG))
-    if not checkpoint_dir:
-        errors.append(
-            ConfigError("checkpoint_dir", checkpoint_dir, FIELD_NOT_SPECIFIED_MSG)
-        )
+    def validate(self, tables: dict | None, checkpoint: dict | None) -> list[ConfigError]:
+        """Every rule, every violation; [] means the config is valid.
 
-    _enum(errors, "wire_format", wire_format, WIRE_FORMATS)
-    if (
-        events_path
-        and os.path.isdir(events_path)
-        and wire_format in WIRE_LOG_DIR
-        and not os.path.isdir(os.path.join(events_path, WIRE_LOG_DIR[wire_format]))
-    ):
-        errors.append(
-            ConfigError(
-                "events_path",
-                events_path,
-                f"no '{WIRE_LOG_DIR[wire_format]}/' log for "
-                f"wire_format={wire_format!r} (change stream does not exist)",
+        ``tables`` is the engine's table map (None/empty on a resume that
+        takes its schemas from the checkpoint); ``checkpoint`` is the
+        latest persisted engine state if the checkpoint_dir already holds
+        one (resume), else None (fresh start).
+        """
+        errors: list[ConfigError] = []
+
+        # --- paths / stream existence (ConnectionValidator +
+        # ChangeStreamValidator: the stream must exist before streaming) ---
+        ev = self.events_path
+        if not ev:
+            errors.append(ConfigError("events_path", ev, FIELD_NOT_SPECIFIED_MSG))
+        elif not os.path.isdir(ev):
+            errors.append(ConfigError("events_path", ev, PATH_FIELD_INCORRECT_MSG))
+        if not self.checkpoint_dir:
+            errors.append(
+                ConfigError("checkpoint_dir", self.checkpoint_dir, FIELD_NOT_SPECIFIED_MSG)
             )
-        )
 
-    # --- replay window (StartEndTimeValidator.java:44) ---
-    for f, v in (("start_us", start_us), ("end_us", end_us)):
-        if not isinstance(v, int) or isinstance(v, bool):
-            errors.append(ConfigError(f, v, "must be an integer epoch-microseconds"))
-        elif v < 0:
-            errors.append(ConfigError(f, v, "must be >= 0 (pre-1970 not supported)"))
-    if (
-        isinstance(start_us, int)
-        and isinstance(end_us, int)
-        and end_us <= start_us
-    ):
-        errors.append(ConfigError("end_us", end_us, END_AFTER_START_MSG))
-
-    # --- enums ---
-    _enum(errors, "sink_mode", sink_mode, SINK_MODES)
-    _enum(errors, "compact_mode", compact_mode, COMPACT_MODES)
-    _enum(errors, "skew_mode", skew_mode, SKEW_MODES)
-    _enum(errors, "stuck_policy", stuck_policy, STUCK_POLICIES)
-
-    # --- numeric bounds ---
-    _at_least(errors, "n_batches", n_batches, 1)
-    _at_least(errors, "n_buckets", n_buckets, 1)
-    _at_least(errors, "compact_every", compact_every, 1)
-    _at_least(errors, "max_events_per_batch", max_events_per_batch, 1, allow_none=True)
-    _at_least(errors, "gc_every", gc_every, 1)
-    # gc_keep >= 2: the resume target (latest durable checkpoint) must
-    # survive a crash with the newest checkpoint write still in flight
-    _at_least(errors, "gc_keep", gc_keep, 2)
-    _at_least(errors, "grow_bucket_bytes", grow_bucket_bytes, 1, allow_none=True)
-    _at_least(errors, "scaler_min", scaler_min, 1)
-    _at_least(errors, "scaler_max", scaler_max, 1, allow_none=True)
-    if (
-        isinstance(scaler_min, int)
-        and isinstance(scaler_max, int)
-        and scaler_max < scaler_min
-    ):
-        errors.append(
-            ConfigError("scaler_max", scaler_max, "must be >= scaler_min")
-        )
-    _at_least(errors, "desired_tokens_per_task", desired_tokens_per_task, 1)
-    _at_least(errors, "events_per_task_target", events_per_task_target, 1)
-    _at_least(errors, "token_inlist_max", token_inlist_max, 0)
-    if not isinstance(skew_threshold, (int, float)) or not (0 < skew_threshold <= 1):
-        errors.append(
-            ConfigError("skew_threshold", skew_threshold, "must be in (0, 1]")
-        )
-
-    # --- table filters (SpannerTableFilter regex config) ---
-    _regex(errors, "table_include", table_include)
-    _regex(errors, "table_exclude", table_exclude)
-
-    # --- fresh vs resume ---
-    if checkpoint is None:
-        if not tables:
+        wire = self.wire_format
+        _enum(errors, "wire_format", wire, WIRE_FORMATS)
+        if (
+            ev
+            and os.path.isdir(ev)
+            and wire in WIRE_LOG_DIR
+            and not os.path.isdir(os.path.join(ev, WIRE_LOG_DIR[wire]))
+        ):
             errors.append(
                 ConfigError(
-                    "tables",
-                    tables,
-                    "initial_schema or tables required for a fresh engine",
+                    "events_path",
+                    ev,
+                    f"no '{WIRE_LOG_DIR[wire]}/' log for "
+                    f"wire_format={wire!r} (change stream does not exist)",
                 )
             )
-    else:
-        # checkpoint-dir compatibility: resuming under a different wire
-        # dialect would replay different byte logs against committed
-        # offsets; refuse up front (older checkpoints lack the field)
-        ck_wire = checkpoint.get("wire_format")
-        if ck_wire is not None and ck_wire != wire_format:
-            errors.append(
-                ConfigError(
-                    "wire_format",
-                    wire_format,
-                    f"checkpoint at {checkpoint_dir!r} was written with "
-                    f"wire_format={ck_wire!r}",
-                )
-            )
-        if tables:
-            ck_tables = set(checkpoint.get("tables", {}))
-            extra = sorted(set(tables) - ck_tables)
-            if extra:
+
+        # --- replay window (StartEndTimeValidator.java:44) ---
+        start_us, end_us = self.start_us, self.end_us
+        for f, v in (("start_us", start_us), ("end_us", end_us)):
+            if not isinstance(v, int) or isinstance(v, bool):
+                errors.append(ConfigError(f, v, "must be an integer epoch-microseconds"))
+            elif v < 0:
+                errors.append(ConfigError(f, v, "must be >= 0 (pre-1970 not supported)"))
+        if isinstance(start_us, int) and isinstance(end_us, int) and end_us <= start_us:
+            errors.append(ConfigError("end_us", end_us, END_AFTER_START_MSG))
+
+        # --- enums ---
+        _enum(errors, "sink_mode", self.sink_mode, SINK_MODES)
+        _enum(errors, "skew_mode", self.skew_mode, SKEW_MODES)
+        _enum(errors, "stuck_policy", self.stuck_policy, STUCK_POLICIES)
+
+        # --- numeric bounds ---
+        _at_least(errors, "n_batches", self.n_batches, 1)
+        _at_least(errors, "n_buckets", self.n_buckets, 1)
+        _at_least(
+            errors, "max_events_per_batch", self.max_events_per_batch, 1, allow_none=True
+        )
+        _at_least(errors, "grow_bucket_bytes", self.grow_bucket_bytes, 1, allow_none=True)
+
+        # --- table filters (SpannerTableFilter regex config) ---
+        _regex(errors, "table_include", self.table_include)
+        _regex(errors, "table_exclude", self.table_exclude)
+
+        # --- fresh vs resume ---
+        if checkpoint is None:
+            if not tables:
                 errors.append(
                     ConfigError(
                         "tables",
-                        extra,
-                        "not present in the resumed checkpoint "
-                        f"(checkpointed tables: {sorted(ck_tables)})",
+                        tables,
+                        "initial_schema or tables required for a fresh engine",
                     )
                 )
-    return errors
+        else:
+            # checkpoint-dir compatibility: resuming under a different wire
+            # dialect would replay different byte logs against committed
+            # offsets; refuse up front (older checkpoints lack the field)
+            ck_wire = checkpoint.get("wire_format")
+            if ck_wire is not None and ck_wire != wire:
+                errors.append(
+                    ConfigError(
+                        "wire_format",
+                        wire,
+                        f"checkpoint at {self.checkpoint_dir!r} was written with "
+                        f"wire_format={ck_wire!r}",
+                    )
+                )
+            if tables:
+                ck_tables = set(checkpoint.get("tables", {}))
+                extra = sorted(set(tables) - ck_tables)
+                if extra:
+                    errors.append(
+                        ConfigError(
+                            "tables",
+                            extra,
+                            "not present in the resumed checkpoint "
+                            f"(checkpointed tables: {sorted(ck_tables)})",
+                        )
+                    )
+        return errors

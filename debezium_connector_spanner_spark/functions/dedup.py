@@ -59,6 +59,11 @@ def shingled(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     )
 
 
+def _check_threshold(threshold: float) -> None:
+    if not 0 < threshold <= 1:
+        raise ValueError(f"jaccard threshold must be in (0, 1], got {threshold!r}")
+
+
 def jaccard_pairs_exact(
     df: DataFrame,
     id_col: str,
@@ -73,7 +78,9 @@ def jaccard_pairs_exact(
     count common shingles per pair, then |A∩B| / (|A|+|B|-|A∩B|).
     ``max_df`` drops ubiquitous shingles before the join (bounds the
     worst-case pair fan-out at corpus scale; disabled for oracle parity).
+    ``threshold`` must lie in (0, 1].
     """
+    _check_threshold(threshold)
     s = shingled(df, id_col, text_col, n)
     inv = s.select("doc_id", "set_size", F.explode("shingles").alias("sh"))
     if max_df is not None:
@@ -122,7 +129,15 @@ def minhash_lsh_pairs(
     self-join on (band, bhash)); candidates are then verified with exact
     shingle Jaccard so false positives vanish. At j>=0.8 with 32 bands x
     4 rows the false-negative probability is ~(1-j^4)^32 < 1e-7.
+    ``threshold`` must lie in (0, 1]: at 0 a candidate pair sharing no
+    shingle would pass verification with jaccard 0.
+
+    Local-mode assumption: the shingle table is ``localCheckpoint()``ed,
+    which truncates its lineage and is never unpersisted. The blocks live
+    only on the executors that computed them, so on a cluster an executor
+    loss fails the job instead of recomputing the table.
     """
+    _check_threshold(threshold)
     rows = num_hashes // bands
     # materialize the shingle table ONCE: three consumers below (the
     # signature pass and both sides of the verify join) would otherwise
@@ -289,9 +304,12 @@ def connected_components(
     must TRUNCATE lineage per round — the label frame feeds two places
     per round, so without truncation the logical plan doubles every
     iteration (measured: planning alone OOMs the driver by round ~8).
-    On a multi-executor cluster prefer a reliable checkpoint dir
-    (sparkContext.setCheckpointDir + .checkpoint()) so executor loss
-    can't drop a round. At 100 TB the edge list is the LSH candidate
+
+    Local-mode assumption: ``localCheckpoint()`` truncates lineage and
+    its blocks are never unpersisted, so on a cluster an executor loss
+    fails the job (no lineage to recompute a lost round). On a
+    multi-executor cluster use a reliable checkpoint dir
+    (sparkContext.setCheckpointDir + .checkpoint()) instead. At 100 TB the edge list is the LSH candidate
     output — orders of magnitude smaller than the corpus — and both
     joins hash-partition on node id.
     """
@@ -372,7 +390,12 @@ def connected_components_star(
     nothing); labels then read directly off the edges. Per round: one
     min aggregate, one co-partitioned join, one distinct — all
     hash-partitioned on node id — with per-round localCheckpoint()
-    lineage truncation, exactly like the label-propagation loop."""
+    lineage truncation, exactly like the label-propagation loop.
+
+    Local-mode assumption, as in connected_components: the
+    ``localCheckpoint()`` blocks (input pairs, nodes, every round's
+    edges) are never unpersisted and carry no lineage, so on a cluster
+    an executor loss fails the job."""
     # materialize the raw pair list ONCE (pairs may be an expensive
     # upstream frame); nodes and edges below re-scan only this checkpoint
     e_dir = pairs.select(

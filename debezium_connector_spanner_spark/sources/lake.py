@@ -5,8 +5,10 @@ lake-table semantics the CDC sink needs, with the same scale properties:
 
 - **Atomic snapshot commits**: data files are written under unique
   snapshot dirs; a snapshot manifest (JSON) lists files per key-bucket;
-  the CURRENT pointer is flipped with an atomic ``os.replace``. A crashed
-  writer leaves orphan files that are never referenced (exactly-once).
+  the manifest and then the CURRENT pointer are each written with
+  ``atomic_write`` (temp file, fsync, ``os.replace``, directory fsync). A
+  crashed writer leaves orphan files that are never referenced
+  (exactly-once).
 - **Bucketed copy-on-write MERGE**: rows are hash-bucketed on the primary
   key. A batch only rewrites the buckets it touches; untouched buckets'
   file lists are carried forward by reference. At 100 TB this is the
@@ -78,6 +80,31 @@ def _entry(e) -> tuple:
     return tuple(e[:6])
 
 
+def atomic_write(path: str, data: str) -> None:
+    """Durably replace ``path`` with ``data``: write a temp file beside it,
+    fsync it, rename it over ``path``, then fsync the directory so the
+    rename itself survives a power loss. A crash leaves the old file or
+    the new one, never a torn one; the temp name (dot-prefixed) matches
+    no metadata pattern, so a leftover is inert."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    dfd = os.open(d or ".", os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Stable key->bucket hash. xxhash64 is deterministic across sessions
     and executors; NUL separator avoids ('ab','c') vs ('a','bc') collisions."""
@@ -125,10 +152,7 @@ class LakeTable:
             del self._snap_cache[min(self._snap_cache)]
 
     def _set_current(self, sid: int) -> None:
-        tmp = os.path.join(self._meta_dir, f".CURRENT.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp, os.path.join(self._meta_dir, "CURRENT"))
+        atomic_write(os.path.join(self._meta_dir, "CURRENT"), str(sid))
 
     def rollback(self, sid: int) -> None:
         """Point CURRENT at an older committed snapshot (resume path)."""
@@ -169,8 +193,7 @@ class LakeTable:
                 str(b): [[p, 0, 0, "base", 0] for p in ps] for b, ps in files.items()
             }
             snap["summary"]["rows_written"] = initial_df.count()
-        with open(t._snap_path(0), "w") as f:
-            json.dump(snap, f)
+        atomic_write(t._snap_path(0), json.dumps(snap))
         t._set_current(0)
         return t
 
@@ -229,19 +252,21 @@ class LakeTable:
             schemas[str(schema_id)] = schema.json()
         return prev, new_id, schema, schema_id, schemas
 
-    def _finish_snapshot(self, prev, new_id, schema_id, schemas, buckets, summary):
+    def _finish_snapshot(
+        self, prev, new_id, schema_id, schemas, buckets, summary, n_buckets=None
+    ):
+        """Commit: the snapshot file is durable before CURRENT names it."""
         snap = {
             "id": new_id,
             "parent": prev["id"],
             "key_cols": prev["key_cols"],
-            "n_buckets": prev["n_buckets"],
+            "n_buckets": prev["n_buckets"] if n_buckets is None else n_buckets,
             "schema_id": schema_id,
             "schemas": schemas,
             "buckets": buckets,
             "summary": summary or {},
         }
-        with open(self._snap_path(new_id), "w") as f:
-            json.dump(snap, f)
+        atomic_write(self._snap_path(new_id), json.dumps(snap))
         self._cache_snap(new_id, snap)
         self._set_current(new_id)
         return new_id
@@ -316,29 +341,14 @@ class LakeTable:
             depth = max(depth, sum(1 for e in fs if _entry(e)[3] == "delta"))
         return depth
 
-    def compact(self, schema: T.StructType | None = None, summary: dict | None = None) -> int:
-        """Fold base+deltas and rewrite every delta-bearing bucket as base
-        files (selective: delta-free buckets are carried by reference)."""
-        snap = self.snapshot()
-        dirty = [
-            int(b)
-            for b, fs in snap["buckets"].items()
-            if any(_entry(e)[3] == "delta" for e in fs)
-        ]
-        if not dirty:
-            return snap["id"]
-        folded = self.read(buckets=dirty)
-        prev, new_id, schema, schema_id, schemas = self._next_snapshot(schema)
-        new_files = self._write_data_files(
-            folded, schema, prev["key_cols"], prev["n_buckets"], new_id
-        )
-        buckets = {b: fs for b, fs in prev["buckets"].items() if int(b) not in set(dirty)}
-        for b in dirty:
-            buckets[str(b)] = [[p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])]
-        s = dict(summary or {})
-        s["op"] = "compact"
-        s["buckets_compacted"] = len(dirty)
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, s)
+    def compact(self, summary: dict | None = None) -> int:
+        """Synchronous compaction: prepare against the current snapshot
+        and apply it at once. Returns the current snapshot id when no
+        bucket holds a delta."""
+        prep = self.compact_prepare()
+        if prep is None:
+            return self.current_snapshot_id()
+        return self.compact_apply(prep, summary)
 
     def compact_prepare(self, sid: int | None = None) -> dict | None:
         """Phase 1 of ASYNC compaction (the maintenance-lane shape real
@@ -498,21 +508,9 @@ class LakeTable:
         s = dict(summary or {})
         s["op"] = "grow_buckets"
         s["n_buckets_from"], s["n_buckets_to"] = old_n, new_n
-        snap = {
-            "id": new_id,
-            "parent": prev["id"],
-            "key_cols": prev["key_cols"],
-            "n_buckets": new_n,
-            "schema_id": schema_id,
-            "schemas": schemas,
-            "buckets": buckets,
-            "summary": s,
-        }
-        with open(self._snap_path(new_id), "w") as f:
-            json.dump(snap, f)
-        self._cache_snap(new_id, snap)
-        self._set_current(new_id)
-        return new_id
+        return self._finish_snapshot(
+            prev, new_id, schema_id, schemas, buckets, s, n_buckets=new_n
+        )
 
     def base_bytes(self) -> int:
         """Physical bytes across unique referenced base files."""

@@ -31,8 +31,9 @@ machine. Per batch (reference parity in parentheses, files under
 5. **Watermark** (O9, task/LowWatermarkCalculator.java:47-169):
    min over non-finished partitions of coalesce(offset, start_ts).
 6. **Commit**: all table snapshots committed FIRST, then the checkpoint
-   (offsets, DAG state, per-table schema version + snapshot id) via atomic
-   rename. On resume, any snapshot newer than the checkpoint is rolled
+   (offsets, DAG state, per-table schema version + snapshot id), each
+   metadata file via ``atomic_write`` (temp file, fsync, rename, directory
+   fsync). On resume, any snapshot newer than the checkpoint is rolled
    back -> exactly-once (replaces FinishingPartitionManager.java:55-114).
 7. **Schema registry** (db/metadata/SchemaRegistry.java:78-179,
    SchemaMerger.java:24-53): distinct (table, column_types) observed in
@@ -42,6 +43,14 @@ machine. Per batch (reference parity in parentheses, files under
    from a checkpointed events/µs rate model (probe-count bisection only on
    cold start) — batch cost stays bounded as the input grows 100x instead
    of scaling linearly with fixed n_batches, at zero steady-state probes.
+9. **Maintenance**: a MOR table whose delta depth reaches COMPACT_EVERY is
+   compacted in one background maintenance lane (prepare beside later
+   batches, rebase-commit in the loop); every GC_EVERY batches, snapshots
+   and checkpoints older than the last GC_KEEP expire.
+
+Every caller-facing option is declared once, with its default and reason,
+in ``config.EngineConfig``; tuning numbers no caller sets are the module
+constants below.
 """
 
 from __future__ import annotations
@@ -49,13 +58,16 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from debezium_connector_spanner_spark.config import (
+    WIRE_LOG_DIR,
+    ConfigValidationError,
+    EngineConfig,
+)
 from debezium_connector_spanner_spark.operators.decode import decode_mods, table_filter
 from debezium_connector_spanner_spark.operators.merge import (
     CDC_TS_COL,
@@ -70,12 +82,52 @@ from debezium_connector_spanner_spark.sources.event_schema import (
     PARTITION_END,
     TableSchema,
 )
-from debezium_connector_spanner_spark.sources.lake import LakeTable
+from debezium_connector_spanner_spark.sources.lake import LakeTable, atomic_write
 from debezium_connector_spanner_spark.streaming.task_scaler import TaskScaler
 
 CREATED, READY, FINISHED = "CREATED", "READY", "FINISHED"
 # states mirror kafka/internal/model/PartitionStateEnum.java:8-21 collapsed
 # to the three that matter without a remote thread pool
+
+# Tuning constants. No caller sets them; tests that need small values
+# monkeypatch them on this module.
+# MOR compaction: once a table's delta depth reaches COMPACT_EVERY, the
+# maintenance lane folds it back into base files (bounds read-time depth).
+COMPACT_EVERY = 6
+# metadata GC (O13 for FILES): every GC_EVERY batches, expire table
+# snapshots + engine checkpoints older than the last GC_KEEP committed
+# ones and remove data files only they referenced (incl. rollback
+# orphans + pre-compaction deltas). GC_KEEP >= 2 guarantees the resume
+# target always survives a crash with the newest checkpoint write still
+# in flight.
+GC_EVERY = 8
+GC_KEEP = 4
+# adaptive skew: salt the fold when the previous batch's hottest key held
+# at least this share of a table's mods. The measured crossover
+# (BENCH_SCALING.md skew table: salted wins at ~79% on one key, loses at
+# ~49%) sits around 2/3.
+SKEW_THRESHOLD = 0.6
+# C5 task auto-scaler (task/scaler/TaskScaleCalculator.java:20-47):
+# per-batch worker-width grant for variable-width work — the salt spread
+# of the hot-key fold. Grows +20%/step while active work units per worker
+# > DESIRED_TOKENS_PER_TASK, halves when >50% idle, bounded
+# [SCALER_MIN, defaultParallelism] (a salt spread past the core count
+# only adds combine work).
+SCALER_MIN = 2
+DESIRED_TOKENS_PER_TASK = 2
+# one "partition of work" is EITHER a live change-stream token or
+# EVENTS_PER_TASK_TARGET predicted change events (K3 rate model): the
+# reference's task unit is a streamed partition, but a Spark reducer's
+# unit is rows — a 3-token mega-key batch still needs a wide grant. 64k
+# events/worker keeps task granularity ~100ms.
+EVENTS_PER_TASK_TARGET = 65536
+# S1 scan pruning: above this many active tokens the literal IN-list
+# predicate is skipped and token filtering rides the (already present)
+# broadcast offsets equi-join — dynamic partition pruning then prunes
+# token dirs at runtime instead of plan time. Literal IN-lists are faster
+# to plan and prune statically at Spanner-scale token counts (hundreds)
+# but blow up expression-tree size/analysis time at 10^5+ tokens.
+TOKEN_INLIST_MAX = 4096
 
 
 @dataclass
@@ -127,109 +179,40 @@ class CdcReplayEngine:
         checkpoint_dir: str,
         start_us: int,
         end_us: int,
-        n_batches: int = 8,
+        *,
         initial_schema: TableSchema | None = None,
         base_df: DataFrame | None = None,
         tables: dict[str, tuple[TableSchema, DataFrame | None]] | None = None,
-        n_buckets: int = 16,
-        sink_mode: str = "mor",
-        compact_every: int = 6,
-        compact_mode: str = "async",  # 'async' (maintenance lane) | 'sync'
-        # 'adaptive' (default): per batch per table, pick the fused
-        # single-shuffle fold unless the previous batch OBSERVED a hot key
-        # (one key-hash cell holding >= skew_threshold of the records), in
-        # which case the two-phase salted fold runs — the measured
-        # crossover (BENCH_SCALING.md skew table: salted wins at ~79% on
-        # one key, loses at ~49%) sits around 2/3. 'fused' / 'salted'
-        # pin the strategy. Reference parity: dynamic load rebalancing,
-        # task/leader/rebalancer/TaskPartitionEqualSharingRebalancer.java:40-80.
-        skew_mode: str = "adaptive",
-        skew_threshold: float = 0.6,
-        table_include: str | None = None,
-        table_exclude: str | None = None,
-        max_events_per_batch: int | None = None,
-        stuck_policy: str = "metric",  # 'metric' | 'requery' | 'fail'
-        # metadata GC (O13 for FILES): every gc_every batches, expire
-        # table snapshots + engine checkpoints older than the last
-        # gc_keep committed ones and remove data files only they
-        # referenced (incl. rollback orphans + pre-compaction deltas).
-        # gc_keep >= 2 guarantees the resume target always survives a
-        # crash with the newest checkpoint write still in flight.
-        gc_every: int = 8,
-        gc_keep: int = 4,
-        # D1/D2 wire shape: 'struct' (canonical columnar log), 'pg_json'
-        # (PostgreSQL-dialect one-JSON-document-per-record log under
-        # events_pg/, decoded via sources/pg_json.py), or 'proto'
-        # (serialized proto3 records under events_proto/, decoded via
-        # sources/proto_wire.py). Everything past the wire decode is
-        # format-independent.
-        wire_format: str = "struct",
-        # auto-bucket scaling: after a compaction, if avg base bytes per
-        # bucket exceeds this, double n_buckets via the metadata-only
-        # grow_buckets renumbering (sources/lake.py). None = fixed count.
-        # On a cluster target ~256-512MB; tests use tiny values.
-        grow_bucket_bytes: int | None = None,
-        # C5 task auto-scaler (task/scaler/TaskScaleCalculator.java:20-47):
-        # per-batch worker-width grant for variable-width work — the salt
-        # spread of the hot-key fold. Grows +20%/step while active
-        # tokens per worker > desired, halves when >50% idle, bounded
-        # [scaler_min, scaler_max]. scaler_max=None -> defaultParallelism
-        # (a salt spread past the core count only adds combine work).
-        scaler_min: int = 2,
-        scaler_max: int | None = None,
-        desired_tokens_per_task: int = 2,
-        # one "partition of work" is EITHER a live change-stream token or
-        # events_per_task_target predicted change events (K3 rate model):
-        # the reference's task unit is a streamed partition, but a Spark
-        # reducer's unit is rows — a 3-token mega-key batch still needs a
-        # wide grant. 64k events/worker keeps task granularity ~100ms.
-        events_per_task_target: int = 65536,
-        # S1 scan pruning: above this many active tokens the literal
-        # IN-list predicate is skipped and token filtering rides the
-        # (already present) broadcast offsets equi-join — dynamic
-        # partition pruning then prunes token dirs at runtime instead of
-        # plan time. Literal IN-lists are faster to plan and prune
-        # statically at Spanner-scale token counts (hundreds) but blow up
-        # expression-tree size/analysis time at 10^5+ tokens.
-        token_inlist_max: int = 4096,
+        **options,
     ):
+        """``options`` are the remaining ``EngineConfig`` fields (see
+        config.py for each one's default and reason). ``initial_schema`` +
+        ``base_df`` is the single-table shorthand for
+        ``tables={schema.table: (schema, base_df)}``."""
         self.spark = spark
-        self.events_path = events_path
-        self.table_root = table_root
-        self.checkpoint_dir = checkpoint_dir
-        self.sink_mode = sink_mode
-        self.compact_every = compact_every
-        self.compact_mode = compact_mode
+        self.cfg = EngineConfig(
+            events_path, table_root, checkpoint_dir, start_us, end_us, **options
+        )
         # async-compaction maintenance lane: one background driver thread
         # runs compact_prepare's Spark job; the commit stays in the loop.
-        # Created lazily (only mor+async uses it) and shut down at the end
-        # of run() so no non-daemon thread outlives the engine.
+        # Created lazily (only mor uses it) and shut down at the end of
+        # run() so no non-daemon thread outlives the engine.
         self._maint_pool = None
         self._compact_futures: dict[str, object] = {}
         # serial checkpoint writer: the JSON dump + renames happen off the
         # batch loop; single worker preserves write order, run() joins it
         self._ckpt_pool = None
         self._ckpt_future = None
-        self.skew_mode = skew_mode
-        self.skew_threshold = skew_threshold
         # adaptive-skew state: per-table hottest-key share of the LAST
         # batch's mods (drives this batch's fused-vs-salted choice,
         # one-batch reaction lag like the reference's rebalancer). Derived
         # from the fold's own _n_mods output (post-aggregation rows), not
         # a per-raw-row histogram — zero cost on the 4M-row decode path.
         self._hot_share: dict[str, float] = {}
-        self.table_include = table_include
-        self.table_exclude = table_exclude
-        self.max_events_per_batch = max_events_per_batch
-        self.gc_every = gc_every
-        self.gc_keep = max(2, gc_keep)
-        self.wire_format = wire_format
-        self.grow_bucket_bytes = grow_bucket_bytes
-        self.token_inlist_max = token_inlist_max
         # O7/O8 stuck-partition watchdog (PartitionQueryingMonitor.java:33-120,
         # FinishPartitionWatchDog): an active partition that emits nothing
         # (no data, no heartbeat) for max_stale_batches consecutive batches
-        # is flagged; the ACTION follows stuck_policy —
+        # is flagged; the ACTION follows cfg.stuck_policy —
         #   'metric'  record only (default);
         #   'requery' hold the token's offset so the next batch re-scans
         #             the same window (the reference's re-query), then
@@ -238,23 +221,16 @@ class CdcReplayEngine:
         #   'fail'    raise after 2x the threshold (the reference's
         #             watchdog escalation).
         self.max_stale_batches = 3
-        self.stuck_policy = stuck_policy
         self._stale_counts: dict[str, int] = {}
         # K3 sizing rate model: EMA of observed change events per µs of
         # window, checkpointed so a resumed engine keeps its calibration
         self._rate_ev_per_us: float | None = None
         self._scaler = TaskScaler(
-            tasks_min=scaler_min,
-            tasks_max=(
-                scaler_max
-                if scaler_max is not None
-                else spark.sparkContext.defaultParallelism
-            ),
-            desired_partitions_per_task=desired_tokens_per_task,
-            current=scaler_min,
+            tasks_min=SCALER_MIN,
+            tasks_max=spark.sparkContext.defaultParallelism,
+            desired_partitions_per_task=DESIRED_TOKENS_PER_TASK,
+            current=SCALER_MIN,
         )
-        self.events_per_task_target = events_per_task_target
-        os.makedirs(checkpoint_dir, exist_ok=True)
 
         # normalize the single-table legacy shape to the multi-table one
         if tables is None:
@@ -267,45 +243,14 @@ class CdcReplayEngine:
         # collected-errors validation BEFORE any side effect (table
         # create / checkpoint write): every violation reported at once
         # (config/validation/ConfigurationValidator.java:33-59)
-        from debezium_connector_spanner_spark.config import (
-            WIRE_LOG_DIR,
-            ConfigValidationError,
-            validate_engine_config,
-        )
-
-        cfg_errors = validate_engine_config(
-            events_path=events_path,
-            checkpoint_dir=checkpoint_dir,
-            start_us=start_us,
-            end_us=end_us,
-            n_batches=n_batches,
-            n_buckets=n_buckets,
-            wire_format=wire_format,
-            sink_mode=sink_mode,
-            compact_mode=compact_mode,
-            compact_every=compact_every,
-            skew_mode=skew_mode,
-            skew_threshold=skew_threshold,
-            stuck_policy=stuck_policy,
-            table_include=table_include,
-            table_exclude=table_exclude,
-            max_events_per_batch=max_events_per_batch,
-            gc_every=gc_every,
-            gc_keep=gc_keep,
-            grow_bucket_bytes=grow_bucket_bytes,
-            scaler_min=scaler_min,
-            scaler_max=scaler_max,
-            desired_tokens_per_task=desired_tokens_per_task,
-            events_per_task_target=events_per_task_target,
-            token_inlist_max=token_inlist_max,
-            tables=tables,
-            checkpoint=ckpt,
-        )
+        cfg_errors = self.cfg.validate(tables, ckpt)
         if cfg_errors:
             raise ConfigValidationError(cfg_errors)
+        os.makedirs(checkpoint_dir, exist_ok=True)
         if ckpt is None:
             self._primary = next(iter(tables))
-            self.start_us, self.end_us, self.n_batches = start_us, end_us, n_batches
+            self.start_us, self.end_us = start_us, end_us
+            self.n_batches = self.cfg.n_batches
             self.batch_id = -1
             self.frontier_us = start_us
             self.tokens: dict[str, TokenState] = {
@@ -322,7 +267,7 @@ class CdcReplayEngine:
                         self._table_path(name),
                         schema.spark_struct(),
                         schema.key_columns,
-                        n_buckets=n_buckets,
+                        n_buckets=self.cfg.n_buckets,
                         initial_df=bdf,
                         overwrite=False,
                     ),
@@ -365,7 +310,7 @@ class CdcReplayEngine:
         from debezium_connector_spanner_spark.streaming.meter import EngineMeter
 
         self.meter = EngineMeter()
-        self.meter.event_queue_total_capacity = self.max_events_per_batch
+        self.meter.event_queue_total_capacity = self.cfg.max_events_per_batch
         # Scale-adaptive scan split size (guide §2.2/§6.1): a fixed split
         # size cannot serve both ends — a batch window scans ~log_bytes/
         # n_batches, and the split size should put ~4 task waves on the
@@ -379,7 +324,7 @@ class CdcReplayEngine:
         # it for the replay's jobs and close() restores the session
         # default. Validation guarantees the log dir exists; an empty log
         # keeps the session default.
-        ev_dir = os.path.join(self.events_path, WIRE_LOG_DIR[self.wire_format])
+        ev_dir = os.path.join(self.cfg.events_path, WIRE_LOG_DIR[self.cfg.wire_format])
         total = sum(
             os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(ev_dir) for f in fs
         )
@@ -397,9 +342,9 @@ class CdcReplayEngine:
         # the primary (first-configured) table keeps the legacy flat layout
         # (the table IS table_root); additional tables nest under it
         return (
-            self.table_root
+            self.cfg.table_root
             if name == self._primary
-            else os.path.join(self.table_root, f"table={name}")
+            else os.path.join(self.cfg.table_root, f"table={name}")
         )
 
     # ------------------------------------------------------------- ckpt
@@ -407,17 +352,18 @@ class CdcReplayEngine:
         return {n: st.table.current_snapshot_id() for n, st in self.tables.items()}
 
     def _ckpt_path(self, batch_id: int) -> str:
-        return os.path.join(self.checkpoint_dir, f"ckpt-{batch_id + 1:06d}.json")
+        return os.path.join(self.cfg.checkpoint_dir, f"ckpt-{batch_id + 1:06d}.json")
 
     def _load_latest_checkpoint(self) -> dict | None:
-        """Newest READABLE checkpoint. A crash can leave the file LATEST
-        points at truncated/corrupt (atomic rename without fsync); the
-        fallback walks ckpt-*.json newest-first and resumes from the
-        most recent parseable state — that is precisely what gc_keep >= 2
-        preserves. Resuming one batch earlier is exactly-once-safe: the
-        constructor rolls each table back to the checkpointed snapshot
-        and the skipped batch re-applies idempotently."""
-        latest = os.path.join(self.checkpoint_dir, "LATEST")
+        """Newest READABLE checkpoint. Checkpoints are written with
+        atomic_write (temp file, fsync, rename, directory fsync), but a
+        file can still be truncated or corrupted on disk; the fallback
+        walks ckpt-*.json newest-first and resumes from the most recent
+        parseable state — that is precisely what GC_KEEP >= 2 preserves.
+        Resuming one batch earlier is exactly-once-safe: the constructor
+        rolls each table back to the checkpointed snapshot and the
+        skipped batch re-applies idempotently."""
+        latest = os.path.join(self.cfg.checkpoint_dir, "LATEST")
         if not os.path.exists(latest):
             return None
         candidates: list[str] = []
@@ -429,7 +375,7 @@ class CdcReplayEngine:
         candidates += sorted(
             (
                 n
-                for n in os.listdir(self.checkpoint_dir)
+                for n in os.listdir(self.cfg.checkpoint_dir)
                 if n.startswith("ckpt-") and n.endswith(".json")
             ),
             reverse=True,  # zero-padded batch ids: lexicographic == numeric
@@ -442,7 +388,7 @@ class CdcReplayEngine:
             seen.add(name)
             tried += 1
             try:
-                with open(os.path.join(self.checkpoint_dir, name)) as f:
+                with open(os.path.join(self.cfg.checkpoint_dir, name)) as f:
                     return json.load(f)
             except (OSError, json.JSONDecodeError):
                 continue  # truncated/missing: fall back to the previous one
@@ -450,7 +396,7 @@ class CdcReplayEngine:
             # checkpoints existed but none parsed: refusing to silently
             # restart from scratch over committed table state
             raise RuntimeError(
-                f"all {tried} checkpoint file(s) in {self.checkpoint_dir!r} "
+                f"all {tried} checkpoint file(s) in {self.cfg.checkpoint_dir!r} "
                 "are unreadable; refusing to re-bootstrap over existing state"
             )
         return None
@@ -495,10 +441,10 @@ class CdcReplayEngine:
                     self.spark.conf.set(key, value)
             self._prev_confs = None
 
-    def _checkpoint(self, snapshot_ids: dict[str, int], sync: bool = False) -> None:
+    def _checkpoint(self, snapshot_ids: dict[str, int]) -> None:
         state = {
             "batch_id": self.batch_id,
-            "wire_format": self.wire_format,
+            "wire_format": self.cfg.wire_format,
             "start_us": self.start_us,
             "end_us": self.end_us,
             "n_batches": self.n_batches,
@@ -537,36 +483,17 @@ class CdcReplayEngine:
         # caller can construct a resumed engine the file is durable.
         if self._ckpt_future is not None:
             self._ckpt_future.result()  # keep ordering + surface errors
-        if sync:
-            self._ckpt_future = None
-            self._write_checkpoint(state, path)
-        else:
-            self._ckpt_future = self._pool("_ckpt_pool", "cdc-ckpt").submit(
-                self._write_checkpoint, state, path
-            )
+        self._ckpt_future = self._pool("_ckpt_pool", "cdc-ckpt").submit(
+            self._write_checkpoint, state, path
+        )
 
     def _write_checkpoint(self, state: dict, path: str) -> None:
-        # fsync file THEN dir on both writes: rename-without-fsync can
-        # surface a zero-length file after power loss (the corruption
-        # fallback in _load_latest_checkpoint would still recover, but
-        # closing the window is cheap and keeps LATEST authoritative)
-        tmp = path + "." + uuid.uuid4().hex
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-        tmp2 = os.path.join(self.checkpoint_dir, ".LATEST.tmp")
-        with open(tmp2, "w") as f:
-            f.write(os.path.basename(path))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp2, os.path.join(self.checkpoint_dir, "LATEST"))
-        dfd = os.open(self.checkpoint_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)  # make both renames durable
-        finally:
-            os.close(dfd)
+        # the checkpoint is durable before LATEST names it, so LATEST
+        # never points at a file a power loss could surface empty
+        atomic_write(path, json.dumps(state))
+        atomic_write(
+            os.path.join(self.cfg.checkpoint_dir, "LATEST"), os.path.basename(path)
+        )
 
     # ------------------------------------------------------------- plan
     def _boundaries(self) -> list[int]:
@@ -593,13 +520,13 @@ class CdcReplayEngine:
 
     def _work_units(self, active: list[str], batch_end_us: int) -> int:
         """C5 scaler input: partitions of work this batch — live tokens,
-        or predicted-event chunks of ``events_per_task_target`` (K3 rate
+        or predicted-event chunks of ``EVENTS_PER_TASK_TARGET`` (K3 rate
         model) when volume demands more workers than the token count
         implies (a 3-token mega-key batch still needs a wide grant)."""
         units = len(active)
         if self._rate_ev_per_us:
             predicted = self._rate_ev_per_us * max(0, batch_end_us - self.frontier_us)
-            units = max(units, -(-int(predicted) // self.events_per_task_target))
+            units = max(units, -(-int(predicted) // EVENTS_PER_TASK_TARGET))
         return units
 
     def _probe_count(self, active: list[str], batch_end_us: int) -> int:
@@ -619,14 +546,14 @@ class CdcReplayEngine:
         self-correcting within a batch if the rate drifts. Only the cold
         start (no rate yet) pays count-probe bisection — and only until
         the first non-empty batch calibrates the model."""
-        if self.max_events_per_batch is None or not active:
+        if self.cfg.max_events_per_batch is None or not active:
             return target_end_us
         lo = self.frontier_us
         hi = target_end_us
         if self._rate_ev_per_us:
-            est_span = int(self.max_events_per_batch / self._rate_ev_per_us)
+            est_span = int(self.cfg.max_events_per_batch / self._rate_ev_per_us)
             return min(hi, max(lo + 1, lo + est_span))
-        while hi - lo > 1 and self._probe_count(active, hi) > self.max_events_per_batch:
+        while hi - lo > 1 and self._probe_count(active, hi) > self.cfg.max_events_per_batch:
             hi = lo + (hi - lo) // 2
         return hi
 
@@ -735,7 +662,7 @@ class CdcReplayEngine:
                 EVENT_LOG_SCHEMA,
             )
 
-            if self.wire_format == "pg_json":
+            if self.cfg.wire_format == "pg_json":
                 from debezium_connector_spanner_spark.sources.pg_json import (
                     PG_LOG_SCHEMA,
                     decode_pg_json,
@@ -745,10 +672,10 @@ class CdcReplayEngine:
                 # stats push through the projection; the Variant decode
                 # runs post-filter on the pruned slice only
                 log = self.spark.read.schema(PG_LOG_SCHEMA).parquet(
-                    os.path.join(self.events_path, "events_pg")
+                    os.path.join(self.cfg.events_path, "events_pg")
                 )
                 self._events_cached = decode_pg_json(log)
-            elif self.wire_format == "proto":
+            elif self.cfg.wire_format == "proto":
                 from debezium_connector_spanner_spark.sources.proto_wire import (
                     PROTO_LOG_SCHEMA,
                     decode_proto_wire,
@@ -762,12 +689,12 @@ class CdcReplayEngine:
                 # whole-log consumers (envelope_stream).
                 self._proto_log_cached = self.spark.read.schema(
                     PROTO_LOG_SCHEMA
-                ).parquet(os.path.join(self.events_path, "events_proto"))
+                ).parquet(os.path.join(self.cfg.events_path, "events_proto"))
                 self._events_cached = decode_proto_wire(self._proto_log_cached)
             else:
                 # pin the schema: no per-batch footer/partition inference
                 self._events_cached = self.spark.read.schema(EVENT_LOG_SCHEMA).parquet(
-                    os.path.join(self.events_path, "events")
+                    os.path.join(self.cfg.events_path, "events")
                 )
         return self._events_cached
 
@@ -793,7 +720,7 @@ class CdcReplayEngine:
         )
         # Token filter: a literal IN-list prunes token dirs at PLAN time
         # and is the fast path for Spanner-scale token counts (hundreds).
-        # Past token_inlist_max the literal list itself becomes the cost
+        # Past TOKEN_INLIST_MAX the literal list itself becomes the cost
         # (expression-tree size, analysis time), so filtering instead
         # rides the broadcast offsets equi-join below — correctness is
         # identical (inner join on partition_token keeps exactly the
@@ -805,14 +732,14 @@ class CdcReplayEngine:
         # through it, and every batch would Python-decode the full log.
         decoder = None
         ev = self._events_df()
-        if self.wire_format == "proto":
+        if self.cfg.wire_format == "proto":
             from debezium_connector_spanner_spark.sources.proto_wire import (
                 decode_proto_wire,
             )
 
             ev = self._proto_log_cached
             decoder = decode_proto_wire
-        if len(active) <= self.token_inlist_max:
+        if len(active) <= TOKEN_INLIST_MAX:
             ev = ev.where(F.col("partition_token").isin(active))
         ev = ev.where(
             (F.col("commit_ts") > F.timestamp_micros(F.lit(lo_us)))
@@ -828,17 +755,17 @@ class CdcReplayEngine:
         """D10: include/exclude table routing applied before dispatch
         (config/SpannerTableFilter.java:23-38)."""
         return table_filter(
-            scan, include_regex=self.table_include, exclude_regex=self.table_exclude
+            scan, include_regex=self.cfg.table_include, exclude_regex=self.cfg.table_exclude
         )
 
     def _table_allowed(self, name: str) -> bool:
         """Driver-side mirror of the D10 regex filter (include wins)."""
         import re
 
-        if self.table_include:
-            return re.search(self.table_include, name) is not None
-        if self.table_exclude:
-            return re.search(self.table_exclude, name) is None
+        if self.cfg.table_include:
+            return re.search(self.cfg.table_include, name) is not None
+        if self.cfg.table_exclude:
+            return re.search(self.cfg.table_exclude, name) is None
         return True
 
     def _run_batch(self, batch_id: int, batch_end_us: int) -> dict:
@@ -961,10 +888,10 @@ class CdcReplayEngine:
             # from the key-hash histogram the PREVIOUS batch observed
             salted_tables = {
                 n: (
-                    self.skew_mode == "salted"
+                    self.cfg.skew_mode == "salted"
                     or (
-                        self.skew_mode == "adaptive"
-                        and self._hot_share.get(n, 0.0) >= self.skew_threshold
+                        self.cfg.skew_mode == "adaptive"
+                        and self._hot_share.get(n, 0.0) >= SKEW_THRESHOLD
                     )
                 )
                 for n in self.tables
@@ -1104,16 +1031,15 @@ class CdcReplayEngine:
                     max(0.0, (batch_end_us - max(data_max_ts.values())) / 1e6)
                 )
             # MOR compaction: bound read-time delta depth; amortizes the
-            # rewrite across compact_every batches (O13-adjacent state
-            # bounding for the data files themselves). Default is the
-            # maintenance-lane shape (compact_mode='async'): the fold +
-            # file write runs as a concurrent Spark job in a driver
-            # maintenance thread against an immutable snapshot, and only
-            # the metadata rebase-commit happens here in the (single-
-            # threaded) batch loop — the ingest path never stalls on a
-            # table rewrite, exactly like Iceberg rewrite_data_files /
-            # Delta OPTIMIZE running beside the stream.
-            if self.sink_mode == "mor":
+            # rewrite across COMPACT_EVERY batches (O13-adjacent state
+            # bounding for the data files themselves). Maintenance-lane
+            # shape: the fold + file write runs as a concurrent Spark job
+            # in a driver maintenance thread against an immutable
+            # snapshot, and only the metadata rebase-commit happens here
+            # in the (single-threaded) batch loop — the ingest path never
+            # stalls on a table rewrite, exactly like Iceberg
+            # rewrite_data_files / Delta OPTIMIZE running beside the stream.
+            if self.cfg.sink_mode == "mor":
                 for name, st in self.tables.items():
                     fut = self._compact_futures.get(name)
                     if fut is not None and fut.done():
@@ -1130,32 +1056,15 @@ class CdcReplayEngine:
                             grown = self._maybe_grow(st, batch_id)
                             if grown is not None:
                                 snapshot_ids[name] = grown
-                    elif (
-                        fut is None
-                        and st.table.delta_depth() >= self.compact_every
-                    ):
-                        if self.compact_mode == "sync":
-                            t_stage = time.monotonic()
-                            # schema=None: compaction keeps the snapshot
-                            # schema (incl. the __cdc_ts lineage column)
-                            snapshot_ids[name] = st.table.compact(
-                                summary={"batch_id": batch_id}
-                            )
-                            timings["compact_s"] = round(
-                                time.monotonic() - t_stage, 3
-                            )
-                            grown = self._maybe_grow(st, batch_id)
-                            if grown is not None:
-                                snapshot_ids[name] = grown
-                        else:
-                            self._compact_futures[name] = (
-                                self._pool("_maint_pool", "cdc-maint").submit(
-                                    self._maint_compact_prepare,
-                                    st.table,
-                                    st.table.current_snapshot_id(),
-                                )
-                            )
-                            timings["compact_submitted"] = 1.0
+                    elif fut is None and st.table.delta_depth() >= COMPACT_EVERY:
+                        self._compact_futures[name] = self._pool(
+                            "_maint_pool", "cdc-maint"
+                        ).submit(
+                            self._maint_compact_prepare,
+                            st.table,
+                            st.table.current_snapshot_id(),
+                        )
+                        timings["compact_submitted"] = 1.0
 
             for tok in active:
                 n_c = n_ctrl.get(tok, 0)
@@ -1191,7 +1100,7 @@ class CdcReplayEngine:
         # watchdog actions (O7/O8)
         requeried: list[str] = []
         self.meter.stuck_heartbeat_intervals += len(stuck)
-        if stuck and self.stuck_policy == "fail":
+        if stuck and self.cfg.stuck_policy == "fail":
             over = [t for t in stuck if self._stale_counts[t] >= 2 * self.max_stale_batches]
             if over:
                 self.meter.on_error()
@@ -1204,7 +1113,7 @@ class CdcReplayEngine:
             self.tokens[tok] = TokenState(tok, parents, start_us, CREATED, None)
         for t in active:
             if (
-                self.stuck_policy == "requery"
+                self.cfg.stuck_policy == "requery"
                 and t in stuck
                 and self._stale_counts.get(t, 0) < 2 * self.max_stale_batches
             ):
@@ -1236,7 +1145,7 @@ class CdcReplayEngine:
         self._observe_rate(events, self.frontier_us, batch_end_us)
         self.frontier_us = max(self.frontier_us, batch_end_us)
         self._checkpoint(snapshot_ids)
-        if self.gc_every and batch_id > 0 and batch_id % self.gc_every == 0:
+        if batch_id > 0 and batch_id % GC_EVERY == 0:
             t_stage = time.monotonic()
             self._gc_metadata(snapshot_ids)
             timings["gc_s"] = round(time.monotonic() - t_stage, 3)
@@ -1246,9 +1155,9 @@ class CdcReplayEngine:
         self.meter.requeried_tokens_total += len(requeried)
         if self.meter.schema_retries_total and "schema_retry_s" in timings:
             self.meter.on_error()  # retried attempt counts as one error
-        if self.max_events_per_batch is not None:
+        if self.cfg.max_events_per_batch is not None:
             self.meter.event_queue_remaining_capacity = max(
-                0, self.max_events_per_batch - events
+                0, self.cfg.max_events_per_batch - events
             )
         self.meter.maintenance_queue_remaining_capacity = len(self.tables) - len(
             self._compact_futures
@@ -1287,27 +1196,27 @@ class CdcReplayEngine:
     def _maybe_grow(self, st: TableState, batch_id: int) -> int | None:
         """Auto-bucket scaling check, run right after a compaction (the
         moment base sizes are authoritative)."""
-        if self.grow_bucket_bytes is None:
+        if self.cfg.grow_bucket_bytes is None:
             return None
         t = st.table
-        if t.base_bytes() / t.n_buckets() <= self.grow_bucket_bytes:
+        if t.base_bytes() / t.n_buckets() <= self.cfg.grow_bucket_bytes:
             return None
         return t.grow_buckets(2, summary={"batch_id": batch_id})
 
     def _gc_metadata(self, snapshot_ids: dict[str, int]) -> None:
-        """Bound engine checkpoints + table snapshots/files (see gc_every).
-        Deletes only state strictly older than the gc_keep horizon below
+        """Bound engine checkpoints + table snapshots/files (see GC_EVERY).
+        Deletes only state strictly older than the GC_KEEP horizon below
         the just-committed ids, so resume (rollback to the latest DURABLE
         checkpoint) is always satisfiable."""
         names = sorted(
             n
-            for n in os.listdir(self.checkpoint_dir)
+            for n in os.listdir(self.cfg.checkpoint_dir)
             if n.startswith("ckpt-") and n.endswith(".json")
         )
-        for n in names[: -self.gc_keep]:
-            os.remove(os.path.join(self.checkpoint_dir, n))
+        for n in names[: -GC_KEEP]:
+            os.remove(os.path.join(self.cfg.checkpoint_dir, n))
         for name, st in self.tables.items():
-            floor = snapshot_ids.get(name, 0) - self.gc_keep
+            floor = snapshot_ids.get(name, 0) - GC_KEEP
             if floor > 0:
                 st.table.expire_snapshots(floor)
 
@@ -1372,7 +1281,7 @@ class CdcReplayEngine:
         # hottest single key's fraction of the batch's mods, read straight
         # from the fold's own _n_mods aggregate — no per-raw-row work.
         fold_obs = None
-        if self.skew_mode == "adaptive":
+        if self.cfg.skew_mode == "adaptive":
             fold_obs = Observation(f"fold-{batch_id}-{name}-a{attempt}")
             folded = folded.observe(
                 fold_obs,
@@ -1384,7 +1293,7 @@ class CdcReplayEngine:
             folded,
             target_schema=schema.spark_struct(),
             summary={"batch_id": batch_id, "attempt": attempt, "table": name},
-            mode=self.sink_mode,
+            mode=self.cfg.sink_mode,
             # statistically every bucket is hit by a sizable batch — skip
             # the probe job (empty buckets add no files)
             assume_all_buckets=True,

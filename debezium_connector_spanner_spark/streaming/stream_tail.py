@@ -33,6 +33,10 @@ from debezium_connector_spanner_spark.sources.event_schema import (
 )
 from debezium_connector_spanner_spark.sources.lake import LakeTable
 
+# MOR compaction cadence of the tail (no caller sets it): compact once a
+# table's delta depth reaches this
+COMPACT_EVERY = 4
+
 
 def stream_events_into_table(
     spark: SparkSession,
@@ -42,7 +46,6 @@ def stream_events_into_table(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     sink_mode: str = "mor",
-    compact_every: int = 4,
     wire_format: str = "struct",
 ):
     """Run an availableNow streaming pass applying the log to the table.
@@ -94,7 +97,7 @@ def stream_events_into_table(
             mode=sink_mode,
             assume_all_buckets=True,
         )
-        if sink_mode == "mor" and table.delta_depth() >= compact_every:
+        if sink_mode == "mor" and table.delta_depth() >= COMPACT_EVERY:
             table.compact(summary={"stream_batch_id": batch_id})
 
     q = (

@@ -14,7 +14,7 @@ import pytest
 from debezium_connector_spanner_spark.config import (
     END_AFTER_START_MSG,
     ConfigValidationError,
-    validate_engine_config,
+    EngineConfig,
 )
 from debezium_connector_spanner_spark.fixtures.generator import (
     EPOCH_MICROS,
@@ -28,32 +28,14 @@ CFG = GeneratorConfig(n_repos=4, paths_per_repo=2, hot_repos=1, events_per_key_m
 
 VALID = dict(
     events_path=None,  # filled per test with a real fixture dir
+    table_root="/tmp/t",
     checkpoint_dir="/tmp/ck",
     start_us=EPOCH_MICROS,
     end_us=EPOCH_MICROS + 1_000_000,
     n_batches=4,
     n_buckets=8,
-    wire_format="struct",
-    sink_mode="mor",
-    compact_mode="async",
-    compact_every=6,
-    skew_mode="adaptive",
-    skew_threshold=0.6,
-    stuck_policy="metric",
-    table_include=None,
-    table_exclude=None,
-    max_events_per_batch=None,
-    gc_every=8,
-    gc_keep=4,
-    grow_bucket_bytes=None,
-    scaler_min=2,
-    scaler_max=None,
-    desired_tokens_per_task=2,
-    events_per_task_target=65536,
-    token_inlist_max=4096,
-    tables={"repos": (REPOS_SCHEMA_V1, None)},
-    checkpoint=None,
 )
+TABLES = {"repos": (REPOS_SCHEMA_V1, None)}
 
 
 def _fixture(tmp_root):
@@ -62,10 +44,10 @@ def _fixture(tmp_root):
     return fx
 
 
-def _errs(fx, **overrides):
+def _errs(fx, tables=TABLES, checkpoint=None, **overrides):
     params = dict(VALID, events_path=fx)
     params.update(overrides)
-    return validate_engine_config(**params)
+    return EngineConfig(**params).validate(tables, checkpoint)
 
 
 def test_valid_config_has_no_errors(tmp_root):
@@ -86,8 +68,8 @@ def test_all_violations_collected_at_once(tmp_root):
         _fixture(tmp_root),
         end_us=EPOCH_MICROS,      # not after start
         wire_format="avro",       # unknown dialect
-        skew_threshold=1.5,       # out of (0, 1]
-        gc_keep=1,                # breaks the resume guarantee
+        max_events_per_batch=0,   # below 1
+        sink_mode="x",            # unknown sink
         table_include="[unclosed",  # regex does not compile
         n_buckets=0,
     )
@@ -95,8 +77,8 @@ def test_all_violations_collected_at_once(tmp_root):
     assert {
         "end_us",
         "wire_format",
-        "skew_threshold",
-        "gc_keep",
+        "max_events_per_batch",
+        "sink_mode",
         "table_include",
         "n_buckets",
     } <= fields
@@ -164,8 +146,9 @@ def test_engine_constructor_raises_with_full_list(spark, tmp_root):
         )
     fields = {e.field for e in ei.value.errors}
     assert {"end_us", "n_buckets", "skew_mode"} <= fields
-    # nothing was created before the raise (no side effects)
-    assert not os.path.exists(os.path.join(tmp_root, "c", "LATEST"))
+    # nothing was created before the raise (no side effects), not even
+    # the checkpoint dir
+    assert not os.path.exists(os.path.join(tmp_root, "c"))
     assert isinstance(ei.value, ValueError)  # back-compat exception type
 
 

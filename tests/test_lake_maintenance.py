@@ -27,6 +27,7 @@ from debezium_connector_spanner_spark.sources.event_schema import (
     REPOS_SCHEMA_V1,
 )
 from debezium_connector_spanner_spark.sources.lake import LakeTable
+from debezium_connector_spanner_spark.streaming import engine as engine_mod
 from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
 
 
@@ -98,6 +99,41 @@ def test_compact_apply_guards_newer_base(spark, tmp_root):
     merge_into(t, _folded_batch(spark, 5_000, "e"), target_schema=schema, mode="mor")
     t.compact_apply(prep2)
     assert t.read().collect()[0]["commit"] == "e"
+
+
+def test_failed_snapshot_commit_keeps_previous_state(spark, tmp_root, monkeypatch):
+    """A snapshot commit that dies after writing the manifest's temp file
+    but before renaming it leaves no partial snap-*.json, CURRENT
+    unchanged, and read() at the previous state; the next commit reuses
+    the id cleanly."""
+    root = os.path.join(tmp_root, "tbl")
+    schema = REPOS_SCHEMA_V1.spark_struct()
+    t = LakeTable.create(spark, root, schema, ["repo", "path"], 2)
+    merge_into(t, _folded_batch(spark, 1_000, "a"), target_schema=schema, mode="mor")
+    sid = t.current_snapshot_id()
+    meta = os.path.join(root, "_meta")
+    before = sorted(os.listdir(meta))
+
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if os.path.basename(dst).startswith("snap-"):
+            assert os.path.getsize(src) > 0  # the temp manifest was written
+            raise OSError("simulated crash between temp write and rename")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with pytest.raises(OSError, match="simulated crash"):
+        merge_into(t, _folded_batch(spark, 2_000, "b"), target_schema=schema, mode="mor")
+    monkeypatch.undo()
+
+    assert sorted(os.listdir(meta)) == before  # no partial manifest, no temp
+    fresh = LakeTable(spark, root)
+    assert fresh.current_snapshot_id() == sid
+    assert [r["commit"] for r in fresh.read().collect()] == ["a"]
+    merge_into(fresh, _folded_batch(spark, 2_000, "b"), target_schema=schema, mode="mor")
+    assert fresh.current_snapshot_id() == sid + 1
+    assert [r["commit"] for r in fresh.read().collect()] == ["b"]
 
 
 def test_rate_sized_batches_match_oracle(spark, tmp_root):
@@ -184,13 +220,16 @@ def test_adaptive_skew_auto_selects_salted(spark, tmp_root):
     pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
 
 
-def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root):
+def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root, monkeypatch):
     """O13 for files: snapshots, checkpoints and dead data files must stay
     BOUNDED over a long replay with compaction (no O(batches) metadata
     growth), and resume-from-checkpoint must still be exact after GC."""
     cfg = GeneratorConfig(n_repos=6, paths_per_repo=4, hot_repos=1, events_per_key_mean=6)
     fx = os.path.join(tmp_root, "fx")
     write_fixture(fx, cfg)
+    monkeypatch.setattr(engine_mod, "COMPACT_EVERY", 3)
+    monkeypatch.setattr(engine_mod, "GC_EVERY", 4)
+    monkeypatch.setattr(engine_mod, "GC_KEEP", 3)
 
     def mk():
         tbl = os.path.join(tmp_root, "tbl")
@@ -209,9 +248,6 @@ def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root):
                 else None
             ),
             n_buckets=4,
-            compact_every=3,
-            gc_every=4,
-            gc_keep=3,
         )
 
     eng1 = mk()
@@ -221,7 +257,7 @@ def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root):
 
     meta = os.listdir(os.path.join(tmp_root, "tbl", "_meta"))
     snaps = [f for f in meta if f.startswith("snap-")]
-    # keep horizon (3) + commits since the last gc tick (< gc_every + drain)
+    # keep horizon (3) + commits since the last gc tick (< GC_EVERY + drain)
     assert len(snaps) <= 10, snaps
     ckpts = [f for f in os.listdir(os.path.join(tmp_root, "ckpt")) if f.startswith("ckpt-")]
     assert len(ckpts) <= 10, ckpts
@@ -235,7 +271,7 @@ def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root):
     pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
 
 
-def test_bucket_growth_metadata_only(spark, tmp_root):
+def test_bucket_growth_metadata_only(spark, tmp_root, monkeypatch):
     """Auto-bucket scaling: when avg base bytes/bucket exceeds the target,
     the engine doubles n_buckets via a METADATA-ONLY renumbering (no data
     rewrite); legacy files are filtered by key hash on subset reads, new
@@ -243,6 +279,7 @@ def test_bucket_growth_metadata_only(spark, tmp_root):
     cfg = GeneratorConfig(n_repos=8, paths_per_repo=5, hot_repos=2, events_per_key_mean=5)
     fx = os.path.join(tmp_root, "fx")
     write_fixture(fx, cfg)
+    monkeypatch.setattr(engine_mod, "COMPACT_EVERY", 2)
     eng = CdcReplayEngine(
         spark,
         fx,
@@ -254,8 +291,6 @@ def test_bucket_growth_metadata_only(spark, tmp_root):
         initial_schema=REPOS_SCHEMA_V1,
         base_df=spark.read.parquet(os.path.join(fx, "base_repos.parquet")),
         n_buckets=2,
-        compact_every=2,
-        compact_mode="sync",
         grow_bucket_bytes=1,  # tiny target -> growth triggers immediately
     )
     eng.run()

@@ -28,6 +28,18 @@ def test_minhash_lsh_matches_exact(spark):
     assert lsh == exact and len(exact) > 0
 
 
+@pytest.mark.parametrize("fn", ["jaccard_pairs_exact", "minhash_lsh_pairs"])
+@pytest.mark.parametrize("threshold", [0, 0.0, -0.5, 1.01, float("nan")])
+def test_jaccard_threshold_outside_unit_interval_rejected(fn, threshold):
+    """At threshold <= 0 a candidate pair sharing no shingle would pass with
+    jaccard 0; both pair functions refuse thresholds outside (0, 1]
+    before building any plan."""
+    from debezium_connector_spanner_spark.functions import dedup
+
+    with pytest.raises(ValueError, match=r"\(0, 1\]"):
+        getattr(dedup, fn)(None, "doc_id", "text", threshold=threshold)
+
+
 def _clustered_embeddings(spark, n=2000, n_queries=20, dim=64, n_clusters=20):
     """Clustered synthetic corpus (the realistic embedding shape)."""
     import numpy as np

@@ -24,7 +24,10 @@ from debezium_connector_spanner_spark.fixtures.oracle import (
     read_events,
 )
 from debezium_connector_spanner_spark.sources.event_schema import REPOS_SCHEMA_V1
-from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
+from debezium_connector_spanner_spark.streaming.engine import (
+    SKEW_THRESHOLD,
+    CdcReplayEngine,
+)
 
 
 def _mod_counts_per_key(ev: pd.DataFrame) -> pd.Series:
@@ -101,7 +104,7 @@ def test_hot_share_oracle_flip_rule_and_results(
     # (2) the flip follows the threshold rule with one-batch lag
     assert ms[0]["salted_tables"] == []  # cold start: nothing observed yet
     for prev, cur in zip(ms, ms[1:]):
-        expect_salted = prev["hot_share"].get("repos", 0.0) >= eng.skew_threshold
+        expect_salted = prev["hot_share"].get("repos", 0.0) >= SKEW_THRESHOLD
         assert (cur["salted_tables"] == ["repos"]) == expect_salted, (
             cur["batch_id"],
             prev["hot_share"],

@@ -17,6 +17,7 @@ from debezium_connector_spanner_spark.fixtures.generator import (
     write_fixture,
 )
 from debezium_connector_spanner_spark.sources.event_schema import REPOS_SCHEMA_V1
+from debezium_connector_spanner_spark.streaming import engine as engine_mod
 from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
 from debezium_connector_spanner_spark.streaming.task_scaler import (
     TaskScaler,
@@ -65,7 +66,7 @@ def test_stateful_scaler_derives_idling_from_previous_grant():
     assert s.history == [2, 6, 6, 3, 2]
 
 
-def test_engine_tasks_trace_and_exactness(spark, tmp_root):
+def test_engine_tasks_trace_and_exactness(spark, tmp_root, monkeypatch):
     """Replay with the scaler live on every batch (skew_mode='salted' so
     the grant is exercised in the fold): the tasks trace must rise with
     the token-DAG fan-out, and the final state must equal the plain
@@ -96,13 +97,17 @@ def test_engine_tasks_trace_and_exactness(spark, tmp_root):
 
     # desired=1 token/worker: the fixture DAG (root -> A,B -> A1,A2 ->
     # merge) peaks at ~4 concurrent tokens, enough to force scale-out
-    eng = mk("scaled", "salted", scaler_min=2, scaler_max=8, desired_tokens_per_task=1)
+    monkeypatch.setattr(engine_mod, "DESIRED_TOKENS_PER_TASK", 1)
+    eng = mk("scaled", "salted")
     eng.run()
     with open(eng.metrics_path) as f:
         metrics = [json.loads(line) for line in f]
     tasks = [m["tasks"] for m in metrics]
     toks = [m["active_tokens"] for m in metrics]
-    assert all(2 <= t <= 8 for t in tasks)
+    # bounded [SCALER_MIN, defaultParallelism]
+    tasks_max = spark.sparkContext.defaultParallelism
+    assert eng._scaler.tasks_max == tasks_max
+    assert all(2 <= t <= tasks_max for t in tasks)
     # the fixture DAG splits over the replay: the grant must scale out
     assert max(tasks) > tasks[0]
     # scale-out follows load: widest grant not before the widest DAG batch
@@ -162,8 +167,6 @@ def test_scaler_state_survives_resume(spark, tmp_root):
             initial_schema=REPOS_SCHEMA_V1,
             base_df=base if not os.path.exists(os.path.join(tmp_root, "t")) else None,
             n_buckets=8,
-            scaler_min=2,
-            scaler_max=8,
         )
 
     e1 = mk()
