@@ -22,6 +22,10 @@ lake-table semantics the CDC sink needs, with the same scale properties:
 - **Snapshot rollback** for resume-from-checkpoint: the engine records
   the committed snapshot id in its checkpoint; on restart any newer
   (uncheckpointed) snapshot is discarded.
+- **Cheap, reused merge-on-read plans**: ``read()`` builds its plan from
+  SQL strings, a few hundred JVM calls rather than one per column
+  expression node, and launches no Spark job; the plan is reused while
+  its snapshot's manifest stays cached (see ``read()``).
 
 Parity notes: replaces the reference's Kafka sink + Connect offset
 storage (processor/SpannerEventDispatcher.java:45-87,
@@ -33,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +47,14 @@ from pyspark.sql import types as T
 BUCKET_COL = "__bucket"
 CDC_TS_COL = "__cdc_ts"
 _LONG_MIN = -(1 << 63)
+# manifests (and the read plans built on them) kept per LakeTable
+_CACHE_MAX = 16
+# paths per parquet() call. Spark lists more root paths than
+# spark.sql.sources.parallelPartitionDiscovery.threshold (default 32) with
+# a Spark job: a 64-bucket table's read built in 1.4-1.7 s with one
+# listing job per file group, 0.4-0.55 s in 32-path chunks (local[4],
+# local disk)
+_SCAN_PATHS_MAX = 32
 
 # fold flags carried by merge-on-read delta files (see commit_delta)
 DELTA_FLAG_FIELDS = [
@@ -105,13 +118,16 @@ def atomic_write(path: str, data: str) -> None:
         os.close(dfd)
 
 
+def bucket_sql(key_cols: list[str], n_buckets: int) -> str:
+    """Stable key->bucket hash as SQL. xxhash64 is deterministic across
+    sessions and executors; the NUL separator (chr(0)) avoids ('ab','c')
+    vs ('a','bc') collisions."""
+    keys = ", ".join(_q(c) for c in key_cols)
+    return f"CAST(pmod(xxhash64(concat_ws(chr(0), {keys})), {n_buckets}) AS INT)"
+
+
 def bucket_expr(key_cols: list[str], n_buckets: int):
-    """Stable key->bucket hash. xxhash64 is deterministic across sessions
-    and executors; NUL separator avoids ('ab','c') vs ('a','bc') collisions."""
-    return F.pmod(
-        F.xxhash64(F.concat_ws("\x00", *[F.col(c) for c in key_cols])),
-        F.lit(n_buckets),
-    ).cast("int")
+    return F.expr(bucket_sql(key_cols, n_buckets))
 
 
 class LakeTable:
@@ -121,8 +137,13 @@ class LakeTable:
         # committed snapshot manifests are immutable -> cache the parsed
         # JSON per sid so the per-batch bookkeeping (delta_depth, commit,
         # read) costs a dict lookup, not a reparse that grows with
-        # buckets x files. Bounded LRU-ish: old sids fall out.
+        # buckets x files. Bounded: the lowest sids fall out.
         self._snap_cache: dict[int, dict] = {}
+        # read() plans: (sid, buckets) -> (manifest, DataFrame); an entry
+        # lives no longer than its manifest's cache entry (see read())
+        self._plans: dict[tuple[int, tuple[int, ...] | None], tuple[dict, DataFrame]] = {}
+        # the maintenance lane reads from its own thread
+        self._lock = threading.Lock()
 
     # ------------------------------------------------------------- meta
     @property
@@ -139,7 +160,8 @@ class LakeTable:
     def snapshot(self, sid: int | None = None) -> dict:
         if sid is None:
             sid = self.current_snapshot_id()
-        snap = self._snap_cache.get(sid)
+        with self._lock:
+            snap = self._snap_cache.get(sid)
         if snap is None:
             with open(self._snap_path(sid)) as f:
                 snap = json.load(f)
@@ -147,9 +169,17 @@ class LakeTable:
         return snap
 
     def _cache_snap(self, sid: int, snap: dict) -> None:
-        self._snap_cache[sid] = snap
-        while len(self._snap_cache) > 16:
-            del self._snap_cache[min(self._snap_cache)]
+        with self._lock:
+            self._forget(sid)
+            self._snap_cache[sid] = snap
+            while len(self._snap_cache) > _CACHE_MAX:
+                self._forget(min(self._snap_cache))
+
+    def _forget(self, sid: int) -> None:
+        """Drop a manifest and its read plans; the caller holds the lock."""
+        self._snap_cache.pop(sid, None)
+        for k in [k for k in self._plans if k[0] == sid]:
+            del self._plans[k]
 
     def _set_current(self, sid: int) -> None:
         atomic_write(os.path.join(self._meta_dir, "CURRENT"), str(sid))
@@ -471,7 +501,8 @@ class LakeTable:
                         os.rmdir(sub)
         for s in expired:
             os.remove(self._snap_path(s))
-            self._snap_cache.pop(s, None)
+            with self._lock:
+                self._forget(s)
         return {"expired_snapshots": len(expired), "removed_files": removed_files}
 
     # ------------------------------------------------------- bucket growth
@@ -542,15 +573,47 @@ class LakeTable:
         return self.snapshot()["n_buckets"]
 
     def read(self, sid: int | None = None, buckets: list[int] | None = None) -> DataFrame:
-        """Read current state: files grouped by (schema id, rank, kind),
-        cast-unioned to the snapshot schema (add-column null backfill,
-        type widening), then — if any merge-on-read deltas are present —
-        folded per key in rank order (latest-rank column wins, delete
-        barriers honored)."""
+        """Read the state of snapshot ``sid`` (default: current), limited to
+        ``buckets`` when given. Files are grouped by (schema id, rank, kind,
+        physical bucket count), cast-unioned to the snapshot schema
+        (add-column null backfill, type widening), then, if any
+        merge-on-read deltas are present, folded per key in (commit ts,
+        rank) order by :func:`fold_ranked`.
+
+        The plan is built from SQL strings (one ``selectExpr`` per file
+        group, one ``agg`` for the fold): 287 JVM calls for a 16-bucket
+        table of one base and four deltas, where per-column ``Column``
+        nests took ~4,100. Building it launches no Spark job. Each group
+        stays its own ``parquet()`` scan of at most ``_SCAN_PATHS_MAX``
+        paths, Spark's parallel-listing threshold, so files are listed on
+        the driver; one scan over every file would start a listing job on
+        each uncached read.
+
+        The built DataFrame is kept per (manifest, buckets) while the
+        manifest is cached, so repeated reads of a live snapshot reuse
+        one plan. The memo is keyed on the cached manifest object, not on
+        the sid alone: after a rollback the next commit reuses the sid
+        with a new manifest, which misses. Callers derive from the
+        returned DataFrame and must not persist it."""
         snap = self.snapshot(sid)
+        want = None if buckets is None else tuple(sorted({int(b) for b in buckets}))
+        key = (snap["id"], want)
+        with self._lock:
+            hit = self._plans.get(key)
+        if hit is not None and hit[0] is snap:
+            return hit[1]
+        df = self._build_read(snap, want)
+        with self._lock:
+            if self._snap_cache.get(snap["id"]) is snap:
+                self._plans[key] = (snap, df)
+                while len(self._plans) > _CACHE_MAX:
+                    del self._plans[min(self._plans, key=lambda k: k[0])]
+        return df
+
+    def _build_read(self, snap: dict, want: tuple[int, ...] | None) -> DataFrame:
         target = T.StructType.fromJson(json.loads(snap["schemas"][str(snap["schema_id"])]))
         n_buckets = snap["n_buckets"]
-        want = None if buckets is None else {int(b) for b in buckets}
+        key_cols = snap["key_cols"]
         # group by (schema, rank, kind, physical bucket count); paths are
         # deduped because a legacy file (written before a grow_buckets
         # renumbering) is listed under several child buckets
@@ -564,16 +627,14 @@ class LakeTable:
                 groups.setdefault((int(sch_id), int(rank), kind, nw), set()).add(
                     os.path.join(self.root, rel)
                 )
-        key_cols = snap["key_cols"]
-        value_names = [f.name for f in target.fields if f.name not in key_cols]
+        if not groups:
+            return self.spark.createDataFrame([], target)
+        fold = any(kind == "delta" for _s, _r, kind, _n in groups)
         parts = []
-        any_delta = False
         for (sch_id, rank, kind, nw), pathset in sorted(groups.items()):
-            paths = sorted(pathset)
             file_schema = T.StructType.fromJson(json.loads(snap["schemas"][str(sch_id)]))
             read_schema = file_schema
             if kind == "delta":
-                any_delta = True
                 read_schema = T.StructType(
                     list(file_schema.fields)
                     + [f for f in DELTA_FLAG_FIELDS if f.name not in file_schema.names]
@@ -583,61 +644,72 @@ class LakeTable:
                         if f.name not in file_schema.names
                     ]
                 )
-            df = self.spark.read.schema(read_schema).parquet(*paths)
-            if want is not None and nw != n_buckets:
-                # legacy-bucketed file in a subset read: keep only the keys
-                # that map into the requested buckets under the CURRENT
-                # bucket count (full reads need no filter — paths dedup)
-                df = df.where(bucket_expr(key_cols, n_buckets).isin(sorted(want)))
-            names = set(read_schema.fieldNames())
-            proj = [
-                (F.col(f.name) if f.name in names else F.lit(None)).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
-            if kind == "delta":
-                # written flag per value column: persisted __set_ flag when
-                # present (explicit-null-aware), else value-non-null
-                def _w_expr(c: str, names=names):
-                    nn = F.col(c).isNotNull() if c in names else F.lit(False)
-                    if f"__set_{c}" in names:
-                        return F.coalesce(F.col(f"__set_{c}"), nn)
-                    return nn
-
-                proj += [_w_expr(c).alias(f"__w_{c}") for c in value_names]
-                proj += [
-                    F.coalesce(F.col("_is_delete"), F.lit(False)).alias("_is_delete"),
-                    F.coalesce(F.col("_had_delete"), F.lit(False)).alias("_had_delete"),
-                ]
-            else:
-                # a base row IS the authoritative state: every column is
-                # 'written' (including genuine NULLs) at the base order
-                proj += [F.lit(True).alias(f"__w_{c}") for c in value_names]
-                proj += [
-                    F.lit(False).alias("_is_delete"),
-                    F.lit(False).alias("_had_delete"),
-                ]
-            # per-row apply order: (commit-ts lineage, snapshot rank).
-            # The ts component makes the fold correct even when delta files
-            # are applied out of per-key commit order (e.g. a stream tail
-            # with maxFilesPerTrigger seeing overlapping file time ranges);
-            # rank breaks ties for same-ts rows (base < any delta).
-            ots = (
-                F.coalesce(F.col(CDC_TS_COL).cast("long"), F.lit(_LONG_MIN))
-                if CDC_TS_COL in names
-                else F.lit(_LONG_MIN)
-            )
-            proj.append(
-                F.struct(ots.alias("ts"), F.lit(rank).cast("long").alias("rank")).alias("_o")
-            )
-            parts.append(df.select(*proj))
-        if not parts:
-            return self.spark.createDataFrame([], target)
+            proj = _rank_projection(set(read_schema.names), target, key_cols, rank, kind, fold)
+            paths = sorted(pathset)
+            for i in range(0, len(paths), _SCAN_PATHS_MAX):
+                df = self.spark.read.schema(read_schema).parquet(*paths[i : i + _SCAN_PATHS_MAX])
+                if want is not None and nw != n_buckets:
+                    # legacy-bucketed file in a subset read: keep only the
+                    # keys that map into the requested buckets under the
+                    # CURRENT bucket count (full reads need no filter —
+                    # paths dedup)
+                    df = df.where(
+                        f"{bucket_sql(key_cols, n_buckets)} IN ({', '.join(map(str, want))})"
+                    )
+                parts.append(df.selectExpr(*proj))
         out = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p)
-        if not any_delta:
-            return out.drop("_is_delete", "_had_delete", "_o", *[f"__w_{c}" for c in value_names])
-        return fold_ranked(out, key_cols, target)
+            out = out.union(p)  # every part has the same columns in order
+        return fold_ranked(out, key_cols, target) if fold else out
+
+
+def _q(name: str) -> str:
+    """Backtick-quote a column name for a SQL expression string."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _rank_projection(
+    names: set[str], target: T.StructType, key_cols: list[str], rank: int, kind: str, fold: bool
+) -> list[str]:
+    """SQL select list casting one file group (columns ``names``) to
+    ``target``; when the read folds, it adds the fold inputs: a ``__w_<c>``
+    written flag per value column, the ``_is_delete`` / ``_had_delete``
+    barriers and the ``_o`` = (commit ts, rank) order."""
+    cols = [
+        f"CAST({_q(f.name) if f.name in names else 'NULL'} AS {f.dataType.simpleString()})"
+        f" AS {_q(f.name)}"
+        for f in target.fields
+    ]
+    if not fold:
+        return cols
+    value_names = [f.name for f in target.fields if f.name not in key_cols]
+    if kind == "delta":
+        # written flag per value column: persisted __set_ flag when present
+        # (explicit-null-aware), else value-non-null
+        for c in value_names:
+            w = f"{_q(c)} IS NOT NULL" if c in names else "false"
+            if f"__set_{c}" in names:
+                w = f"COALESCE({_q(f'__set_{c}')}, {w})"
+            cols.append(f"{w} AS {_q(f'__w_{c}')}")
+        cols += [
+            "COALESCE(_is_delete, false) AS _is_delete",
+            "COALESCE(_had_delete, false) AS _had_delete",
+        ]
+    else:
+        # a base row IS the authoritative state: every column is 'written'
+        # (including genuine NULLs) at the base order
+        cols += [f"true AS {_q(f'__w_{c}')}" for c in value_names]
+        cols += ["false AS _is_delete", "false AS _had_delete"]
+    # per-row apply order: (commit-ts lineage, snapshot rank). The ts
+    # component makes the fold correct even when delta files are applied
+    # out of per-key commit order (e.g. a stream tail with
+    # maxFilesPerTrigger seeing overlapping file time ranges); rank breaks
+    # ties for same-ts rows (base < any delta).
+    ts = f"{_LONG_MIN}L"
+    if CDC_TS_COL in names:
+        ts = f"COALESCE(CAST({_q(CDC_TS_COL)} AS BIGINT), {ts})"
+    cols.append(f"named_struct('ts', {ts}, 'rank', CAST({rank} AS BIGINT)) AS _o")
+    return cols
 
 
 def fold_ranked(df: DataFrame, key_cols: list[str], target: T.StructType) -> DataFrame:
@@ -652,25 +724,21 @@ def fold_ranked(df: DataFrame, key_cols: list[str], target: T.StructType) -> Dat
     max-only aggregates -> map-side partial aggregation -> hot-key safe.
     """
     value_cols = [f.name for f in target.fields if f.name not in key_cols]
+    m = {c: _q(f"_m_{c}") for c in value_cols}
     aggs = [
-        F.max(F.struct(F.col("_o").alias("o"), F.col("_is_delete"))).alias("_top"),
-        F.max(F.when(F.col("_had_delete"), F.col("_o"))).alias("_barrier"),
+        "max(named_struct('o', _o, '_is_delete', _is_delete)) AS _top",
+        "max(CASE WHEN _had_delete THEN _o END) AS _barrier",
+    ] + [
+        f"max(CASE WHEN {_q(f'__w_{c}')} THEN named_struct('o', _o, 'v', {_q(c)}) END)"
+        f" AS {m[c]}"
+        for c in value_cols
     ]
-    for c in value_cols:
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(f"__w_{c}"),
-                    F.struct(F.col("_o").alias("o"), F.col(c).alias("v")),
-                )
-            ).alias(f"_m_{c}")
-        )
-    g = df.groupBy(*key_cols).agg(*aggs)
-    g = g.where(~F.col("_top._is_delete"))
-    cols = [F.col(c) for c in key_cols]
-    for c in value_cols:
-        alive = F.col(f"_m_{c}").isNotNull() & (
-            F.col("_barrier").isNull() | (F.col(f"_m_{c}.o") >= F.col("_barrier"))
-        )
-        cols.append(F.when(alive, F.col(f"_m_{c}.v")).alias(c))
-    return g.select(*cols)
+    g = df.groupBy(*key_cols).agg(*[F.expr(a) for a in aggs]).where("NOT _top._is_delete")
+    return g.selectExpr(
+        *[_q(c) for c in key_cols],
+        *[
+            f"CASE WHEN {m[c]} IS NOT NULL AND (_barrier IS NULL OR {m[c]}.o >= _barrier)"
+            f" THEN {m[c]}.v END AS {_q(c)}"
+            for c in value_cols
+        ],
+    )

@@ -2,7 +2,9 @@
 column writes, explicit nulls, duplicate records, multi-mod records,
 random base rows), decode -> fold -> MERGE must reproduce a direct
 pandas state-machine simulation — in BOTH fold shapes (fused and
-salted) and BOTH sink modes (MOR delta and CoW rewrite).
+salted) and BOTH sink modes (MOR delta and CoW rewrite). A second
+property stacks several MOR deltas, with additive schema changes between
+them, and checks current, older-snapshot and bucket-subset reads.
 
 Complements the targeted semantics tests with shrinking random
 coverage of the delete-barrier / written-flag / identity-dedup
@@ -25,8 +27,10 @@ from debezium_connector_spanner_spark.operators.merge import (
 from debezium_connector_spanner_spark.sources.event_schema import (
     EVENT_LOG_SCHEMA,
     REPOS_SCHEMA_V1,
+    REPOS_SCHEMA_V2,
+    REPOS_SCHEMA_V3,
 )
-from debezium_connector_spanner_spark.sources.lake import LakeTable
+from debezium_connector_spanner_spark.sources.lake import LakeTable, bucket_expr
 
 KEYS = [("r1", "p1"), ("r1", "p2"), ("r2", "p1")]
 COLS = ["commit", "lang", "content"]
@@ -43,18 +47,30 @@ stream_st = st.lists(event_st, min_size=1, max_size=14)
 base_st = st.integers(0, 7)  # bitmask: which KEYS pre-exist in the base
 
 
-def _mk_rows(stream):
+def _value(col, i, seed):
+    """Deterministic value for ``col`` (a REPOS_SCHEMA_V* column)."""
+    if col.name != "stars":
+        return f"{col.name}{i}s{seed}"
+    return i * 10 + seed if col.type_code == "INT64" else i + seed / 4
+
+
+def _mk_rows(stream, schema=REPOS_SCHEMA_V1, first=0, tie=3):
+    """Event rows for ``stream``; ``first`` offsets the event index (and so
+    commit ts and record sequence) for a later batch of the same log, and
+    every ``tie`` consecutive events share one commit ts."""
+    cols = [schema.column(c) for c in schema.value_columns]
     rows = []
-    for i, (ki, op, mask, seed, dup) in enumerate(stream):
+    for i, (ki, op, mask, seed, dup) in enumerate(stream, start=first):
         repo, path = KEYS[ki]
         key = {"repo": repo, "path": path}
+        mask = mask % (1 << len(cols)) or 1
         if op == "DELETE":
             new = None
         else:
             new = {}
-            for b, c in enumerate(COLS):
+            for b, c in enumerate(cols):
                 if mask >> b & 1:
-                    new[c] = None if (seed + b) % 6 == 0 else f"{c}{i}s{seed}"
+                    new[c.name] = None if (seed + b) % 6 == 0 else _value(c, i, seed)
         mods = [
             {
                 "keys": json.dumps(key, sort_keys=True),
@@ -66,12 +82,12 @@ def _mk_rows(stream):
         base.update(
             record_type="data_change",
             partition_token="t",
-            commit_ts=(1 + i // 3) * 1_000,  # ts ties every ~3 events
+            commit_ts=(1 + i // tie) * 1_000,
             record_sequence=str(i),  # unique -> total order deterministic
             server_txn_id=f"x{i}",
             is_last_in_txn_in_partition=True,
             table_name="repos",
-            column_types=REPOS_SCHEMA_V1.column_types_json(),
+            column_types=schema.column_types_json(),
             mods=mods,
             mod_type=op,
             value_capture_type="OLD_AND_NEW_VALUES",
@@ -82,10 +98,10 @@ def _mk_rows(stream):
     return rows
 
 
-def _simulate(rows, base_rows):
+def _simulate(rows, base_rows, cols=COLS):
     """Direct state machine in (ts, int(rs), mod_number) order with
     identity dedup — independent of every Spark code path."""
-    state = {(r["repo"], r["path"]): {c: r[c] for c in COLS} for r in base_rows}
+    state = {(r["repo"], r["path"]): {c: r.get(c) for c in cols} for r in base_rows}
     seen = set()
     flat = []
     for r in rows:
@@ -105,9 +121,9 @@ def _simulate(rows, base_rows):
         if k in state:
             state[k].update(vals)
         else:
-            state[k] = {c: vals.get(c) for c in COLS}
+            state[k] = {c: vals.get(c) for c in cols}
     return {
-        k: {c: v.get(c) for c in COLS} for k, v in sorted(state.items())
+        k: {c: v.get(c) for c in cols} for k, v in sorted(state.items())
     }
 
 
@@ -133,7 +149,12 @@ def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode
     else:
         folded = fold_changes(decoded, ["repo", "path"], COLS)
 
-    root = tempfile.mkdtemp(prefix="fold-hyp-")
+    t = _base_table(spark, base_rows)
+    merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode=mode)
+    assert _state(t.read(), COLS) == want, (salted, mode, rows)
+
+
+def _base_table(spark, base_rows):
     base_df = (
         spark.createDataFrame(
             [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in base_rows],
@@ -142,17 +163,82 @@ def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode
         if base_rows
         else None
     )
-    t = LakeTable.create(
+    return LakeTable.create(
         spark,
-        os.path.join(root, "t"),
+        os.path.join(tempfile.mkdtemp(prefix="fold-hyp-"), "t"),
         REPOS_SCHEMA_V1.spark_struct(),
         ["repo", "path"],
         n_buckets=2,
         initial_df=base_df,
     )
-    merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode=mode)
-    got = {
-        (r["repo"], r["path"]): {c: r[c] for c in COLS}
-        for r in t.read().drop("__cdc_ts").collect()
+
+
+def _state(df, cols):
+    return {(r["repo"], r["path"]): {c: r[c] for c in cols} for r in df.collect()}
+
+
+# V1 -> V2 adds stars INT64, V2 -> V3 widens it to FLOAT64
+SCHEMAS = [REPOS_SCHEMA_V1, REPOS_SCHEMA_V2, REPOS_SCHEMA_V3]
+ALL_COLS = REPOS_SCHEMA_V3.value_columns
+multi_event_st = st.tuples(
+    st.integers(0, len(KEYS) - 1),
+    st.sampled_from(["INSERT", "UPDATE", "DELETE"]),
+    st.integers(1, 15),  # written-column bitmask over the batch schema
+    st.integers(0, 5),
+    st.booleans(),
+)
+# (events, evolve the schema before this batch, older snapshot to re-read)
+batch_st = st.tuples(
+    st.lists(multi_event_st, min_size=1, max_size=8), st.booleans(), st.integers(0, 3)
+)
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    batches=st.lists(batch_st, min_size=2, max_size=3),
+    base_mask=base_st,
+    subset=st.sets(st.integers(0, 1)),
+    tie=st.sampled_from([1, 3, 32]),  # 32: every batch shares one ts
+)
+def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, subset, tie):
+    """Stacked MOR deltas fold in (ts, rank) order: after each batch, the
+    current read, a read of an older snapshot and a bucket-subset read
+    each equal the state machine at that point of the log."""
+    base_rows = [
+        {"repo": KEYS[i][0], "path": KEYS[i][1], "commit": f"b{i}", "lang": None, "content": f"bc{i}"}
+        for i in range(len(KEYS))
+        if base_mask >> i & 1
+    ]
+    t = _base_table(spark, base_rows)
+    bucket = {
+        (r["repo"], r["path"]): r["b"]
+        for r in spark.createDataFrame(KEYS, ["repo", "path"])
+        .select("repo", "path", bucket_expr(["repo", "path"], 2).alias("b"))
+        .collect()
     }
-    assert got == want, (salted, mode, rows)
+
+    import pandas as pd
+
+    version = 0
+    rows = []
+    # per committed snapshot: (sid, value columns, expected state)
+    history = [(t.current_snapshot_id(), COLS, _simulate([], base_rows))]
+    for stream, evolve, pick in batches:
+        version = min(version + evolve, len(SCHEMAS) - 1)
+        schema = SCHEMAS[version]
+        batch = _mk_rows(stream, schema, first=len(rows), tie=tie)
+        rows += batch
+        pdf = pd.DataFrame(batch)
+        pdf["commit_ts"] = pd.to_datetime(pdf["commit_ts"], unit="us")
+        decoded = decode_mods(spark.createDataFrame(pdf, EVENT_LOG_SCHEMA), schema)
+        folded = fold_changes(decoded, ["repo", "path"], schema.value_columns)
+        sid, _ = merge_into(t, folded, target_schema=schema.spark_struct(), mode="mor")
+        cols = schema.value_columns
+        want = {k: {c: v[c] for c in cols} for k, v in _simulate(rows, base_rows, ALL_COLS).items()}
+        history.append((sid, cols, want))
+
+        assert _state(t.read(), cols) == want, ("current", rows)
+        old_sid, old_cols, old_want = history[pick % (len(history) - 1)]
+        assert _state(t.read(sid=old_sid), old_cols) == old_want, ("older", old_sid, rows)
+        sub = {k: v for k, v in want.items() if bucket[k] in subset}
+        assert _state(t.read(buckets=sorted(subset)), cols) == sub, ("subset", subset, rows)
