@@ -36,6 +36,7 @@ from debezium_connector_spanner_spark.sources.event_schema import (
     REPOS_SCHEMA_V1,
     TYPES_PROBE_SCHEMA,
 )
+from debezium_connector_spanner_spark.session import local_frame
 from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
 
 RUN_FORMAT = 7  # bump to invalidate cached replay state after engine changes
@@ -258,7 +259,8 @@ def q_cdc_watermark_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for m in eng.metrics()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "batch_id int, batch_end_us long, watermark_us long, events long, "
         "active_tokens int",

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _cores(master: str) -> int:
@@ -58,6 +59,15 @@ def get_spark(
             os.path.join(os.path.dirname(os.path.abspath(__file__)), "fair_pools.xml"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # With DataFrame debugging on (the default), every functions/Column
+        # call reads a conf, sets and clears PySparkCurrentOrigin in the
+        # JVM, walks the Python stack for its call site and tries to import
+        # IPython (the first try took 0.4 s on a 4-vCPU VM). A warm proto
+        # replay made 7.4k py4j calls with it and 4.2k without. All it buys
+        # is the DataFrame call-site lines in an error's context; the error
+        # message itself (say, which column is missing) is unchanged. A
+        # static conf: it only takes effect when the session is created.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver JVM hosts all executor threads. Measured
         # on this VM: an 8g heap beats 32g by >3x (GC geometry + cold huge
@@ -88,3 +98,29 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` field
+    order; ``schema`` may be a DDL string), planned as a JVM
+    ``LocalRelation``.
+
+    ``createDataFrame`` of a Python list plans a ``LogicalRDD`` over a
+    ``PythonRDD``: every action or broadcast of it is a job of
+    ``defaultParallelism`` tasks, each starting a Python worker to unpickle
+    a few rows. An Arrow table is handed to the JVM whole instead: a
+    broadcast of it runs at most one task per row, and no Python worker.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from debezium_connector_spanner_spark.session import local_frame
+
 BUCKET_COL = "__bucket"
 CDC_TS_COL = "__cdc_ts"
 _LONG_MIN = -(1 << 63)
@@ -246,8 +248,15 @@ class LakeTable:
         (delta files are short-lived; only base/compaction files benefit).
         """
         out = os.path.join(self.root, "data", f"snap-{snapshot_id:08d}-{uuid.uuid4().hex[:8]}")
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        w = df.select(*cols, bucket_expr(key_cols, n_buckets).alias(BUCKET_COL))
+        # one selectExpr: per-field Column chains (col, cast, alias) cost
+        # three py4j calls a column on every write
+        w = df.selectExpr(
+            *(
+                f"CAST({_q(f.name)} AS {f.dataType.simpleString()}) AS {_q(f.name)}"
+                for f in schema.fields
+            ),
+            f"{bucket_sql(key_cols, n_buckets)} AS {_q(BUCKET_COL)}",
+        )
         if not pre_bucketed:
             # co-locate each bucket into one task -> one file per touched
             # bucket; explicit numPartitions so AQE can't coalesce the
@@ -628,7 +637,7 @@ class LakeTable:
                     os.path.join(self.root, rel)
                 )
         if not groups:
-            return self.spark.createDataFrame([], target)
+            return local_frame(self.spark, [], target)
         fold = any(kind == "delta" for _s, _r, kind, _n in groups)
         parts = []
         for (sch_id, rank, kind, nw), pathset in sorted(groups.items()):

@@ -93,7 +93,6 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -471,6 +470,8 @@ def decode_proto_wire_pandas(log: DataFrame) -> DataFrame:
     differential-test twin of the vectorized path below; the engine uses
     decode_proto_wire (numpy varint automaton + Arrow output).
     """
+    # the only pandas user in this module
+    import pandas as pd
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -692,6 +693,44 @@ def _str_col(
     )
 
 
+# Arrays are built from buffers, never with pa.array(): pyarrow probes
+# every pa.array() input for pandas types, which imports pandas, and a
+# fresh Python worker running this kernel would spend ~0.4 s (4-vCPU VM)
+# and ~30 MB on an import it has no use for.
+def _ints(arr: np.ndarray, typ: pa.DataType) -> pa.Array:
+    """int32/int64 column over a numpy array (zero-copy when it already
+    has the width)."""
+    arr = np.ascontiguousarray(arr, dtype=f"int{typ.bit_width}")
+    return pa.Array.from_buffers(typ, arr.shape[0], [None, pa.py_buffer(arr)])
+
+
+def _bools(arr: np.ndarray) -> pa.Array:
+    return pa.Array.from_buffers(
+        pa.bool_(), arr.shape[0], [None, pa.py_buffer(np.packbits(arr, bitorder="little"))]
+    )
+
+
+def _utf8(vals: list) -> pa.Array:
+    """utf8 column from Python str / None values."""
+    enc = [b"" if v is None else v.encode() for v in vals]
+    offsets = np.zeros(len(enc) + 1, np.int64)
+    offsets[1:] = np.cumsum([len(b) for b in enc], dtype=np.int64)
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(f"string column payload {offsets[-1]} bytes exceeds 2GB")
+    valid = np.array([v is not None for v in vals], bool)
+    nulls = len(vals) - int(valid.sum())
+    return pa.Array.from_buffers(
+        pa.utf8(),
+        len(vals),
+        [
+            pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None,
+            pa.py_buffer(offsets.astype(np.int32)),
+            pa.py_buffer(b"".join(enc)),
+        ],
+        null_count=nulls,
+    )
+
+
 _PA_MODS = pa.list_(
     pa.struct(
         [("keys", pa.utf8()), ("new_values", pa.utf8()), ("old_values", pa.utf8())]
@@ -702,11 +741,31 @@ _PA_CPS = pa.list_(
         [("token", pa.utf8()), ("parent_partition_tokens", pa.list_(pa.utf8()))]
     )
 )
-_MOD_TYPE_TABLE = pa.array([None, "INSERT", "UPDATE", "DELETE"], type=pa.utf8())
-_VCT_TABLE = pa.array(
-    [None, "OLD_AND_NEW_VALUES", "NEW_ROW", "NEW_VALUES", "NEW_ROW_AND_OLD_VALUES"],
-    type=pa.utf8(),
+_MOD_TYPE_TABLE = _utf8([None, "INSERT", "UPDATE", "DELETE"])
+_VCT_TABLE = _utf8(
+    [None, "OLD_AND_NEW_VALUES", "NEW_ROW", "NEW_VALUES", "NEW_ROW_AND_OLD_VALUES"]
 )
+_DATA_CHANGE_ARR = _utf8([DATA_CHANGE])
+
+
+def _child_partitions(vals: list) -> pa.Array:
+    """``_PA_CPS`` column from decode_record's child_partitions values
+    (a list of {token, parent_partition_tokens} dicts, or None)."""
+    outer, tokens, inner, parents = [0], [], [0], []
+    for cps in vals:
+        for cp in cps or ():
+            tokens.append(cp["token"])
+            parents.extend(cp["parent_partition_tokens"])
+            inner.append(len(parents))
+        outer.append(len(tokens))
+    parent_lists = pa.ListArray.from_arrays(_ints(np.array(inner), pa.int32()), _utf8(parents))
+    struct = pa.StructArray.from_arrays(
+        [_utf8(tokens), parent_lists], fields=list(_PA_CPS.value_type)
+    )
+    null = np.array([v is None for v in vals], bool)
+    return pa.ListArray.from_arrays(
+        _ints(np.array(outer), pa.int32()), struct, mask=_bools(null) if null.any() else None
+    )
 
 # region-bytes -> canonical column_types JSON. The covering wire region
 # of a record's field-6 occurrences starts at a key boundary, so equal
@@ -740,7 +799,7 @@ def _out_schema(tok_type: pa.DataType, ts_type: pa.DataType) -> pa.Schema:
 
 
 def _take(arr: pa.Array, idx: np.ndarray) -> pa.Array:
-    return arr.take(pa.array(idx, type=pa.int64()))
+    return arr.take(_ints(idx, pa.int64()))
 
 
 def _decode_data_batch(
@@ -834,19 +893,17 @@ def _decode_data_batch(
     )
     mod_offsets = np.zeros(nd + 1, np.int32)
     mod_offsets[1:] = np.cumsum(counts)
-    mods_arr = pa.ListArray.from_arrays(
-        pa.array(mod_offsets, type=pa.int32()), mods_struct
-    )
+    mods_arr = pa.ListArray.from_arrays(_ints(mod_offsets, pa.int32()), mods_struct)
 
     def bool_col(rws: np.ndarray, iv: np.ndarray) -> pa.Array:
         arr = np.zeros(nd, bool)
         arr[rws] = iv != 0
-        return pa.array(arr)
+        return _bools(arr)
 
     def int_col(rws: np.ndarray, iv: np.ndarray) -> pa.Array:
         arr = np.zeros(nd, np.int64)
         arr[rws] = iv
-        return pa.array(arr)
+        return _ints(arr, pa.int64())
 
     def enum_col(table: pa.Array, rws: np.ndarray, iv: np.ndarray) -> pa.Array:
         # validate the RAW varint values before the int32 cast (ADVICE r5:
@@ -859,19 +916,18 @@ def _decode_data_batch(
             raise KeyError(int(iv[np.flatnonzero(bad)[0]]))
         codes = np.zeros(nd, np.int32)
         codes[rws] = iv.astype(np.int32)
-        return table.take(pa.array(codes, type=pa.int32()))
+        return table.take(_ints(codes, pa.int32()))
 
-    zeros = np.zeros(nd, np.int32)
     return pa.RecordBatch.from_arrays(
         [
-            pa.array([DATA_CHANGE], type=pa.utf8()).take(pa.array(zeros)),
+            _DATA_CHANGE_ARR.take(_ints(np.zeros(nd, np.int32), pa.int32())),
             _take(tok, idx_data),
             _take(cts, idx_data),
             _str_col(data, nd, r2, s2, e2),
             _str_col(data, nd, r3, s3, e3),
             bool_col(r4, i4),
             _str_col(data, nd, r5, s5, e5),
-            pa.array(ct_list, type=pa.utf8()),
+            _utf8(ct_list),
             mods_arr,
             enum_col(_MOD_TYPE_TABLE, r8, i8),
             enum_col(_VCT_TABLE, r9, i9),
@@ -901,13 +957,19 @@ def _decode_ctrl_batch(
         )
         for j, i in enumerate(idx_ctrl)
     ]
-    cols = [
-        pa.array([r["record_type"] for r in recs], type=pa.utf8()),
-        toks,
-        _take(cts, idx_ctrl),
-    ]
+    cols = [_utf8([r["record_type"] for r in recs]), toks, _take(cts, idx_ctrl)]
+    # a control record sets record_sequence and child_partitions; every
+    # other field keeps its _NON_DATA_DEFAULTS null
     for name, typ in list(zip(schema.names, schema.types))[3:]:
-        cols.append(pa.array([r[name] for r in recs], type=typ))
+        vals = [r[name] for r in recs]
+        if name == "record_sequence":
+            cols.append(_utf8(vals))
+        elif name == "child_partitions":
+            cols.append(_child_partitions(vals))
+        elif any(v is not None for v in vals):
+            raise ValueError(f"control record with a {name} value")
+        else:
+            cols.append(pa.nulls(len(recs), type=typ))
     return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 

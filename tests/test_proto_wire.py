@@ -477,3 +477,78 @@ def test_vectorized_decode_edge_records(spark):
     assert d["mods"][0]["old_values"] is not None
     # empty pruned slice through the kernel
     assert decode_proto_wire(log.where("commit_ts < timestamp'1970-01-02'")).count() == 0
+
+
+_NO_PANDAS_KERNEL = """
+import sys
+
+import numpy as np
+import pyarrow as pa
+
+from debezium_connector_spanner_spark.sources import proto_wire as pw
+
+data = {
+    "record_type": "data_change", "commit_ts_us": 1, "record_sequence": "1",
+    "server_txn_id": "t", "is_last_in_txn_in_partition": True, "table_name": "repos",
+    "column_types": "[]", "mod_type": "UPDATE", "value_capture_type": "NEW_VALUES",
+    "mods": [{"keys": "{}", "new_values": "{}", "old_values": None}],
+    "number_of_records_in_transaction": 1, "number_of_partitions_in_transaction": 1,
+    "transaction_tag": "", "is_system_transaction": False,
+}
+cps = [{"token": "c", "parent_partition_tokens": ["tok"]}]
+recs = [
+    data,
+    {"record_type": "heartbeat", "commit_ts_us": 2},
+    {"record_type": "child_partitions", "commit_ts_us": 3, "record_sequence": "0",
+     "child_partitions": cps},
+    {"record_type": "partition_start", "commit_ts_us": 4, "record_sequence": "0",
+     "child_partitions": [{"token": "s", "parent_partition_tokens": []}]},
+    {"record_type": "partition_end", "commit_ts_us": 5},
+]
+raws = [pw.encode_record(r) for r in recs]
+offsets = np.cumsum([0] + [len(r) for r in raws]).astype(np.int32)
+batch = pa.RecordBatch.from_arrays(
+    [
+        pa.Array.from_buffers(
+            pa.binary(), len(raws), [None, pa.py_buffer(offsets), pa.py_buffer(b"".join(raws))]
+        ),
+        pw._utf8(["tok"] * len(raws)),
+        pw._ints(np.arange(len(raws)), pa.int64()).view(pa.timestamp("us", tz="UTC")),
+    ],
+    names=["record_bytes", "partition_token", "commit_ts"],
+)
+captured = {}
+
+
+class Log:
+    def mapInArrow(self, kernel, schema):
+        captured["kernel"] = kernel
+
+
+pw.decode_proto_wire(Log())
+out = pa.Table.from_batches(list(captured["kernel"](iter([batch]))))
+assert out.num_rows == len(recs), out.num_rows
+assert sorted(out.column("record_type").to_pylist()) == sorted(r["record_type"] for r in recs)
+print("pandas" in sys.modules)
+"""
+
+
+def test_vectorized_kernel_imports_no_pandas():
+    """A Python worker running the engine's decode kernel never imports
+    pandas: pa.array() would (pyarrow probes its input for pandas types),
+    costing each fresh worker ~0.4 s. Run in a fresh interpreter, over
+    data and control records."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    res = subprocess.run(
+        [sys.executable, "-c", _NO_PANDAS_KERNEL],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "False"
