@@ -76,11 +76,11 @@ def run_cdc_replay(
     max_events_per_batch: int | None = None,
     fixture: str | None = None,
 ) -> dict:
-    # bucket count scales with the session's parallelism (the fold shuffle
-    # has n_buckets partitions: 5 waves per core packs the stage tail —
-    # 64 buckets on 32 cores is 2 exact waves and stragglers idle half
-    # the machine; swept in tools/sweep_scaling.py). Like shuffle
-    # partitions on a real cluster, sized at table create per deployment.
+    # bucket count scales with the session's parallelism (base and
+    # compaction writes have n_buckets partitions: 5 waves per core packs
+    # the stage tail — 64 buckets on 32 cores is 2 exact waves and
+    # stragglers idle half the machine). Like shuffle partitions on a real
+    # cluster, sized at table create per deployment.
     n_buckets = max(64, 5 * spark.sparkContext.defaultParallelism)
     import json as _json
 

@@ -4,12 +4,12 @@ The fold is a SINGLE aggregation per batch built only from
 max/max-of-struct aggregates (associative + idempotent). Two physical
 shapes, chosen by workload:
 
-- **fused** (``fold_changes(n_buckets=...)``, default): the fold's
-  exchange IS the sink's bucket exchange — one shuffle per batch, output
-  pre-clustered for the write. Because the explicit bucket repartition
-  satisfies the grouping distribution, Catalyst plans the aggregate
-  entirely post-shuffle (no map-side combine) — optimal when keys repeat
-  little within a batch (high key cardinality).
+- **fused** (``fold_changes``, default): one ``groupBy(keys)`` — one
+  shuffle per batch, with map-side partial aggregation (a key's events
+  within an input partition are pre-reduced before the exchange) and an
+  output AQE may coalesce. It is not the sink's bucket exchange: the
+  merge-on-read delta is written unbucketed (sources/lake.py
+  ``commit_delta``), and copy-on-write re-buckets in its commit.
 - **salted** (``fold_changes_salted``): explicit two-phase
   (key, salt)->key combine for hot keys — the north rule's "hot-key
   repos salted before the merge-apply shuffle". A mega-key's events
@@ -17,12 +17,12 @@ shapes, chosen by workload:
   per-key combine. Identical results (property-tested).
 
 No window functions (a window would shuffle the full event set
-un-combined and cannot pre-reduce at all). Measured
-(tools/bench_fold_alternatives.py, 4.1M events / 504k keys, local[32],
-3 reps): agg fold best 8.8s vs window fold best 8.5s — a wash at this
-scale (overlapping rep ranges), so the deciding factor is the shape at
-100x: the agg fold's max-of-struct aggregates admit partial aggregation
-when the input is NOT pre-bucketed (map-side combine shrinks the
+un-combined and cannot pre-reduce at all). Measured (PLANS.md,
+"SortAggregate fold: measured against the window alternative"; 4.1M
+events / 504k keys, local[32], 3 reps): agg fold best 8.8s vs window
+fold best 8.5s — a wash at this scale (overlapping rep ranges), so the
+deciding factor is the shape at 100x: the agg fold's max-of-struct
+aggregates admit partial aggregation (map-side combine shrinks the
 shuffle by the intra-batch key-repeat factor), while the window variant
 always ships every event row and materializes the full frame per key.
 The SortAggregate (struct-typed max has no hash-agg buffer) costs one
@@ -44,9 +44,10 @@ are absorbed because every aggregate is max-based (idempotent) — the
 explicit dropDuplicates shuffle is reserved for the envelope-emission
 path (operators/decode.py dedup_identity).
 
-MERGE is copy-on-write per key-bucket: only buckets containing changed
-keys are read + rewritten (sources/lake.py), keeping batch cost O(delta),
-not O(table), at 10^10-event scale.
+MERGE appends the folded batch as merge-on-read delta files by default;
+copy-on-write reads and rewrites only the buckets containing changed
+keys (sources/lake.py), keeping batch cost O(delta), not O(table), at
+10^10-event scale.
 
 Reference parity: replaces the Kafka emit + commit-callback machinery
 (/root/reference processor/SpannerChangeRecordEmitter.java:54-129,
@@ -69,26 +70,12 @@ def fold_changes(
     decoded: DataFrame,
     key_cols: list[str],
     value_cols: list[str],
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """One row per key: post-fold values + delete flags (single agg pass).
 
     Input: decode_mods output (key cols flattened, seq struct, op, vals).
-
-    With ``n_buckets`` set, the fold shuffle doubles as the sink's bucket
-    shuffle: rows are explicitly repartitioned on the key-bucket and the
-    bucket joins the grouping keys, so the folded output comes out
-    already clustered by bucket — the downstream delta/merge write needs
-    NO second shuffle. (bucket = f(key), so grouping by (bucket, key) is
-    per-key grouping.)
     """
-    if n_buckets is not None:
-        decoded = decoded.withColumn("_b", bucket_expr(key_cols, n_buckets))
-        decoded = decoded.repartition(n_buckets, F.col("_b"))
-        group_cols = ["_b", *key_cols]
-    else:
-        group_cols = list(key_cols)
-    return _fold(decoded, group_cols, key_cols, value_cols)
+    return _fold(decoded, key_cols, value_cols)
 
 
 def fold_changes_salted(
@@ -112,7 +99,7 @@ def fold_changes_salted(
     salt = F.pmod(
         F.xxhash64(F.col("seq.ts"), F.col("seq.rs"), F.col("seq.mod")), F.lit(n_salts)
     ).alias("_salt")
-    partial = _fold(decoded.withColumn("_salt", salt), ["_salt", *key_cols], key_cols, value_cols, project=False)
+    partial = _fold(decoded.withColumn("_salt", salt), ["_salt", *key_cols], value_cols, project=False)
     # combine partial folds: same max-based aggregates one level up
     aggs = [
         F.max("_last").alias("_last"),
@@ -128,7 +115,6 @@ def fold_changes_salted(
 def _fold(
     decoded: DataFrame,
     group_cols: list[str],
-    key_cols: list[str],
     value_cols: list[str],
     project: bool = True,
 ) -> DataFrame:
@@ -220,24 +206,20 @@ def merge_into(
     value_cols = [
         f.name for f in schema.fields if f.name not in key_cols and f.name != CDC_TS_COL
     ]
-    n = table.n_buckets()
-
-    pre_bucketed = "_b" in folded.columns
-    if not pre_bucketed:
-        folded = folded.withColumn("_b", bucket_expr(key_cols, n))
 
     persisted = False
     if assume_all_buckets:
         # large batch: statistically every bucket is touched — skip the
-        # probe job entirely; empty buckets just contribute no files
-        touched = list(range(n))
+        # probe job entirely
+        touched = list(range(table.n_buckets()))
     else:
         # touched-bucket set is tiny (<= n_buckets): cheap driver collect
         # that buys O(delta) instead of O(table) per batch. Persist so the
         # decode+fold shuffle isn't recomputed by the write.
         folded = folded.persist()
         persisted = True
-        touched = sorted(r["_b"] for r in folded.select("_b").distinct().collect())
+        b = bucket_expr(key_cols, table.n_buckets())
+        touched = sorted(r[0] for r in folded.select(b).distinct().collect())
         if not touched:
             folded.unpersist()
             return table.current_snapshot_id(), []
@@ -271,13 +253,7 @@ def merge_into(
             *[wflag(c).alias(f"__set_{c}") for c in value_cols],
         )
         try:
-            sid = table.commit_delta(
-                delta,
-                touched,
-                schema=write_schema,
-                summary=summary,
-                pre_bucketed=pre_bucketed,
-            )
+            sid = table.commit_delta(delta, touched, schema=write_schema, summary=summary)
         finally:
             if persisted:
                 folded.unpersist()

@@ -13,6 +13,11 @@ lake-table semantics the CDC sink needs, with the same scale properties:
   key. A batch only rewrites the buckets it touches; untouched buckets'
   file lists are carried forward by reference. At 100 TB this is the
   difference between O(delta) and O(table) per batch.
+- **Unbucketed merge-on-read deltas**: a delta commit writes one file per
+  fold output partition and lists each file under every bucket it
+  touches (``n_write`` 1). Subset reads filter such files by key hash;
+  base files, written by create, copy-on-write and compaction, stay one
+  file per bucket.
 - **Additive schema evolution with cast-on-read**: each data file group
   records its schema id; reads group files by schema id and cast-union to
   the current schema (add column -> null backfill, INT64->FLOAT64 widen),
@@ -84,8 +89,9 @@ def _entry(e) -> tuple:
     n_write None -> written under the snapshot's current bucket count).
 
     ``n_write`` is the bucket count the file was PHYSICALLY written under;
-    it differs from the snapshot's bucket count only after a metadata-only
-    grow_buckets renumbering, and drives the read-time key filter."""
+    it differs from the snapshot's bucket count after a metadata-only
+    grow_buckets renumbering and for merge-on-read deltas (1: the file
+    holds keys of every bucket), and drives the read-time key filter."""
     if len(e) == 2:
         return e[0], e[1], 0, "base", 0, None
     if len(e) == 4:
@@ -230,6 +236,21 @@ class LakeTable:
         return t
 
     # ------------------------------------------------------------- write
+    def _write_files(
+        self, w: DataFrame, snapshot_id: int, partition_by: str | None = None
+    ) -> list[str]:
+        """Write ``w`` as parquet into a fresh dir of ``snapshot_id``;
+        returns the written files' paths relative to the table root."""
+        out = os.path.join(self.root, "data", f"snap-{snapshot_id:08d}-{uuid.uuid4().hex[:8]}")
+        writer = w.write if partition_by is None else w.write.partitionBy(partition_by)
+        writer.parquet(out)
+        return sorted(
+            os.path.relpath(os.path.join(d, fn), self.root)
+            for d, _dirs, fs in os.walk(out)
+            for fn in fs
+            if fn.endswith(".parquet")
+        )
+
     def _write_data_files(
         self,
         df: DataFrame,
@@ -237,45 +258,21 @@ class LakeTable:
         key_cols: list[str],
         n_buckets: int,
         snapshot_id: int,
-        pre_bucketed: bool = False,
-        sort: bool = True,
     ) -> dict[int, list[str]]:
-        """Write df partitioned by key bucket; returns bucket -> rel paths.
-
-        ``pre_bucketed=True``: the input is already hash-partitioned on the
-        key bucket (the fold shuffle doubled as the bucket shuffle) — skip
-        the extra exchange. ``sort=False`` skips within-file key clustering
-        (delta files are short-lived; only base/compaction files benefit).
-        """
-        out = os.path.join(self.root, "data", f"snap-{snapshot_id:08d}-{uuid.uuid4().hex[:8]}")
-        # one selectExpr: per-field Column chains (col, cast, alias) cost
-        # three py4j calls a column on every write
+        """Write df partitioned by key bucket, each file's rows clustered by
+        key; returns bucket -> rel paths."""
         w = df.selectExpr(
-            *(
-                f"CAST({_q(f.name)} AS {f.dataType.simpleString()}) AS {_q(f.name)}"
-                for f in schema.fields
-            ),
-            f"{bucket_sql(key_cols, n_buckets)} AS {_q(BUCKET_COL)}",
+            *_cast_list(schema), f"{bucket_sql(key_cols, n_buckets)} AS {_q(BUCKET_COL)}"
         )
-        if not pre_bucketed:
-            # co-locate each bucket into one task -> one file per touched
-            # bucket; explicit numPartitions so AQE can't coalesce the
-            # write into a few serial tasks. At cluster scale raise
-            # n_buckets rather than files/bucket.
-            w = w.repartition(n_buckets, F.col(BUCKET_COL))
-        if sort:
-            w = w.sortWithinPartitions(*key_cols)
-        w.write.partitionBy(BUCKET_COL).parquet(out)
+        # co-locate each bucket into one task -> one file per touched
+        # bucket; explicit numPartitions so AQE can't coalesce the write
+        # into a few serial tasks. At cluster scale raise n_buckets rather
+        # than files/bucket.
+        w = w.repartition(n_buckets, F.col(BUCKET_COL)).sortWithinPartitions(*key_cols)
         files: dict[int, list[str]] = {}
-        for d in os.listdir(out):
-            if not d.startswith(f"{BUCKET_COL}="):
-                continue
-            b = int(d.split("=", 1)[1])
-            for fn in sorted(os.listdir(os.path.join(out, d))):
-                if fn.endswith(".parquet"):
-                    files.setdefault(b, []).append(
-                        os.path.relpath(os.path.join(out, d, fn), self.root)
-                    )
+        for rel in self._write_files(w, snapshot_id, BUCKET_COL):
+            b = int(os.path.basename(os.path.dirname(rel)).split("=", 1)[1])
+            files.setdefault(b, []).append(rel)
         return files
 
     def _next_snapshot(self, schema: T.StructType | None):
@@ -338,12 +335,18 @@ class LakeTable:
         touched_buckets: list[int],
         schema: T.StructType | None = None,
         summary: dict | None = None,
-        pre_bucketed: bool = False,
     ) -> int:
         """Merge-on-read commit: APPEND folded delta files (including
         tombstones and fold flags) to the touched buckets — O(delta) bytes
         written, zero existing-data reads. ``read()`` folds base + deltas
         in rank order; ``compact()`` collapses them back to base files.
+
+        The delta is written as it comes, one file per input partition
+        (the fold's AQE-sized shuffle output), with no bucket exchange;
+        each file is listed under every touched bucket with ``n_write`` 1,
+        so a subset read filters it by key hash. Splitting it per bucket
+        would buy nothing: a sizable batch touches every bucket, and
+        compaction re-buckets what it folds.
 
         This is the write path that survives 10^10-event scale: per-batch
         cost is proportional to the batch, and rewrite amplification is
@@ -357,27 +360,20 @@ class LakeTable:
             if f.name not in schema.names and f.name in delta_df.columns
         ]
         delta_schema = T.StructType(list(schema.fields) + extra)
-        new_files = self._write_data_files(
-            delta_df,
-            delta_schema,
-            prev["key_cols"],
-            prev["n_buckets"],
-            new_id,
-            pre_bucketed=pre_bucketed,
-            sort=False,
-        )
+        new_files = self._write_files(delta_df.selectExpr(*_cast_list(delta_schema)), new_id)
         buckets = {b: list(fs) for b, fs in prev["buckets"].items()}
         for b in touched_buckets:
             entry = buckets.setdefault(str(b), [])
-            entry.extend([p, schema_id, new_id, "delta", new_id] for p in new_files.get(b, []))
+            entry.extend([p, schema_id, new_id, "delta", new_id, 1] for p in new_files)
         return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
 
     def delta_depth(self) -> int:
-        """Max number of delta files stacked on any bucket."""
+        """Max number of delta commits stacked on any bucket (a commit may
+        list several files under one bucket)."""
         snap = self.snapshot()
         depth = 0
         for fs in snap["buckets"].values():
-            depth = max(depth, sum(1 for e in fs if _entry(e)[3] == "delta"))
+            depth = max(depth, len({_entry(e)[2] for e in fs if _entry(e)[3] == "delta"}))
         return depth
 
     def compact(self, summary: dict | None = None) -> int:
@@ -606,6 +602,9 @@ class LakeTable:
         returned DataFrame and must not persist it."""
         snap = self.snapshot(sid)
         want = None if buckets is None else tuple(sorted({int(b) for b in buckets}))
+        if want == tuple(range(snap["n_buckets"])):
+            # every bucket: a full read, with no per-row key-hash filter
+            want = None
         key = (snap["id"], want)
         with self._lock:
             hit = self._plans.get(key)
@@ -624,8 +623,8 @@ class LakeTable:
         n_buckets = snap["n_buckets"]
         key_cols = snap["key_cols"]
         # group by (schema, rank, kind, physical bucket count); paths are
-        # deduped because a legacy file (written before a grow_buckets
-        # renumbering) is listed under several child buckets
+        # deduped because a delta file, or a file written before a
+        # grow_buckets renumbering, is listed under several buckets
         groups: dict[tuple[int, int, str, int], set[str]] = {}
         for b, fs in snap["buckets"].items():
             if want is not None and int(b) not in want:
@@ -658,10 +657,10 @@ class LakeTable:
             for i in range(0, len(paths), _SCAN_PATHS_MAX):
                 df = self.spark.read.schema(read_schema).parquet(*paths[i : i + _SCAN_PATHS_MAX])
                 if want is not None and nw != n_buckets:
-                    # legacy-bucketed file in a subset read: keep only the
-                    # keys that map into the requested buckets under the
-                    # CURRENT bucket count (full reads need no filter —
-                    # paths dedup)
+                    # delta or legacy-bucketed file in a subset read: keep
+                    # only the keys that map into the requested buckets
+                    # under the CURRENT bucket count (full reads need no
+                    # filter — paths dedup)
                     df = df.where(
                         f"{bucket_sql(key_cols, n_buckets)} IN ({', '.join(map(str, want))})"
                     )
@@ -675,6 +674,16 @@ class LakeTable:
 def _q(name: str) -> str:
     """Backtick-quote a column name for a SQL expression string."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _cast_list(schema: T.StructType) -> list[str]:
+    """SQL select list casting each field of ``schema`` to its type: one
+    ``selectExpr``, where per-field Column chains (col, cast, alias) cost
+    three JVM calls a column on every write."""
+    return [
+        f"CAST({_q(f.name)} AS {f.dataType.simpleString()}) AS {_q(f.name)}"
+        for f in schema.fields
+    ]
 
 
 def _rank_projection(

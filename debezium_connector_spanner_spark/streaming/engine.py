@@ -1273,12 +1273,7 @@ class CdcReplayEngine:
                 n_salts=n_salts if n_salts is not None else 16,
             )
         else:
-            folded = fold_changes(
-                decoded,
-                schema.key_columns,
-                schema.value_columns,
-                n_buckets=table.n_buckets(),
-            )
+            folded = fold_changes(decoded, schema.key_columns, schema.value_columns)
         # adaptive-skew probe rides the POST-fold rows (one per key, ~10x
         # fewer than raw mods, already being written): hot share is the
         # hottest single key's fraction of the batch's mods, read straight
@@ -1298,7 +1293,7 @@ class CdcReplayEngine:
             summary={"batch_id": batch_id, "attempt": attempt, "table": name},
             mode=self.cfg.sink_mode,
             # statistically every bucket is hit by a sizable batch — skip
-            # the probe job (empty buckets add no files)
+            # the probe job
             assume_all_buckets=True,
         )
         return sid, obs, per_token, fold_obs

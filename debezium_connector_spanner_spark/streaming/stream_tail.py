@@ -83,12 +83,7 @@ def stream_events_into_table(
         if wire_decode is not None:
             df = wire_decode(df)
         decoded = decode_mods(df, schema)
-        folded = fold_changes(
-            decoded,
-            schema.key_columns,
-            schema.value_columns,
-            n_buckets=table.n_buckets(),
-        )
+        folded = fold_changes(decoded, schema.key_columns, schema.value_columns)
         merge_into(
             table,
             folded,

@@ -4,7 +4,10 @@ random base rows), decode -> fold -> MERGE must reproduce a direct
 pandas state-machine simulation — in BOTH fold shapes (fused and
 salted) and BOTH sink modes (MOR delta and CoW rewrite). A second
 property stacks several MOR deltas, with additive schema changes between
-them, and checks current, older-snapshot and bucket-subset reads.
+them, and checks current, older-snapshot and bucket-subset reads. A
+third stacks per-bucket deltas (the earlier delta layout, which tables
+written before shared deltas still hold) under shared ones, and checks
+reads, compaction and snapshot expiry.
 
 Complements the targeted semantics tests with shrinking random
 coverage of the delete-barrier / written-flag / identity-dedup
@@ -30,7 +33,12 @@ from debezium_connector_spanner_spark.sources.event_schema import (
     REPOS_SCHEMA_V2,
     REPOS_SCHEMA_V3,
 )
-from debezium_connector_spanner_spark.sources.lake import LakeTable, bucket_expr
+from debezium_connector_spanner_spark.sources.lake import (
+    DELTA_FLAG_FIELDS,
+    LakeTable,
+    _set_flag_fields,
+    bucket_expr,
+)
 
 KEYS = [("r1", "p1"), ("r1", "p2"), ("r2", "p1")]
 COLS = ["commit", "lang", "content"]
@@ -131,11 +139,7 @@ def _simulate(rows, base_rows, cols=COLS):
 @given(stream=stream_st, base_mask=base_st, salted=st.booleans(), mode=st.sampled_from(["mor", "cow"]))
 def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode):
     rows = _mk_rows(stream)
-    base_rows = [
-        {"repo": KEYS[i][0], "path": KEYS[i][1], "commit": f"b{i}", "lang": None, "content": f"bc{i}"}
-        for i in range(len(KEYS))
-        if base_mask >> i & 1
-    ]
+    base_rows = _base_rows(base_mask)
     want = _simulate(rows, base_rows)
 
     import pandas as pd
@@ -152,6 +156,15 @@ def test_fold_merge_matches_state_machine(spark, stream, base_mask, salted, mode
     t = _base_table(spark, base_rows)
     merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode=mode)
     assert _state(t.read(), COLS) == want, (salted, mode, rows)
+
+
+def _base_rows(base_mask):
+    """Base-table rows for the KEYS selected by ``base_mask``."""
+    return [
+        {"repo": KEYS[i][0], "path": KEYS[i][1], "commit": f"b{i}", "lang": None, "content": f"bc{i}"}
+        for i in range(len(KEYS))
+        if base_mask >> i & 1
+    ]
 
 
 def _base_table(spark, base_rows):
@@ -175,6 +188,25 @@ def _base_table(spark, base_rows):
 
 def _state(df, cols):
     return {(r["repo"], r["path"]): {c: r[c] for c in cols} for r in df.collect()}
+
+
+def _bucket_of(spark):
+    """KEYS -> bucket in a 2-bucket table."""
+    return {
+        (r["repo"], r["path"]): r["b"]
+        for r in spark.createDataFrame(KEYS, ["repo", "path"])
+        .select("repo", "path", bucket_expr(["repo", "path"], 2).alias("b"))
+        .collect()
+    }
+
+
+def _fold_batch(spark, batch, schema=REPOS_SCHEMA_V1):
+    import pandas as pd
+
+    pdf = pd.DataFrame(batch)
+    pdf["commit_ts"] = pd.to_datetime(pdf["commit_ts"], unit="us")
+    decoded = decode_mods(spark.createDataFrame(pdf, EVENT_LOG_SCHEMA), schema)
+    return fold_changes(decoded, ["repo", "path"], schema.value_columns)
 
 
 # V1 -> V2 adds stars INT64, V2 -> V3 widens it to FLOAT64
@@ -204,20 +236,9 @@ def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, su
     """Stacked MOR deltas fold in (ts, rank) order: after each batch, the
     current read, a read of an older snapshot and a bucket-subset read
     each equal the state machine at that point of the log."""
-    base_rows = [
-        {"repo": KEYS[i][0], "path": KEYS[i][1], "commit": f"b{i}", "lang": None, "content": f"bc{i}"}
-        for i in range(len(KEYS))
-        if base_mask >> i & 1
-    ]
+    base_rows = _base_rows(base_mask)
     t = _base_table(spark, base_rows)
-    bucket = {
-        (r["repo"], r["path"]): r["b"]
-        for r in spark.createDataFrame(KEYS, ["repo", "path"])
-        .select("repo", "path", bucket_expr(["repo", "path"], 2).alias("b"))
-        .collect()
-    }
-
-    import pandas as pd
+    bucket = _bucket_of(spark)
 
     version = 0
     rows = []
@@ -228,10 +249,7 @@ def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, su
         schema = SCHEMAS[version]
         batch = _mk_rows(stream, schema, first=len(rows), tie=tie)
         rows += batch
-        pdf = pd.DataFrame(batch)
-        pdf["commit_ts"] = pd.to_datetime(pdf["commit_ts"], unit="us")
-        decoded = decode_mods(spark.createDataFrame(pdf, EVENT_LOG_SCHEMA), schema)
-        folded = fold_changes(decoded, ["repo", "path"], schema.value_columns)
+        folded = _fold_batch(spark, batch, schema)
         sid, _ = merge_into(t, folded, target_schema=schema.spark_struct(), mode="mor")
         cols = schema.value_columns
         want = {k: {c: v[c] for c in cols} for k, v in _simulate(rows, base_rows, ALL_COLS).items()}
@@ -242,3 +260,78 @@ def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, su
         assert _state(t.read(sid=old_sid), old_cols) == old_want, ("older", old_sid, rows)
         sub = {k: v for k, v in want.items() if bucket[k] in subset}
         assert _state(t.read(buckets=sorted(subset)), cols) == sub, ("subset", subset, rows)
+
+
+def _per_bucket_mor_commit(t, folded):
+    """Commit ``folded`` in the earlier merge-on-read layout: one delta
+    file per key bucket, listed under that bucket only, as a 5-field
+    manifest entry (no ``n_write``)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    keys = ["repo", "path"]
+    schema = T.StructType(
+        REPOS_SCHEMA_V1.spark_struct().fields + [T.StructField("__cdc_ts", T.LongType())]
+    )
+    delta = folded.select(
+        *keys,
+        *COLS,
+        F.col("_ts").cast("long").alias("__cdc_ts"),
+        "_is_delete",
+        "_had_delete",
+        *[F.col(f"_w_{c}").alias(f"__set_{c}") for c in COLS],
+    )
+    prev, sid, _schema, schema_id, schemas = t._next_snapshot(schema)
+    delta_schema = T.StructType(
+        schema.fields + DELTA_FLAG_FIELDS + _set_flag_fields(schema, keys)
+    )
+    files = t._write_data_files(delta, delta_schema, keys, prev["n_buckets"], sid)
+    buckets = {b: list(fs) for b, fs in prev["buckets"].items()}
+    for b, paths in files.items():
+        buckets.setdefault(str(b), []).extend([p, schema_id, sid, "delta", sid] for p in paths)
+    return t._finish_snapshot(prev, sid, schema_id, schemas, buckets, {})
+
+
+@settings(max_examples=4, deadline=None)
+@given(
+    batches=st.lists(st.lists(event_st, min_size=1, max_size=8), min_size=3, max_size=4),
+    n_per_bucket=st.integers(1, 2),
+    base_mask=base_st,
+)
+def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, base_mask):
+    """Per-bucket deltas followed by shared ones (a table written before
+    shared deltas, then resumed): full, bucket-subset and older-snapshot
+    reads, a compaction prepared between the two layouts and applied
+    after both, a full compaction and snapshot expiry each equal the
+    state machine."""
+    base_rows = _base_rows(base_mask)
+    t = _base_table(spark, base_rows)
+    bucket = _bucket_of(spark)
+    rows = []
+    history = [(t.current_snapshot_id(), _simulate([], base_rows))]
+    prep = None
+    for i, stream in enumerate(batches):
+        if i == n_per_bucket:
+            prep = t.compact_prepare()
+        batch = _mk_rows(stream, first=len(rows))
+        rows += batch
+        folded = _fold_batch(spark, batch)
+        if i < n_per_bucket:
+            sid = _per_bucket_mor_commit(t, folded)
+        else:
+            sid, _ = merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
+        history.append((sid, _simulate(rows, base_rows)))
+
+    want = history[-1][1]
+    assert _state(t.read(), COLS) == want, rows
+    for b in (0, 1):
+        sub = {k: v for k, v in want.items() if bucket[k] == b}
+        assert _state(t.read(buckets=[b]), COLS) == sub, ("subset", b, rows)
+    for sid, old_want in history[:-1]:
+        assert _state(t.read(sid=sid), COLS) == old_want, ("older", sid, rows)
+    t.compact_apply(prep)
+    assert _state(t.read(), COLS) == want, ("rebased compaction", rows)
+    t.compact()
+    assert t.delta_depth() == 0
+    t.expire_snapshots(t.current_snapshot_id())
+    assert _state(t.read(), COLS) == want, ("compacted + expired", rows)

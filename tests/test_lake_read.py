@@ -6,6 +6,8 @@
 - building a read launches no Spark job: no schema inference, and no
   parallel file listing, also when a file group holds more paths than
   Spark's listing threshold (a 64-bucket table)
+- a merge-on-read delta's files are each listed under every touched
+  bucket, and count as one delta commit
 """
 
 import os
@@ -23,10 +25,14 @@ KEYS = ["repo", "path"]
 SCHEMA = REPOS_SCHEMA_V1.spark_struct()
 
 
-def _commit(t, spark, rows):
-    """One merge-on-read delta upserting ``rows`` [(repo, path, commit)];
-    it carries no commit ts, so it folds over earlier ones by rank."""
-    df = spark.createDataFrame(rows, ["repo", "path", "commit"]).select(
+def _commit(t, spark, rows, partitions=None):
+    """One merge-on-read delta upserting ``rows`` [(repo, path, commit)],
+    written from ``partitions`` input partitions when given; it carries
+    no commit ts, so it folds over earlier ones by rank."""
+    df = spark.createDataFrame(rows, ["repo", "path", "commit"])
+    if partitions is not None:
+        df = df.repartition(partitions)
+    df = df.select(
         "repo",
         "path",
         "commit",
@@ -93,6 +99,28 @@ def test_expire_snapshots_drops_their_read_plans(spark, tmp_root):
     assert _commits(t.read()) == [("r1", "p1", "c2")]
 
 
+def test_mor_commit_lists_each_delta_file_under_every_bucket(spark, tmp_root):
+    """A merge-on-read delta is written unbucketed: each of its files is
+    listed under every touched bucket with n_write 1, the commit raises
+    delta_depth() by exactly one however many files it wrote, and subset
+    reads still partition the key space."""
+    t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=4)
+    _commit(t, spark, [("r0", "p0", "a")])
+    depth = t.delta_depth()
+    rows = [(f"r{i}", f"p{i}", "d") for i in range(40)]
+    sid = _commit(t, spark, rows, partitions=3)
+    entries = {b: [e for e in fs if e[2] == sid] for b, fs in t.snapshot()["buckets"].items()}
+    files = sorted(e[0] for e in entries["0"])
+    assert len(files) >= 2
+    assert sorted(entries) == ["0", "1", "2", "3"]
+    for fs in entries.values():
+        assert sorted(e[0] for e in fs) == files
+        assert all(e[3] == "delta" and e[5] == 1 for e in fs)
+    assert t.delta_depth() == depth + 1
+    assert _commits(t.read()) == sorted(rows)
+    assert sum(t.read(buckets=[b]).count() for b in range(4)) == len(rows)
+
+
 def test_read_build_launches_no_spark_job(spark, tmp_root):
     root = os.path.join(tmp_root, "t")
     base = spark.createDataFrame(
@@ -110,8 +138,9 @@ def test_read_build_launches_no_spark_job(spark, tmp_root):
 
 
 def test_64_bucket_read_launches_no_listing_job(spark, tmp_root):
-    """Each file group of a 64-bucket table passes 64 paths, above Spark's
-    parallel-listing threshold (32); read() must still list on the driver."""
+    """The base file group of a 64-bucket table passes 64 paths, above
+    Spark's parallel-listing threshold (32); read() must still list on the
+    driver."""
     root = os.path.join(tmp_root, "t")
     base = spark.createDataFrame(
         [(f"r{i}", f"p{i}", "b", "go", "c") for i in range(2_000)], SCHEMA
@@ -119,7 +148,7 @@ def test_64_bucket_read_launches_no_listing_job(spark, tmp_root):
     t = LakeTable.create(spark, root, SCHEMA, KEYS, n_buckets=64, initial_df=base)
     _commit(t, spark, [(f"r{i}", f"p{i}", "d") for i in range(2_000)])
     snap = t.snapshot()
-    assert sum(e[3] == "delta" for fs in snap["buckets"].values() for e in fs) == 64
+    assert len({e[0] for fs in snap["buckets"].values() for e in fs if e[3] == "base"}) == 64
     df, jobs = _build_jobs(spark, LakeTable(spark, root).read)
     assert jobs == set()
     assert df.where(F.col("commit") == "d").count() == 2_000

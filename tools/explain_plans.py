@@ -100,8 +100,7 @@ def main():
         & (F.col("commit_ts") <= F.timestamp_micros(F.lit(hi)))
     )
     folded = fold_changes(
-        decode_mods(sl, REPOS_SCHEMA_V1), ["repo", "path"], ["commit", "lang", "content"],
-        n_buckets=16,
+        decode_mods(sl, REPOS_SCHEMA_V1), ["repo", "path"], ["commit", "lang", "content"]
     )
     plan = plan_of(folded)
     out.append(summarize("cdc_decode_fold (one batch slice)", plan))
@@ -112,17 +111,19 @@ def main():
     out.append(
         "### SortAggregate fold: measured against the window alternative\n\n"
         "Struct-typed `max` has no mutable hash-agg buffer, so the fold plans\n"
-        "as SortAggregate (the per-partition Sort above). Measured alternative\n"
-        "(`tools/bench_fold_alternatives.py`, 4.1M events / 504k keys folded,\n"
-        "local[32], noop sink, 3 reps):\n\n"
+        "as SortAggregate (the per-partition Sorts above). Measured alternative\n"
+        "(a noop-sink comparison script, since deleted; 4.1M events / 504k keys\n"
+        "folded, local[32], 3 reps, with the fold then grouping by key bucket\n"
+        "too):\n\n"
         "| strategy | best | all reps |\n|---|---|---|\n"
-        "| agg fold (current, SortAggregate) | 8.83 s | 10.22 / 8.83 / 9.23 |\n"
+        "| agg fold (SortAggregate, bucket-fused) | 8.83 s | 10.22 / 8.83 / 9.23 |\n"
         "| window fold (`last OVER` + row_number) | 8.51 s | 9.45 / 8.51 / 12.0 |\n\n"
         "A wash at this scale — but the agg fold admits map-side partial\n"
-        "aggregation when input is not pre-bucketed (shuffle shrinks by the\n"
-        "intra-batch key-repeat factor), while a window always ships every raw\n"
-        "event across the shuffle and materializes the full frame per key. At\n"
-        "100 TB the agg fold's shuffle is strictly smaller; kept.\n"
+        "aggregation (the partial SortAggregate below the Exchange above: the\n"
+        "shuffle shrinks by the intra-batch key-repeat factor), while a window\n"
+        "always ships every raw event across the shuffle and materializes the\n"
+        "full frame per key. At 100 TB the agg fold's shuffle is strictly\n"
+        "smaller; kept.\n"
     )
 
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
