@@ -96,7 +96,7 @@ class EngineConfig:
     # double them later)
     n_buckets: int = 16
     # 'mor' appends folded delta files and compacts them in the
-    # maintenance lane; 'cow' rewrites touched buckets per batch. Each is
+    # maintenance lane; 'cow' rewrites every bucket per batch. Each is
     # the other's check in the tests.
     sink_mode: str = "mor"
     # 'adaptive': per batch per table, pick the fused single-shuffle fold

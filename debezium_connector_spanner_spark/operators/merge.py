@@ -44,10 +44,9 @@ are absorbed because every aggregate is max-based (idempotent) — the
 explicit dropDuplicates shuffle is reserved for the envelope-emission
 path (operators/decode.py dedup_identity).
 
-MERGE appends the folded batch as merge-on-read delta files by default;
-copy-on-write reads and rewrites only the buckets containing changed
-keys (sources/lake.py), keeping batch cost O(delta), not O(table), at
-10^10-event scale.
+MERGE appends the folded batch as merge-on-read delta files by default,
+keeping batch cost O(delta), not O(table), at 10^10-event scale;
+copy-on-write reads and rewrites every bucket (sources/lake.py).
 
 Reference parity: replaces the Kafka emit + commit-callback machinery
 (/root/reference processor/SpannerChangeRecordEmitter.java:54-129,
@@ -61,7 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_connector_spanner_spark.sources.lake import LakeTable, bucket_expr
+from debezium_connector_spanner_spark.sources.lake import LakeTable
 
 CDC_TS_COL = "__cdc_ts"  # last applied commit_ts (epoch micros) per row
 
@@ -176,8 +175,7 @@ def merge_into(
     target_schema=None,
     summary: dict | None = None,
     mode: str = "mor",
-    assume_all_buckets: bool = False,
-) -> tuple[int, list[int]]:
+) -> int:
     """MERGE a folded batch into the table.
 
     Equivalent to:
@@ -186,19 +184,20 @@ def merge_into(
         WHEN MATCHED THEN UPDATE SET <fold-aware column merge>
         WHEN NOT MATCHED AND NOT s._is_delete THEN INSERT
 
-    Two physical strategies:
+    Both strategies take every bucket: a sizable batch hits them all, so
+    finding the touched ones would cost a probe job and buy nothing.
     - ``mor`` (default): append the folded batch (tombstones included) as
-      delta files on the touched buckets — O(batch) bytes written, no
+      delta files listed under every bucket — O(batch) bytes written, no
       reads; the key fold happens at read/compaction time
       (sources/lake.py fold_ranked). The scale path: per-batch IO is
       proportional to the delta, with rewrite amplification paid only at
       compaction cadence.
-    - ``cow``: read touched buckets, full-outer merge, rewrite — lowest
-      read cost, O(touched buckets) write per batch.
+    - ``cow``: read the table, full-outer merge, rewrite — lowest read
+      cost, O(table) write per batch.
 
     ``target_schema`` (StructType) may extend/widen the table schema —
     online additive schema evolution applied with the same commit.
-    Returns (new_snapshot_id, touched_buckets).
+    Returns the new snapshot id.
     """
     key_cols = table.key_cols()
     schema = target_schema or table.schema()
@@ -206,23 +205,6 @@ def merge_into(
     value_cols = [
         f.name for f in schema.fields if f.name not in key_cols and f.name != CDC_TS_COL
     ]
-
-    persisted = False
-    if assume_all_buckets:
-        # large batch: statistically every bucket is touched — skip the
-        # probe job entirely
-        touched = list(range(table.n_buckets()))
-    else:
-        # touched-bucket set is tiny (<= n_buckets): cheap driver collect
-        # that buys O(delta) instead of O(table) per batch. Persist so the
-        # decode+fold shuffle isn't recomputed by the write.
-        folded = folded.persist()
-        persisted = True
-        b = bucket_expr(key_cols, table.n_buckets())
-        touched = sorted(r[0] for r in folded.select(b).distinct().collect())
-        if not touched:
-            folded.unpersist()
-            return table.current_snapshot_id(), []
 
     from pyspark.sql import types as T
 
@@ -252,15 +234,10 @@ def merge_into(
             "_had_delete",
             *[wflag(c).alias(f"__set_{c}") for c in value_cols],
         )
-        try:
-            sid = table.commit_delta(delta, touched, schema=write_schema, summary=summary)
-        finally:
-            if persisted:
-                folded.unpersist()
-        return sid, touched
+        return table.commit_delta(delta, schema=write_schema, summary=summary)
 
     target_types = {f.name: f.dataType for f in schema.fields}
-    existing = table.read(buckets=touched).select(
+    existing = table.read().select(
         *key_cols,
         *[
             (F.col(c) if c in existing_names else F.lit(None))
@@ -304,9 +281,4 @@ def merge_into(
     )
     merged = j.select(*out)
 
-    try:
-        sid = table.commit_merge(merged, touched, schema=write_schema, summary=summary)
-    finally:
-        if persisted:
-            folded.unpersist()
-    return sid, touched
+    return table.commit_merge(merged, schema=write_schema, summary=summary)

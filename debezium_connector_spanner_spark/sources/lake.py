@@ -10,12 +10,11 @@ lake-table semantics the CDC sink needs, with the same scale properties:
   crashed writer leaves orphan files that are never referenced
   (exactly-once).
 - **Bucketed copy-on-write MERGE**: rows are hash-bucketed on the primary
-  key. A batch only rewrites the buckets it touches; untouched buckets'
-  file lists are carried forward by reference. At 100 TB this is the
-  difference between O(delta) and O(table) per batch.
+  key, and a copy-on-write commit rewrites every bucket: O(table) per
+  batch, where a merge-on-read delta costs O(delta).
 - **Unbucketed merge-on-read deltas**: a delta commit writes one file per
-  fold output partition and lists each file under every bucket it
-  touches (``n_write`` 1). Subset reads filter such files by key hash;
+  fold output partition and lists each file under every bucket
+  (``n_write`` 1). Subset reads filter such files by key hash;
   base files, written by create, copy-on-write and compaction, stay one
   file per bucket.
 - **Additive schema evolution with cast-on-read**: each data file group
@@ -310,41 +309,36 @@ class LakeTable:
     def commit_merge(
         self,
         merged_df: DataFrame,
-        touched_buckets: list[int],
         schema: T.StructType | None = None,
         summary: dict | None = None,
     ) -> int:
-        """Copy-on-write commit: rewrite touched buckets from merged_df,
-        carry untouched buckets forward by reference."""
+        """Copy-on-write commit: rewrite every bucket from merged_df."""
         prev, new_id, schema, schema_id, schemas = self._next_snapshot(schema)
         new_files = self._write_data_files(
             merged_df, schema, prev["key_cols"], prev["n_buckets"], new_id
         )
         buckets = {
-            b: fs for b, fs in prev["buckets"].items() if int(b) not in set(touched_buckets)
+            str(b): [[p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])]
+            for b in range(prev["n_buckets"])
         }
-        for b in touched_buckets:
-            buckets[str(b)] = [
-                [p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])
-            ]
         return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
 
     def commit_delta(
         self,
         delta_df: DataFrame,
-        touched_buckets: list[int],
         schema: T.StructType | None = None,
         summary: dict | None = None,
     ) -> int:
         """Merge-on-read commit: APPEND folded delta files (including
-        tombstones and fold flags) to the touched buckets — O(delta) bytes
+        tombstones and fold flags) to every bucket — O(delta) bytes
         written, zero existing-data reads. ``read()`` folds base + deltas
-        in rank order; ``compact()`` collapses them back to base files.
+        in rank order; ``compact_prepare`` + ``compact_apply`` collapse
+        them back to base files.
 
         The delta is written as it comes, one file per input partition
         (the fold's AQE-sized shuffle output), with no bucket exchange;
-        each file is listed under every touched bucket with ``n_write`` 1,
-        so a subset read filters it by key hash. Splitting it per bucket
+        each file is listed under every bucket with ``n_write`` 1, so a
+        subset read filters it by key hash. Splitting it per bucket
         would buy nothing: a sizable batch touches every bucket, and
         compaction re-buckets what it folds.
 
@@ -362,7 +356,7 @@ class LakeTable:
         delta_schema = T.StructType(list(schema.fields) + extra)
         new_files = self._write_files(delta_df.selectExpr(*_cast_list(delta_schema)), new_id)
         buckets = {b: list(fs) for b, fs in prev["buckets"].items()}
-        for b in touched_buckets:
+        for b in range(prev["n_buckets"]):
             entry = buckets.setdefault(str(b), [])
             entry.extend([p, schema_id, new_id, "delta", new_id, 1] for p in new_files)
         return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
@@ -375,15 +369,6 @@ class LakeTable:
         for fs in snap["buckets"].values():
             depth = max(depth, len({_entry(e)[2] for e in fs if _entry(e)[3] == "delta"}))
         return depth
-
-    def compact(self, summary: dict | None = None) -> int:
-        """Synchronous compaction: prepare against the current snapshot
-        and apply it at once. Returns the current snapshot id when no
-        bucket holds a delta."""
-        prep = self.compact_prepare()
-        if prep is None:
-            return self.current_snapshot_id()
-        return self.compact_apply(prep, summary)
 
     def compact_prepare(self, sid: int | None = None) -> dict | None:
         """Phase 1 of ASYNC compaction (the maintenance-lane shape real

@@ -1,7 +1,7 @@
 """The CDC replay engine: incremental micro-batches over the change log.
 
-Structured-Streaming-style tail with a driver-side partition-DAG state
-machine. Per batch (reference parity in parentheses, files under
+Checkpointed, time-windowed micro-batches with a driver-side partition-DAG
+state machine. Per batch (reference parity in parentheses, files under
 /root/reference):
 
 1. **Gate** (O1, task/operation/FindPartitionForStreamingOperation.java:32-76):
@@ -84,7 +84,6 @@ from debezium_connector_spanner_spark.sources.event_schema import (
 )
 from debezium_connector_spanner_spark.sources.lake import LakeTable, atomic_write
 from debezium_connector_spanner_spark.session import local_frame
-from debezium_connector_spanner_spark.streaming.task_scaler import TaskScaler
 
 CREATED, READY, FINISHED = "CREATED", "READY", "FINISHED"
 # states mirror kafka/internal/model/PartitionStateEnum.java:8-21 collapsed
@@ -104,24 +103,12 @@ COMPACT_EVERY = 6
 GC_EVERY = 8
 GC_KEEP = 4
 # adaptive skew: salt the fold when the previous batch's hottest key held
-# at least this share of a table's mods. The measured crossover
-# (BENCH_SCALING.md skew table: salted wins at ~79% on one key, loses at
-# ~49%) sits around 2/3.
+# at least this share of a table's mods. The measured crossover at
+# local[16] (BENCH_SCALING.md skew table: salted wins at ~79% on one key,
+# loses at ~49%) sits around 2/3. At local[4] (same file) salted/fused
+# throughput was 0.95 at a 49% hot key and 0.92 at 79%: salting won at
+# neither.
 SKEW_THRESHOLD = 0.6
-# C5 task auto-scaler (task/scaler/TaskScaleCalculator.java:20-47):
-# per-batch worker-width grant for variable-width work — the salt spread
-# of the hot-key fold. Grows +20%/step while active work units per worker
-# > DESIRED_TOKENS_PER_TASK, halves when >50% idle, bounded
-# [SCALER_MIN, defaultParallelism] (a salt spread past the core count
-# only adds combine work).
-SCALER_MIN = 2
-DESIRED_TOKENS_PER_TASK = 2
-# one "partition of work" is EITHER a live change-stream token or
-# EVENTS_PER_TASK_TARGET predicted change events (K3 rate model): the
-# reference's task unit is a streamed partition, but a Spark reducer's
-# unit is rows — a 3-token mega-key batch still needs a wide grant. 64k
-# events/worker keeps task granularity ~100ms.
-EVENTS_PER_TASK_TARGET = 65536
 # S1 scan pruning: above this many active tokens the literal IN-list
 # predicate is skipped and token filtering rides the (already present)
 # broadcast offsets equi-join — dynamic partition pruning then prunes
@@ -226,12 +213,9 @@ class CdcReplayEngine:
         # K3 sizing rate model: EMA of observed change events per µs of
         # window, checkpointed so a resumed engine keeps its calibration
         self._rate_ev_per_us: float | None = None
-        self._scaler = TaskScaler(
-            tasks_min=SCALER_MIN,
-            tasks_max=spark.sparkContext.defaultParallelism,
-            desired_partitions_per_task=DESIRED_TOKENS_PER_TASK,
-            current=SCALER_MIN,
-        )
+        # how many ways the salted fold shards a hot key: one per core (a
+        # spread past the core count only adds combine work)
+        self._salt_width = spark.sparkContext.defaultParallelism
 
         # normalize the single-table legacy shape to the multi-table one
         if tables is None:
@@ -298,13 +282,6 @@ class CdcReplayEngine:
             self.watermark_us = ckpt["watermark_us"]
             self._rate_ev_per_us = ckpt.get("rate_ev_per_us")
             self._hot_share = ckpt.get("hot_share", {})
-            sc = ckpt.get("scaler")
-            if sc:  # resumed scaler keeps its grant (no cold restart dip)
-                self._scaler.current = max(
-                    self._scaler.tasks_min,
-                    min(self._scaler.tasks_max, sc["current"]),
-                )
-                self._scaler._prev_active = sc["prev_active"]
         self.metrics_path = os.path.join(checkpoint_dir, "metrics.jsonl")
         # M1-M3 counter/gauge/sketch surface (SpannerMeter.java:298-384);
         # snapshots ride every metrics jsonl line
@@ -453,10 +430,6 @@ class CdcReplayEngine:
             "watermark_us": self.watermark_us,
             "rate_ev_per_us": self._rate_ev_per_us,
             "hot_share": self._hot_share,
-            "scaler": {
-                "current": self._scaler.current,
-                "prev_active": self._scaler._prev_active,
-            },
             "tables": {
                 n: {
                     "schema_cols": st.schema.column_types_json(),
@@ -518,17 +491,6 @@ class CdcReplayEngine:
             ):
                 s.state = READY
         return [t for t, s in self.tokens.items() if s.state == READY]
-
-    def _work_units(self, active: list[str], batch_end_us: int) -> int:
-        """C5 scaler input: partitions of work this batch — live tokens,
-        or predicted-event chunks of ``EVENTS_PER_TASK_TARGET`` (K3 rate
-        model) when volume demands more workers than the token count
-        implies (a 3-token mega-key batch still needs a wide grant)."""
-        units = len(active)
-        if self._rate_ev_per_us:
-            predicted = self._rate_ev_per_us * max(0, batch_end_us - self.frontier_us)
-            units = max(units, -(-int(predicted) // EVENTS_PER_TASK_TARGET))
-        return units
 
     def _probe_count(self, active: list[str], batch_end_us: int) -> int:
         """Cheap row-count probe of the would-be batch window (row-group
@@ -789,13 +751,6 @@ class CdcReplayEngine:
         t0 = time.monotonic()
         timings: dict[str, float] = {}
         active = self._gate()
-        # C5: one scaling decision per batch; the grant widens the salted
-        # folds' worker width. The width floor (16, the pre-scaler static
-        # salt spread) guards the cold start: before the rate model
-        # calibrates, work units undercount a mega-key batch, and salting
-        # narrower than ~16 ways never wins on >=16 cores.
-        tasks = self._scaler.step(self._work_units(active, batch_end_us))
-        salt_width = max(min(16, self._scaler.tasks_max), tasks)
         scan = self._active_scan(active, batch_end_us) if active else None
         if scan is not None:
             self.meter.on_query()  # one change-stream query per batch window
@@ -821,9 +776,9 @@ class CdcReplayEngine:
             # the control rows (heartbeats / child partitions / end
             # markers, ~2% of records) and the distinct data-row
             # (table, column_types) pairs. Each merge's first action is a
-            # whole-scan write (assume_all_buckets), so the observation is
-            # complete when the merges return (an empty slice included:
-            # _run turns off AQE's empty-stage pruning). ---
+            # whole-scan write (merge_into takes every bucket), so the
+            # observation is complete when the merges return (an empty
+            # slice included: _run turns off AQE's empty-stage pruning). ---
             is_data = F.col("record_type") == DATA_CHANGE
             scan_obs = Observation(f"scan-{batch_id}")
             scan = scan.observe(
@@ -918,7 +873,6 @@ class CdcReplayEngine:
                         active,
                         0,
                         salted_tables[n],
-                        salt_width,
                     )
                     for n in merge_tables
                 }
@@ -968,7 +922,6 @@ class CdcReplayEngine:
                         active,
                         attempt=1,
                         use_salted=salted_tables[name],
-                        n_salts=salt_width,
                     )
                     timings["schema_retry_s"] = round(time.monotonic() - t_retry, 3)
                 snapshot_ids[name] = attempts[name][0]
@@ -1183,7 +1136,6 @@ class CdcReplayEngine:
             "requeried_tokens": requeried,
             "salted_tables": salted_used,
             "hot_share": dict(self._hot_share),
-            "tasks": tasks,
             "snapshot_id": snapshot_ids.get(primary),
             "snapshot_ids": snapshot_ids,
             "wall_s": round(wall, 4),
@@ -1232,7 +1184,6 @@ class CdcReplayEngine:
         active: list[str],
         attempt: int,
         use_salted: bool = False,
-        n_salts: int | None = None,
     ):
         """decode -> fold -> MERGE one table with per-token lineage
         Observation.
@@ -1269,8 +1220,7 @@ class CdcReplayEngine:
                 decoded,
                 schema.key_columns,
                 schema.value_columns,
-                # C5 grant: how many ways a hot key shards this batch
-                n_salts=n_salts if n_salts is not None else 16,
+                n_salts=self._salt_width,
             )
         else:
             folded = fold_changes(decoded, schema.key_columns, schema.value_columns)
@@ -1286,15 +1236,12 @@ class CdcReplayEngine:
                 F.max("_n_mods").alias("_max_key_mods"),
                 F.sum("_n_mods").alias("_sum_key_mods"),
             )
-        sid, _ = merge_into(
+        sid = merge_into(
             table,
             folded,
             target_schema=schema.spark_struct(),
             summary={"batch_id": batch_id, "attempt": attempt, "table": name},
             mode=self.cfg.sink_mode,
-            # statistically every bucket is hit by a sizable batch — skip
-            # the probe job
-            assume_all_buckets=True,
         )
         return sid, obs, per_token, fold_obs
 

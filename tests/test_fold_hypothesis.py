@@ -250,7 +250,7 @@ def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, su
         batch = _mk_rows(stream, schema, first=len(rows), tie=tie)
         rows += batch
         folded = _fold_batch(spark, batch, schema)
-        sid, _ = merge_into(t, folded, target_schema=schema.spark_struct(), mode="mor")
+        sid = merge_into(t, folded, target_schema=schema.spark_struct(), mode="mor")
         cols = schema.value_columns
         want = {k: {c: v[c] for c in cols} for k, v in _simulate(rows, base_rows, ALL_COLS).items()}
         history.append((sid, cols, want))
@@ -319,7 +319,7 @@ def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, b
         if i < n_per_bucket:
             sid = _per_bucket_mor_commit(t, folded)
         else:
-            sid, _ = merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
+            sid = merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
         history.append((sid, _simulate(rows, base_rows)))
 
     want = history[-1][1]
@@ -331,7 +331,7 @@ def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, b
         assert _state(t.read(sid=sid), COLS) == old_want, ("older", sid, rows)
     t.compact_apply(prep)
     assert _state(t.read(), COLS) == want, ("rebased compaction", rows)
-    t.compact()
+    t.compact_apply(t.compact_prepare())
     assert t.delta_depth() == 0
     t.expire_snapshots(t.current_snapshot_id())
     assert _state(t.read(), COLS) == want, ("compacted + expired", rows)

@@ -6,8 +6,8 @@
 - building a read launches no Spark job: no schema inference, and no
   parallel file listing, also when a file group holds more paths than
   Spark's listing threshold (a 64-bucket table)
-- a merge-on-read delta's files are each listed under every touched
-  bucket, and count as one delta commit
+- a merge-on-read delta's files are each listed under every bucket, and
+  count as one delta commit
 """
 
 import os
@@ -41,7 +41,7 @@ def _commit(t, spark, rows, partitions=None):
         F.lit(False).alias("_is_delete"),
         F.lit(False).alias("_had_delete"),
     )
-    return t.commit_delta(df, list(range(t.n_buckets())))
+    return t.commit_delta(df)
 
 
 def _commits(df):
@@ -101,7 +101,7 @@ def test_expire_snapshots_drops_their_read_plans(spark, tmp_root):
 
 def test_mor_commit_lists_each_delta_file_under_every_bucket(spark, tmp_root):
     """A merge-on-read delta is written unbucketed: each of its files is
-    listed under every touched bucket with n_write 1, the commit raises
+    listed under every bucket with n_write 1, the commit raises
     delta_depth() by exactly one however many files it wrote, and subset
     reads still partition the key space."""
     t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=4)

@@ -9,8 +9,11 @@ Every restart is a brand-new engine object resuming purely from the
 persisted checkpoint (no shared in-memory state), with engine knobs
 (skew mode, sink mode, batch sizing) drawn from the same seed so the
 property covers the configuration cross-product over rounds of runs.
+One trial also resumes from checkpoints that carry the `scaler` key an
+earlier engine version wrote, which the loader must ignore.
 """
 
+import json
 import os
 import random
 
@@ -26,9 +29,23 @@ from debezium_connector_spanner_spark.sources.event_schema import REPOS_SCHEMA_V
 from debezium_connector_spanner_spark.streaming.engine import CdcReplayEngine
 
 
-def _run_with_crashes(spark, fx, root, cfg, n_batches, crash_after, **kw):
+def _add_to_latest_checkpoint(ckpt_dir, extra):
+    """Merge ``extra`` into the checkpoint LATEST names."""
+    with open(os.path.join(ckpt_dir, "LATEST")) as f:
+        path = os.path.join(ckpt_dir, f.read().strip())
+    with open(path) as f:
+        state = json.load(f)
+    state.update(extra)
+    with open(path, "w") as f:
+        json.dump(state, f)
+
+
+def _run_with_crashes(
+    spark, fx, root, cfg, n_batches, crash_after, ckpt_extra=None, **kw
+):
     """Replay to completion, 'crashing' (dropping the engine) after each
-    prefix length in crash_after. Returns the final engine."""
+    prefix length in crash_after. ``ckpt_extra`` keys are merged into the
+    newest checkpoint before each resume. Returns the final engine."""
     base = spark.read.parquet(os.path.join(fx, "base_repos.parquet"))
     end_us = EPOCH_MICROS + cfg.duration_s * 1_000_000
 
@@ -55,6 +72,8 @@ def _run_with_crashes(spark, fx, root, cfg, n_batches, crash_after, **kw):
             continue
         eng.run(max_batches=step)
         done = k
+        if ckpt_extra:
+            _add_to_latest_checkpoint(os.path.join(root, "c"), ckpt_extra)
         eng = mk(False)  # crash: new object, checkpoint-only resume
     eng.run()  # drain to the end
     return eng
@@ -148,8 +167,11 @@ def test_random_crash_schedules_reproduce_oracle(spark, tmp_root):
         if rng.random() < 0.5:
             kw["max_events_per_batch"] = rng.choice([150, 400])
         root = os.path.join(tmp_root, f"run{trial}")
+        # trial 0 resumes from checkpoints carrying the retired task
+        # scaler's state (no RNG draw, so the schedule is unchanged)
+        extra = {"scaler": {"current": 4, "prev_active": 2}} if trial == 0 else None
         eng = _run_with_crashes(
-            spark, fx, root, cfg, n_batches, crash_after, **kw
+            spark, fx, root, cfg, n_batches, crash_after, ckpt_extra=extra, **kw
         )
         got = (
             eng.final_state()
@@ -165,7 +187,7 @@ def test_random_crash_schedules_reproduce_oracle(spark, tmp_root):
         pd.testing.assert_frame_equal(
             got[want.columns.tolist()],
             want,
-            obj=f"trial {trial} crashes={crash_after} kw={kw}",
+            obj=f"trial {trial} crashes={crash_after} kw={kw} ckpt_extra={extra}",
         )
 
 

@@ -172,7 +172,7 @@ def test_mor_fold_out_of_order_batches(spark, tmp_root):
     merge_into(t, batch(1_000, "older"), target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
     assert t.read().collect()[0]["commit"] == "newer"
     # and compaction preserves the resolution
-    t.compact()
+    t.compact_apply(t.compact_prepare())
     assert t.read().collect()[0]["commit"] == "newer"
 
 
