@@ -187,8 +187,8 @@ def merge_into(
     Both strategies take every bucket: a sizable batch hits them all, so
     finding the touched ones would cost a probe job and buy nothing.
     - ``mor`` (default): append the folded batch (tombstones included) as
-      delta files listed under every bucket — O(batch) bytes written, no
-      reads; the key fold happens at read/compaction time
+      delta files, each named once in the manifest — O(batch) bytes
+      written, no reads; the key fold happens at read/compaction time
       (sources/lake.py fold_ranked). The scale path: per-batch IO is
       proportional to the delta, with rewrite amplification paid only at
       compaction cadence.

@@ -4,7 +4,8 @@ The sandbox has no Iceberg/Delta jars, so we implement the subset of
 lake-table semantics the CDC sink needs, with the same scale properties:
 
 - **Atomic snapshot commits**: data files are written under unique
-  snapshot dirs; a snapshot manifest (JSON) lists files per key-bucket;
+  snapshot dirs; a snapshot manifest (JSON) lists base files per
+  key-bucket and merge-on-read delta files once, in one top-level list;
   the manifest and then the CURRENT pointer are each written with
   ``atomic_write`` (temp file, fsync, ``os.replace``, directory fsync). A
   crashed writer leaves orphan files that are never referenced
@@ -13,10 +14,10 @@ lake-table semantics the CDC sink needs, with the same scale properties:
   key, and a copy-on-write commit rewrites every bucket: O(table) per
   batch, where a merge-on-read delta costs O(delta).
 - **Unbucketed merge-on-read deltas**: a delta commit writes one file per
-  fold output partition and lists each file under every bucket
-  (``n_write`` 1). Subset reads filter such files by key hash;
-  base files, written by create, copy-on-write and compaction, stay one
-  file per bucket.
+  fold output partition and names each file once, in the manifest's
+  ``deltas`` list, as Iceberg lists a data file once with its partition
+  tuple. Subset reads filter deltas by key hash; base files, written by
+  create, copy-on-write and compaction, stay one file per bucket.
 - **Additive schema evolution with cast-on-read**: each data file group
   records its schema id; reads group files by schema id and cast-union to
   the current schema (add column -> null backfill, INT64->FLOAT64 widen),
@@ -80,24 +81,30 @@ def _set_flag_fields(schema: T.StructType, key_cols: list[str]) -> list[T.Struct
     ]
 
 
-def _entry(e) -> tuple:
-    """Manifest file entry ->
-    (rel_path, schema_id, rank, kind, commit_sid, n_write); accepts the
-    legacy 2-tuple [path, schema_id] (rank-0 base) and 4/5-tuple forms
-    (commit_sid unknown -> 0, which predates every live snapshot;
-    n_write None -> written under the snapshot's current bucket count).
+def _normalize(snap: dict) -> dict:
+    """A manifest in the current layout: ``buckets`` maps a bucket to its
+    base files ``[path, schema_id, 0, "base", commit_sid(, n_write)]``
+    and ``deltas`` lists each merge-on-read delta file once as
+    ``[path, schema_id, rank, commit_sid]``. ``n_write``, the bucket count
+    a base file was physically written under, is present only on files
+    that grow_buckets renumbered.
 
-    ``n_write`` is the bucket count the file was PHYSICALLY written under;
-    it differs from the snapshot's bucket count after a metadata-only
-    grow_buckets renumbering and for merge-on-read deltas (1: the file
-    holds keys of every bucket), and drives the read-time key filter."""
-    if len(e) == 2:
-        return e[0], e[1], 0, "base", 0, None
-    if len(e) == 4:
-        return (*e, 0, None)
-    if len(e) == 5:
-        return (*e, None)
-    return tuple(e[:6])
+    Older manifests listed deltas under ``buckets``, each file under every
+    bucket (6 fields, ``n_write`` 1) or, before that, under its own key
+    bucket (5 fields); they move to ``deltas``, deduplicated by path. A
+    manifest with nothing to move is returned as is; otherwise a new dict
+    is returned, so a cached manifest is never mutated."""
+    moved = [e for fs in snap["buckets"].values() for e in fs if e[3] == "delta"]
+    if not moved and "deltas" in snap:
+        return snap
+    deltas = list(snap.get("deltas", []))
+    seen = {d[0] for d in deltas}
+    for rel, sch_id, rank, _kind, csid, *_ in moved:
+        if rel not in seen:
+            seen.add(rel)
+            deltas.append([rel, sch_id, rank, csid])
+    buckets = {b: [e for e in fs if e[3] != "delta"] for b, fs in snap["buckets"].items()}
+    return {**snap, "buckets": buckets, "deltas": deltas}
 
 
 def atomic_write(path: str, data: str) -> None:
@@ -143,8 +150,8 @@ class LakeTable:
         self.root = root
         # committed snapshot manifests are immutable -> cache the parsed
         # JSON per sid so the per-batch bookkeeping (delta_depth, commit,
-        # read) costs a dict lookup, not a reparse that grows with
-        # buckets x files. Bounded: the lowest sids fall out.
+        # read) costs a dict lookup, not a reparse that grows with the
+        # table's files. Bounded: the lowest sids fall out.
         self._snap_cache: dict[int, dict] = {}
         # read() plans: (sid, buckets) -> (manifest, DataFrame); an entry
         # lives no longer than its manifest's cache entry (see read())
@@ -171,7 +178,7 @@ class LakeTable:
             snap = self._snap_cache.get(sid)
         if snap is None:
             with open(self._snap_path(sid)) as f:
-                snap = json.load(f)
+                snap = _normalize(json.load(f))
             self._cache_snap(sid, snap)
         return snap
 
@@ -222,6 +229,7 @@ class LakeTable:
             "schema_id": 0,
             "schemas": {"0": schema.json()},
             "buckets": {},
+            "deltas": [],
             "summary": {"op": "create"},
         }
         if initial_df is not None:
@@ -288,10 +296,11 @@ class LakeTable:
         return prev, new_id, schema, schema_id, schemas
 
     def _finish_snapshot(
-        self, prev, new_id, schema_id, schemas, buckets, summary, n_buckets=None
+        self, prev, new_id, schema_id, schemas, buckets, summary, n_buckets=None, deltas=None
     ):
-        """Commit: the snapshot file is durable before CURRENT names it."""
-        snap = {
+        """Commit: the snapshot file is durable before CURRENT names it.
+        ``deltas`` defaults to ``prev``'s."""
+        snap = _normalize({
             "id": new_id,
             "parent": prev["id"],
             "key_cols": prev["key_cols"],
@@ -299,8 +308,9 @@ class LakeTable:
             "schema_id": schema_id,
             "schemas": schemas,
             "buckets": buckets,
+            "deltas": prev["deltas"] if deltas is None else deltas,
             "summary": summary or {},
-        }
+        })
         atomic_write(self._snap_path(new_id), json.dumps(snap))
         self._cache_snap(new_id, snap)
         self._set_current(new_id)
@@ -321,7 +331,9 @@ class LakeTable:
             str(b): [[p, schema_id, 0, "base", new_id] for p in new_files.get(b, [])]
             for b in range(prev["n_buckets"])
         }
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
+        return self._finish_snapshot(
+            prev, new_id, schema_id, schemas, buckets, summary, deltas=[]
+        )
 
     def commit_delta(
         self,
@@ -330,15 +342,15 @@ class LakeTable:
         summary: dict | None = None,
     ) -> int:
         """Merge-on-read commit: APPEND folded delta files (including
-        tombstones and fold flags) to every bucket — O(delta) bytes
-        written, zero existing-data reads. ``read()`` folds base + deltas
+        tombstones and fold flags) to the manifest's ``deltas`` — O(delta)
+        bytes written, zero existing-data reads, and one manifest entry
+        per file whatever the bucket count. ``read()`` folds base + deltas
         in rank order; ``compact_prepare`` + ``compact_apply`` collapse
         them back to base files.
 
         The delta is written as it comes, one file per input partition
-        (the fold's AQE-sized shuffle output), with no bucket exchange;
-        each file is listed under every bucket with ``n_write`` 1, so a
-        subset read filters it by key hash. Splitting it per bucket
+        (the fold's AQE-sized shuffle output), with no bucket exchange,
+        so a subset read filters it by key hash. Splitting it per bucket
         would buy nothing: a sizable batch touches every bucket, and
         compaction re-buckets what it folds.
 
@@ -355,46 +367,35 @@ class LakeTable:
         ]
         delta_schema = T.StructType(list(schema.fields) + extra)
         new_files = self._write_files(delta_df.selectExpr(*_cast_list(delta_schema)), new_id)
-        buckets = {b: list(fs) for b, fs in prev["buckets"].items()}
-        for b in range(prev["n_buckets"]):
-            entry = buckets.setdefault(str(b), [])
-            entry.extend([p, schema_id, new_id, "delta", new_id, 1] for p in new_files)
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, summary)
+        deltas = prev["deltas"] + [[p, schema_id, new_id, new_id] for p in new_files]
+        return self._finish_snapshot(
+            prev, new_id, schema_id, schemas, prev["buckets"], summary, deltas=deltas
+        )
 
     def delta_depth(self) -> int:
-        """Max number of delta commits stacked on any bucket (a commit may
-        list several files under one bucket)."""
-        snap = self.snapshot()
-        depth = 0
-        for fs in snap["buckets"].values():
-            depth = max(depth, len({_entry(e)[2] for e in fs if _entry(e)[3] == "delta"}))
-        return depth
+        """Number of delta commits stacked on the base (a commit may write
+        several files)."""
+        return len({d[2] for d in self.snapshot()["deltas"]})
 
     def compact_prepare(self, sid: int | None = None) -> dict | None:
         """Phase 1 of ASYNC compaction (the maintenance-lane shape real
         lakehouses use: Iceberg rewrite_data_files / Delta OPTIMIZE run
-        beside the ingest path, not inside it). Folds base+deltas of the
-        dirty buckets AS OF snapshot ``sid`` and writes the replacement
-        base files. No metadata is touched, so this may run concurrently
-        with further delta commits — it only reads the immutable files of
-        ``sid``. Returns a prep dict for :meth:`compact_apply` (or None
-        if nothing to compact)."""
+        beside the ingest path, not inside it). Folds base+deltas AS OF
+        snapshot ``sid`` and writes the replacement base files of every
+        bucket (a delta holds keys of every bucket). No metadata is
+        touched, so this may run concurrently with further delta commits —
+        it only reads the immutable files of ``sid``. Returns a prep dict
+        for :meth:`compact_apply` (or None if there is no delta)."""
         snap = self.snapshot(sid)
-        dirty = [
-            int(b)
-            for b, fs in snap["buckets"].items()
-            if any(_entry(e)[3] == "delta" for e in fs)
-        ]
-        if not dirty:
+        if not snap["deltas"]:
             return None
-        folded = self.read(sid=snap["id"], buckets=dirty)
+        folded = self.read(sid=snap["id"])
         schema = self.schema(snap["id"])
         new_files = self._write_data_files(
             folded, schema, snap["key_cols"], snap["n_buckets"], snap["id"]
         )
         return {
             "base_sid": snap["id"],
-            "dirty": dirty,
             "files": new_files,
             "schema_id": snap["schema_id"],
             "n_buckets": snap["n_buckets"],
@@ -402,44 +403,42 @@ class LakeTable:
 
     def compact_apply(self, prep: dict, summary: dict | None = None) -> int:
         """Phase 2: rebase-commit a prepared compaction onto the CURRENT
-        snapshot. Per dirty bucket, every entry committed at or before
-        ``base_sid`` (the old base, rank 0, and the folded deltas) is
-        replaced by the new base files; deltas appended after ``base_sid``
-        are kept — the read fold orders rows by (__cdc_ts, rank), and the
-        new base carries its true per-row __cdc_ts, so later deltas still
-        apply on top. Must be called from the single-threaded commit path
-        (the engine batch loop).
+        snapshot. Every bucket's base is replaced by the new base files,
+        and the deltas committed at or before ``base_sid`` (folded into
+        it) are dropped; deltas appended after ``base_sid`` are kept — the
+        read fold orders rows by (__cdc_ts, rank), and the new base
+        carries its true per-row __cdc_ts, so later deltas still apply on
+        top. Must be called from the single-threaded commit path (the
+        engine batch loop).
 
-        Precondition guard: if any dirty bucket holds a BASE entry committed
-        AFTER ``base_sid`` (a commit_merge / concurrent compaction landed
+        Precondition guard: if the base holds a file committed AFTER
+        ``base_sid`` (a commit_merge / concurrent compaction landed
         between prepare and apply), applying the stale prepared base would
         silently drop that rewrite — raise instead of losing data."""
         base_sid = prep["base_sid"]
         prev, new_id, schema, schema_id, schemas = self._next_snapshot(None)
-        if prep.get("n_buckets", prev["n_buckets"]) != prev["n_buckets"]:
+        if prep["n_buckets"] != prev["n_buckets"]:
             raise RuntimeError(
                 "compact_apply: bucket count changed since prepare "
-                f"({prep.get('n_buckets')} -> {prev['n_buckets']}); re-prepare"
+                f"({prep['n_buckets']} -> {prev['n_buckets']}); re-prepare"
             )
-        buckets = {b: list(fs) for b, fs in prev["buckets"].items()}
-        for b in prep["dirty"]:
-            for e in buckets.get(str(b), []):
-                _, _, _, kind, commit_sid, _nw = _entry(e)
-                if kind == "base" and commit_sid > base_sid:
-                    raise RuntimeError(
-                        f"compact_apply: bucket {b} was rewritten at snapshot "
-                        f"{commit_sid} > prepared base {base_sid}; discard the "
-                        "prepared compaction and re-prepare"
-                    )
-            kept = [e for e in buckets.get(str(b), []) if _entry(e)[2] > base_sid]
-            buckets[str(b)] = [
-                [p, prep["schema_id"], 0, "base", new_id] for p in prep["files"].get(b, [])
-            ] + kept
+        newer = [e[4] for fs in prev["buckets"].values() for e in fs if e[4] > base_sid]
+        if newer:
+            raise RuntimeError(
+                f"compact_apply: the base was rewritten at snapshot {max(newer)} > "
+                f"prepared base {base_sid}; discard the prepared compaction and re-prepare"
+            )
+        buckets = {
+            str(b): [[p, prep["schema_id"], 0, "base", new_id] for p in ps]
+            for b, ps in prep["files"].items()
+        }
+        deltas = [d for d in prev["deltas"] if d[2] > base_sid]
         s = dict(summary or {})
         s["op"] = "compact"
         s["base_sid"] = base_sid
-        s["buckets_compacted"] = len(prep["dirty"])
-        return self._finish_snapshot(prev, new_id, schema_id, schemas, buckets, s)
+        return self._finish_snapshot(
+            prev, new_id, schema_id, schemas, buckets, s, deltas=deltas
+        )
 
     # ---------------------------------------------------------------- gc
     def expire_snapshots(self, older_than_sid: int) -> dict:
@@ -469,8 +468,10 @@ class LakeTable:
         expired = [s for s in sids if s < older_than_sid]
         referenced: set[str] = set()
         for s in retained:
-            for fs in self.snapshot(s)["buckets"].values():
-                referenced.update(os.path.normpath(_entry(e)[0]) for e in fs)
+            snap = self.snapshot(s)
+            referenced.update(os.path.normpath(d[0]) for d in snap["deltas"])
+            for fs in snap["buckets"].values():
+                referenced.update(os.path.normpath(e[0]) for e in fs)
         removed_files = 0
         data_dir = os.path.join(self.root, "data")
         if os.path.isdir(data_dir):
@@ -501,11 +502,11 @@ class LakeTable:
         space without rewriting a byte. Because bucket = hash % n, a file
         written under ``old_n`` for bucket ``b`` can only contain keys
         whose bucket under ``new_n = old_n * factor`` is in
-        ``{b, b+old_n, b+2*old_n, ...}`` — so each legacy file is listed
+        ``{b, b+old_n, b+2*old_n, ...}`` — so each base file is listed
         under exactly those child buckets, annotated with its physical
-        ``n_write``; subset reads add a key-hash filter for legacy files
-        (read()). Compaction rewrites dirty buckets at the new count, so
-        files migrate to native bucketing incrementally.
+        ``n_write``; subset reads add a key-hash filter for such files
+        (read()). Deltas are not bucketed and stay as they are. The next
+        compaction rewrites the base at the new count.
 
         At 100 TB this is how per-bucket file counts stay bounded as the
         table grows 100x: growth is O(metadata), the rewrite cost rides
@@ -520,12 +521,8 @@ class LakeTable:
         buckets: dict[str, list] = {}
         for b_new in range(new_n):
             src = prev["buckets"].get(str(b_new % old_n), [])
-            out = []
-            for e in src:
-                rel, sch_id, rank, kind, csid, nw = _entry(e)
-                out.append([rel, sch_id, rank, kind, csid, nw if nw is not None else old_n])
-            if out:
-                buckets[str(b_new)] = out
+            if src:
+                buckets[str(b_new)] = [[*e[:5], e[5] if len(e) > 5 else old_n] for e in src]
         s = dict(summary or {})
         s["op"] = "grow_buckets"
         s["n_buckets_from"], s["n_buckets_to"] = old_n, new_n
@@ -535,13 +532,7 @@ class LakeTable:
 
     def base_bytes(self) -> int:
         """Physical bytes across unique referenced base files."""
-        snap = self.snapshot()
-        seen = set()
-        for fs in snap["buckets"].values():
-            for e in fs:
-                rel = _entry(e)[0]
-                if _entry(e)[3] == "base" and rel not in seen:
-                    seen.add(rel)
+        seen = {e[0] for fs in self.snapshot()["buckets"].values() for e in fs}
         return sum(os.path.getsize(os.path.join(self.root, r)) for r in seen)
 
     def data_file_count(self) -> int:
@@ -565,7 +556,7 @@ class LakeTable:
     def read(self, sid: int | None = None, buckets: list[int] | None = None) -> DataFrame:
         """Read the state of snapshot ``sid`` (default: current), limited to
         ``buckets`` when given. Files are grouped by (schema id, rank, kind,
-        physical bucket count), cast-unioned to the snapshot schema
+        key-hash filter), cast-unioned to the snapshot schema
         (add-column null backfill, type widening), then, if any
         merge-on-read deltas are present, folded per key in (commit ts,
         rank) order by :func:`fold_ranked`.
@@ -607,24 +598,29 @@ class LakeTable:
         target = T.StructType.fromJson(json.loads(snap["schemas"][str(snap["schema_id"])]))
         n_buckets = snap["n_buckets"]
         key_cols = snap["key_cols"]
-        # group by (schema, rank, kind, physical bucket count); paths are
-        # deduped because a delta file, or a file written before a
-        # grow_buckets renumbering, is listed under several buckets
-        groups: dict[tuple[int, int, str, int], set[str]] = {}
+        # group by (schema, rank, kind, key-hash filter). A subset read
+        # filters every delta (it holds keys of every bucket) and every
+        # base file written under another bucket count (grow_buckets);
+        # paths are deduped because grow_buckets lists such a file under
+        # several buckets
+        groups: dict[tuple[int, int, str, bool], set[str]] = {}
         for b, fs in snap["buckets"].items():
             if want is not None and int(b) not in want:
                 continue
             for e in fs:
-                rel, sch_id, rank, kind, _csid, nw = _entry(e)
-                nw = n_buckets if nw is None else int(nw)
-                groups.setdefault((int(sch_id), int(rank), kind, nw), set()).add(
-                    os.path.join(self.root, rel)
+                filtered = want is not None and len(e) > 5 and e[5] != n_buckets
+                groups.setdefault((int(e[1]), 0, "base", filtered), set()).add(
+                    os.path.join(self.root, e[0])
                 )
-        if not groups:
+        for rel, sch_id, rank, _csid in snap["deltas"]:
+            groups.setdefault((int(sch_id), int(rank), "delta", want is not None), set()).add(
+                os.path.join(self.root, rel)
+            )
+        if not groups or want == ():
             return local_frame(self.spark, [], target)
-        fold = any(kind == "delta" for _s, _r, kind, _n in groups)
+        fold = bool(snap["deltas"])
         parts = []
-        for (sch_id, rank, kind, nw), pathset in sorted(groups.items()):
+        for (sch_id, rank, kind, filtered), pathset in sorted(groups.items()):
             file_schema = T.StructType.fromJson(json.loads(snap["schemas"][str(sch_id)]))
             read_schema = file_schema
             if kind == "delta":
@@ -641,11 +637,9 @@ class LakeTable:
             paths = sorted(pathset)
             for i in range(0, len(paths), _SCAN_PATHS_MAX):
                 df = self.spark.read.schema(read_schema).parquet(*paths[i : i + _SCAN_PATHS_MAX])
-                if want is not None and nw != n_buckets:
-                    # delta or legacy-bucketed file in a subset read: keep
-                    # only the keys that map into the requested buckets
-                    # under the CURRENT bucket count (full reads need no
-                    # filter — paths dedup)
+                if filtered:
+                    # keep only the keys that map into the requested
+                    # buckets under the CURRENT bucket count
                     df = df.where(
                         f"{bucket_sql(key_cols, n_buckets)} IN ({', '.join(map(str, want))})"
                     )
@@ -704,10 +698,9 @@ def _rank_projection(
         cols += [f"true AS {_q(f'__w_{c}')}" for c in value_names]
         cols += ["false AS _is_delete", "false AS _had_delete"]
     # per-row apply order: (commit-ts lineage, snapshot rank). The ts
-    # component makes the fold correct even when delta files are applied
-    # out of per-key commit order (e.g. a stream tail with
-    # maxFilesPerTrigger seeing overlapping file time ranges); rank breaks
-    # ties for same-ts rows (base < any delta).
+    # component applies a key's rows in commit order whatever order their
+    # files were committed in; rank breaks ties for same-ts rows (base <
+    # any delta).
     ts = f"{_LONG_MIN}L"
     if CDC_TS_COL in names:
         ts = f"COALESCE(CAST({_q(CDC_TS_COL)} AS BIGINT), {ts})"

@@ -7,7 +7,9 @@ property stacks several MOR deltas, with additive schema changes between
 them, and checks current, older-snapshot and bucket-subset reads. A
 third stacks per-bucket deltas (the earlier delta layout, which tables
 written before shared deltas still hold) under shared ones, and checks
-reads, compaction and snapshot expiry.
+reads, compaction and snapshot expiry. A fourth rewrites a table's
+manifests in the two older layouts, which list deltas under ``buckets``,
+and checks the same through a fresh LakeTable.
 
 Complements the targeted semantics tests with shrinking random
 coverage of the delete-barrier / written-flag / identity-dedup
@@ -18,6 +20,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -37,6 +40,7 @@ from debezium_connector_spanner_spark.sources.lake import (
     DELTA_FLAG_FIELDS,
     LakeTable,
     _set_flag_fields,
+    atomic_write,
     bucket_expr,
 )
 
@@ -335,3 +339,73 @@ def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, b
     assert t.delta_depth() == 0
     t.expire_snapshots(t.current_snapshot_id())
     assert _state(t.read(), COLS) == want, ("compacted + expired", rows)
+
+
+def _write_legacy_manifests(root, per_bucket):
+    """Rewrite every manifest under ``root`` in an older layout with no
+    ``deltas`` list: each delta file listed under every bucket with
+    ``n_write`` 1, or (``per_bucket``) under the key bucket it was written
+    for, as a 5-field entry."""
+    meta = os.path.join(root, "_meta")
+    for fn in os.listdir(meta):
+        if not fn.startswith("snap-"):
+            continue
+        path = os.path.join(meta, fn)
+        with open(path) as f:
+            snap = json.load(f)
+        buckets = snap["buckets"]
+        for rel, sch_id, rank, sid in snap.pop("deltas"):
+            if per_bucket:
+                b = os.path.basename(os.path.dirname(rel)).split("=", 1)[1]
+                buckets.setdefault(b, []).append([rel, sch_id, rank, "delta", sid])
+            else:
+                for b in range(snap["n_buckets"]):
+                    buckets.setdefault(str(b), []).append([rel, sch_id, rank, "delta", sid, 1])
+        atomic_write(path, json.dumps(snap))
+
+
+@pytest.mark.parametrize("per_bucket", [False, True])
+@settings(max_examples=3, deadline=None)
+@given(
+    batches=st.lists(st.lists(event_st, min_size=1, max_size=8), min_size=2, max_size=3),
+    base_mask=base_st,
+)
+def test_legacy_manifests_match_state_machine(spark, per_bucket, batches, base_mask):
+    """A table whose manifests list deltas under ``buckets`` (every file
+    under every bucket, or each under its own key bucket) opened by a
+    fresh LakeTable: full, bucket-subset and older-snapshot reads,
+    delta_depth, a compaction and snapshot expiry each equal the state
+    machine, and the compaction writes the current layout."""
+    base_rows = _base_rows(base_mask)
+    t = _base_table(spark, base_rows)
+    bucket = _bucket_of(spark)
+    rows = []
+    history = [(t.current_snapshot_id(), _simulate([], base_rows))]
+    for stream in batches:
+        batch = _mk_rows(stream, first=len(rows))
+        rows += batch
+        folded = _fold_batch(spark, batch)
+        if per_bucket:
+            sid = _per_bucket_mor_commit(t, folded)
+        else:
+            sid = merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
+        history.append((sid, _simulate(rows, base_rows)))
+    _write_legacy_manifests(t.root, per_bucket)
+
+    t = LakeTable(spark, t.root)
+    want = history[-1][1]
+    assert t.delta_depth() == len(batches)
+    assert _state(t.read(), COLS) == want, rows
+    for b in (0, 1):
+        sub = {k: v for k, v in want.items() if bucket[k] == b}
+        assert _state(t.read(buckets=[b]), COLS) == sub, ("subset", b, rows)
+    for sid, old_want in history[:-1]:
+        assert _state(t.read(sid=sid), COLS) == old_want, ("older", sid, rows)
+    sid = t.compact_apply(t.compact_prepare())
+    assert t.delta_depth() == 0
+    with open(t._snap_path(sid)) as f:
+        snap = json.load(f)
+    assert snap["deltas"] == []
+    assert all(e[3] == "base" for fs in snap["buckets"].values() for e in fs)
+    t.expire_snapshots(sid)
+    assert _state(LakeTable(spark, t.root).read(), COLS) == want, ("compacted + expired", rows)

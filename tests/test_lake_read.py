@@ -6,10 +6,11 @@
 - building a read launches no Spark job: no schema inference, and no
   parallel file listing, also when a file group holds more paths than
   Spark's listing threshold (a 64-bucket table)
-- a merge-on-read delta's files are each listed under every bucket, and
-  count as one delta commit
+- a merge-on-read delta's files are each named once in the manifest's
+  ``deltas`` list, and count as one delta commit
 """
 
+import json
 import os
 import sys
 import threading
@@ -99,26 +100,33 @@ def test_expire_snapshots_drops_their_read_plans(spark, tmp_root):
     assert _commits(t.read()) == [("r1", "p1", "c2")]
 
 
-def test_mor_commit_lists_each_delta_file_under_every_bucket(spark, tmp_root):
+def test_mor_commit_names_each_delta_file_once(spark, tmp_root):
     """A merge-on-read delta is written unbucketed: each of its files is
-    listed under every bucket with n_write 1, the commit raises
-    delta_depth() by exactly one however many files it wrote, and subset
-    reads still partition the key space."""
+    named once in the manifest's ``deltas``, no bucket lists a delta, the
+    commit raises delta_depth() by exactly one however many files it
+    wrote, subset reads still partition the key space, and a copy-on-write
+    commit leaves no delta."""
     t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=4)
     _commit(t, spark, [("r0", "p0", "a")])
     depth = t.delta_depth()
     rows = [(f"r{i}", f"p{i}", "d") for i in range(40)]
     sid = _commit(t, spark, rows, partitions=3)
-    entries = {b: [e for e in fs if e[2] == sid] for b, fs in t.snapshot()["buckets"].items()}
-    files = sorted(e[0] for e in entries["0"])
+    snap = t.snapshot()
+    files = [d[0] for d in snap["deltas"] if d[2] == sid]
     assert len(files) >= 2
-    assert sorted(entries) == ["0", "1", "2", "3"]
-    for fs in entries.values():
-        assert sorted(e[0] for e in fs) == files
-        assert all(e[3] == "delta" and e[5] == 1 for e in fs)
+    assert len(set(files)) == len(files)
+    assert all(d[3] == sid for d in snap["deltas"] if d[2] == sid)
+    assert all(e[3] == "base" for fs in snap["buckets"].values() for e in fs)
+    with open(t._snap_path(sid)) as f:
+        assert json.load(f)["deltas"] == snap["deltas"]
     assert t.delta_depth() == depth + 1
     assert _commits(t.read()) == sorted(rows)
     assert sum(t.read(buckets=[b]).count() for b in range(4)) == len(rows)
+
+    t.commit_merge(t.read())
+    assert t.snapshot()["deltas"] == []
+    assert t.delta_depth() == 0
+    assert _commits(t.read()) == sorted(rows)
 
 
 def test_read_build_launches_no_spark_job(spark, tmp_root):
