@@ -92,8 +92,8 @@ class EngineConfig:
     # fixed replay windows over [start_us, end_us] (K3 sizing may split
     # them further, see max_events_per_batch)
     n_batches: int = 8
-    # key-hash buckets of each new sink table (grow_bucket_bytes may
-    # double them later)
+    # key-hash buckets of each new sink table, fixed when the table is
+    # created
     n_buckets: int = 16
     # 'mor' appends folded delta files and compacts them in the
     # maintenance lane; 'cow' rewrites every bucket per batch. Each is
@@ -125,11 +125,6 @@ class EngineConfig:
     # sources/proto_wire.py). Everything past the wire decode is
     # format-independent.
     wire_format: str = "struct"
-    # auto-bucket scaling: after a compaction, if avg base bytes per
-    # bucket exceeds this, double n_buckets via the metadata-only
-    # grow_buckets renumbering (sources/lake.py). None = fixed count.
-    # On a cluster target ~256-512MB; tests use tiny values.
-    grow_bucket_bytes: int | None = None
 
     def validate(self, tables: dict | None, checkpoint: dict | None) -> list[ConfigError]:
         """Every rule, every violation; [] means the config is valid.
@@ -191,7 +186,6 @@ class EngineConfig:
         _at_least(
             errors, "max_events_per_batch", self.max_events_per_batch, 1, allow_none=True
         )
-        _at_least(errors, "grow_bucket_bytes", self.grow_bucket_bytes, 1, allow_none=True)
 
         # --- table filters (SpannerTableFilter regex config) ---
         _regex(errors, "table_include", self.table_include)

@@ -30,15 +30,6 @@ from debezium_connector_spanner_spark.functions.text import (
 )
 
 
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Groups of byte-identical documents (md5 digest groupBy)."""
-    return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_md5"))
-        .groupBy("text_md5")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_doc_id"))
-    )
-
-
 def shingled(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     # hoist the tokenization into its own projection: word_ngrams
     # references the words array INSIDE a transform lambda, and Spark

@@ -68,13 +68,6 @@ def md5_hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingle_hashes(text_col: Column, n: int = 3) -> Column:
-    """Distinct hashed word n-gram shingles for a document."""
-    return F.array_distinct(
-        F.transform(word_ngrams(words(text_col), n), md5_hash64)
-    )
-
-
 def minhash_coeffs(num_hashes: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(seed)
     a = rng.randint(1, MERSENNE, size=num_hashes, dtype=np.int64)

@@ -16,8 +16,9 @@ lake-table semantics the CDC sink needs, with the same scale properties:
 - **Unbucketed merge-on-read deltas**: a delta commit writes one file per
   fold output partition and names each file once, in the manifest's
   ``deltas`` list, as Iceberg lists a data file once with its partition
-  tuple. Subset reads filter deltas by key hash; base files, written by
-  create, copy-on-write and compaction, stay one file per bucket.
+  tuple. Base files, written by create, copy-on-write and compaction,
+  stay one file per bucket; ``n_buckets`` is fixed when the table is
+  created. Every read takes the whole table.
 - **Additive schema evolution with cast-on-read**: each data file group
   records its schema id; reads group files by schema id and cast-union to
   the current schema (add column -> null backfill, INT64->FLOAT64 widen),
@@ -83,11 +84,12 @@ def _set_flag_fields(schema: T.StructType, key_cols: list[str]) -> list[T.Struct
 
 def _normalize(snap: dict) -> dict:
     """A manifest in the current layout: ``buckets`` maps a bucket to its
-    base files ``[path, schema_id, 0, "base", commit_sid(, n_write)]``
-    and ``deltas`` lists each merge-on-read delta file once as
-    ``[path, schema_id, rank, commit_sid]``. ``n_write``, the bucket count
-    a base file was physically written under, is present only on files
-    that grow_buckets renumbered.
+    base files ``[path, schema_id, 0, "base", commit_sid]`` and ``deltas``
+    lists each merge-on-read delta file once as ``[path, schema_id, rank,
+    commit_sid]``. Old manifests may carry a sixth field, ``n_write``, the
+    bucket count a file was written under, and may list a base file under
+    several buckets after a bucket-count doubling; reads ignore the field
+    and dedup the paths.
 
     Older manifests listed deltas under ``buckets``, each file under every
     bucket (6 fields, ``n_write`` 1) or, before that, under its own key
@@ -140,10 +142,6 @@ def bucket_sql(key_cols: list[str], n_buckets: int) -> str:
     return f"CAST(pmod(xxhash64(concat_ws(chr(0), {keys})), {n_buckets}) AS INT)"
 
 
-def bucket_expr(key_cols: list[str], n_buckets: int):
-    return F.expr(bucket_sql(key_cols, n_buckets))
-
-
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -153,9 +151,9 @@ class LakeTable:
         # read) costs a dict lookup, not a reparse that grows with the
         # table's files. Bounded: the lowest sids fall out.
         self._snap_cache: dict[int, dict] = {}
-        # read() plans: (sid, buckets) -> (manifest, DataFrame); an entry
-        # lives no longer than its manifest's cache entry (see read())
-        self._plans: dict[tuple[int, tuple[int, ...] | None], tuple[dict, DataFrame]] = {}
+        # read() plans: sid -> (manifest, DataFrame); an entry lives no
+        # longer than its manifest's cache entry (see read())
+        self._plans: dict[int, tuple[dict, DataFrame]] = {}
         # the maintenance lane reads from its own thread
         self._lock = threading.Lock()
 
@@ -190,10 +188,9 @@ class LakeTable:
                 self._forget(min(self._snap_cache))
 
     def _forget(self, sid: int) -> None:
-        """Drop a manifest and its read plans; the caller holds the lock."""
+        """Drop a manifest and its read plan; the caller holds the lock."""
         self._snap_cache.pop(sid, None)
-        for k in [k for k in self._plans if k[0] == sid]:
-            del self._plans[k]
+        self._plans.pop(sid, None)
 
     def _set_current(self, sid: int) -> None:
         atomic_write(os.path.join(self._meta_dir, "CURRENT"), str(sid))
@@ -295,16 +292,14 @@ class LakeTable:
             schemas[str(schema_id)] = schema.json()
         return prev, new_id, schema, schema_id, schemas
 
-    def _finish_snapshot(
-        self, prev, new_id, schema_id, schemas, buckets, summary, n_buckets=None, deltas=None
-    ):
+    def _finish_snapshot(self, prev, new_id, schema_id, schemas, buckets, summary, deltas=None):
         """Commit: the snapshot file is durable before CURRENT names it.
         ``deltas`` defaults to ``prev``'s."""
         snap = _normalize({
             "id": new_id,
             "parent": prev["id"],
             "key_cols": prev["key_cols"],
-            "n_buckets": prev["n_buckets"] if n_buckets is None else n_buckets,
+            "n_buckets": prev["n_buckets"],
             "schema_id": schema_id,
             "schemas": schemas,
             "buckets": buckets,
@@ -349,10 +344,10 @@ class LakeTable:
         them back to base files.
 
         The delta is written as it comes, one file per input partition
-        (the fold's AQE-sized shuffle output), with no bucket exchange,
-        so a subset read filters it by key hash. Splitting it per bucket
-        would buy nothing: a sizable batch touches every bucket, and
-        compaction re-buckets what it folds.
+        (the fold's AQE-sized shuffle output), with no bucket exchange.
+        Splitting it per bucket would buy nothing: every read takes the
+        whole table, a sizable batch touches every bucket, and compaction
+        re-buckets what it folds.
 
         This is the write path that survives 10^10-event scale: per-batch
         cost is proportional to the batch, and rewrite amplification is
@@ -382,10 +377,10 @@ class LakeTable:
         lakehouses use: Iceberg rewrite_data_files / Delta OPTIMIZE run
         beside the ingest path, not inside it). Folds base+deltas AS OF
         snapshot ``sid`` and writes the replacement base files of every
-        bucket (a delta holds keys of every bucket). No metadata is
-        touched, so this may run concurrently with further delta commits —
-        it only reads the immutable files of ``sid``. Returns a prep dict
-        for :meth:`compact_apply` (or None if there is no delta)."""
+        bucket, at the table's ``n_buckets``. No metadata is touched, so
+        this may run concurrently with further delta commits — it only
+        reads the immutable files of ``sid``. Returns a prep dict for
+        :meth:`compact_apply` (or None if there is no delta)."""
         snap = self.snapshot(sid)
         if not snap["deltas"]:
             return None
@@ -394,12 +389,7 @@ class LakeTable:
         new_files = self._write_data_files(
             folded, schema, snap["key_cols"], snap["n_buckets"], snap["id"]
         )
-        return {
-            "base_sid": snap["id"],
-            "files": new_files,
-            "schema_id": snap["schema_id"],
-            "n_buckets": snap["n_buckets"],
-        }
+        return {"base_sid": snap["id"], "files": new_files, "schema_id": snap["schema_id"]}
 
     def compact_apply(self, prep: dict, summary: dict | None = None) -> int:
         """Phase 2: rebase-commit a prepared compaction onto the CURRENT
@@ -417,11 +407,6 @@ class LakeTable:
         silently drop that rewrite — raise instead of losing data."""
         base_sid = prep["base_sid"]
         prev, new_id, schema, schema_id, schemas = self._next_snapshot(None)
-        if prep["n_buckets"] != prev["n_buckets"]:
-            raise RuntimeError(
-                "compact_apply: bucket count changed since prepare "
-                f"({prep['n_buckets']} -> {prev['n_buckets']}); re-prepare"
-            )
         newer = [e[4] for fs in prev["buckets"].values() for e in fs if e[4] > base_sid]
         if newer:
             raise RuntimeError(
@@ -496,45 +481,6 @@ class LakeTable:
                 self._forget(s)
         return {"expired_snapshots": len(expired), "removed_files": removed_files}
 
-    # ------------------------------------------------------- bucket growth
-    def grow_buckets(self, factor: int = 2, summary: dict | None = None) -> int:
-        """METADATA-ONLY bucket-count growth: double (or xN) the bucket
-        space without rewriting a byte. Because bucket = hash % n, a file
-        written under ``old_n`` for bucket ``b`` can only contain keys
-        whose bucket under ``new_n = old_n * factor`` is in
-        ``{b, b+old_n, b+2*old_n, ...}`` — so each base file is listed
-        under exactly those child buckets, annotated with its physical
-        ``n_write``; subset reads add a key-hash filter for such files
-        (read()). Deltas are not bucketed and stay as they are. The next
-        compaction rewrites the base at the new count.
-
-        At 100 TB this is how per-bucket file counts stay bounded as the
-        table grows 100x: growth is O(metadata), the rewrite cost rides
-        the compactions that were happening anyway (same shape as Iceberg
-        partition-spec evolution: old files keep their spec, new writes
-        use the new one)."""
-        if factor < 2:
-            raise ValueError("factor must be >= 2")
-        prev, new_id, schema, schema_id, schemas = self._next_snapshot(None)
-        old_n = prev["n_buckets"]
-        new_n = old_n * factor
-        buckets: dict[str, list] = {}
-        for b_new in range(new_n):
-            src = prev["buckets"].get(str(b_new % old_n), [])
-            if src:
-                buckets[str(b_new)] = [[*e[:5], e[5] if len(e) > 5 else old_n] for e in src]
-        s = dict(summary or {})
-        s["op"] = "grow_buckets"
-        s["n_buckets_from"], s["n_buckets_to"] = old_n, new_n
-        return self._finish_snapshot(
-            prev, new_id, schema_id, schemas, buckets, s, n_buckets=new_n
-        )
-
-    def base_bytes(self) -> int:
-        """Physical bytes across unique referenced base files."""
-        seen = {e[0] for fs in self.snapshot()["buckets"].values() for e in fs}
-        return sum(os.path.getsize(os.path.join(self.root, r)) for r in seen)
-
     def data_file_count(self) -> int:
         """Physical parquet files on disk (referenced or not) — GC tests."""
         n = 0
@@ -550,16 +496,12 @@ class LakeTable:
     def key_cols(self) -> list[str]:
         return self.snapshot()["key_cols"]
 
-    def n_buckets(self) -> int:
-        return self.snapshot()["n_buckets"]
-
-    def read(self, sid: int | None = None, buckets: list[int] | None = None) -> DataFrame:
-        """Read the state of snapshot ``sid`` (default: current), limited to
-        ``buckets`` when given. Files are grouped by (schema id, rank, kind,
-        key-hash filter), cast-unioned to the snapshot schema
-        (add-column null backfill, type widening), then, if any
-        merge-on-read deltas are present, folded per key in (commit ts,
-        rank) order by :func:`fold_ranked`.
+    def read(self, sid: int | None = None) -> DataFrame:
+        """Read the whole state of snapshot ``sid`` (default: current).
+        Files are grouped by (schema id, rank, kind), cast-unioned to the
+        snapshot schema (add-column null backfill, type widening), then,
+        if any merge-on-read deltas are present, folded per key in (commit
+        ts, rank) order by :func:`fold_ranked`.
 
         The plan is built from SQL strings (one ``selectExpr`` per file
         group, one ``agg`` for the fold): 287 JVM calls for a 16-bucket
@@ -570,57 +512,45 @@ class LakeTable:
         the driver; one scan over every file would start a listing job on
         each uncached read.
 
-        The built DataFrame is kept per (manifest, buckets) while the
-        manifest is cached, so repeated reads of a live snapshot reuse
-        one plan. The memo is keyed on the cached manifest object, not on
-        the sid alone: after a rollback the next commit reuses the sid
-        with a new manifest, which misses. Callers derive from the
-        returned DataFrame and must not persist it."""
+        The built DataFrame is kept per sid while the sid's manifest is
+        cached, so repeated reads of a live snapshot reuse one plan. A
+        kept plan is served only for the very manifest object it was
+        built from: after a rollback the next commit reuses the sid with a
+        new manifest, and a reader still holding the old one rebuilds.
+        Callers derive from the returned DataFrame and must not persist
+        it."""
         snap = self.snapshot(sid)
-        want = None if buckets is None else tuple(sorted({int(b) for b in buckets}))
-        if want == tuple(range(snap["n_buckets"])):
-            # every bucket: a full read, with no per-row key-hash filter
-            want = None
-        key = (snap["id"], want)
+        sid = snap["id"]
         with self._lock:
-            hit = self._plans.get(key)
+            hit = self._plans.get(sid)
         if hit is not None and hit[0] is snap:
             return hit[1]
-        df = self._build_read(snap, want)
+        df = self._build_read(snap)
         with self._lock:
-            if self._snap_cache.get(snap["id"]) is snap:
-                self._plans[key] = (snap, df)
+            if self._snap_cache.get(sid) is snap:
+                self._plans[sid] = (snap, df)
                 while len(self._plans) > _CACHE_MAX:
-                    del self._plans[min(self._plans, key=lambda k: k[0])]
+                    del self._plans[min(self._plans)]
         return df
 
-    def _build_read(self, snap: dict, want: tuple[int, ...] | None) -> DataFrame:
+    def _build_read(self, snap: dict) -> DataFrame:
         target = T.StructType.fromJson(json.loads(snap["schemas"][str(snap["schema_id"])]))
-        n_buckets = snap["n_buckets"]
         key_cols = snap["key_cols"]
-        # group by (schema, rank, kind, key-hash filter). A subset read
-        # filters every delta (it holds keys of every bucket) and every
-        # base file written under another bucket count (grow_buckets);
-        # paths are deduped because grow_buckets lists such a file under
-        # several buckets
-        groups: dict[tuple[int, int, str, bool], set[str]] = {}
-        for b, fs in snap["buckets"].items():
-            if want is not None and int(b) not in want:
-                continue
+        # group by (schema, rank, kind); paths are deduped because an old
+        # manifest may list a base file under several buckets
+        groups: dict[tuple[int, int, str], set[str]] = {}
+        for fs in snap["buckets"].values():
             for e in fs:
-                filtered = want is not None and len(e) > 5 and e[5] != n_buckets
-                groups.setdefault((int(e[1]), 0, "base", filtered), set()).add(
-                    os.path.join(self.root, e[0])
-                )
+                groups.setdefault((int(e[1]), 0, "base"), set()).add(os.path.join(self.root, e[0]))
         for rel, sch_id, rank, _csid in snap["deltas"]:
-            groups.setdefault((int(sch_id), int(rank), "delta", want is not None), set()).add(
+            groups.setdefault((int(sch_id), int(rank), "delta"), set()).add(
                 os.path.join(self.root, rel)
             )
-        if not groups or want == ():
+        if not groups:
             return local_frame(self.spark, [], target)
         fold = bool(snap["deltas"])
         parts = []
-        for (sch_id, rank, kind, filtered), pathset in sorted(groups.items()):
+        for (sch_id, rank, kind), pathset in sorted(groups.items()):
             file_schema = T.StructType.fromJson(json.loads(snap["schemas"][str(sch_id)]))
             read_schema = file_schema
             if kind == "delta":
@@ -637,12 +567,6 @@ class LakeTable:
             paths = sorted(pathset)
             for i in range(0, len(paths), _SCAN_PATHS_MAX):
                 df = self.spark.read.schema(read_schema).parquet(*paths[i : i + _SCAN_PATHS_MAX])
-                if filtered:
-                    # keep only the keys that map into the requested
-                    # buckets under the CURRENT bucket count
-                    df = df.where(
-                        f"{bucket_sql(key_cols, n_buckets)} IN ({', '.join(map(str, want))})"
-                    )
                 parts.append(df.selectExpr(*proj))
         out = parts[0]
         for p in parts[1:]:

@@ -832,101 +832,105 @@ class CdcReplayEngine:
                     "mods",
                 ).persist()
                 data_scan = cached
-            merge_tables = [n for n in self.tables if self._table_allowed(n)]
-            if cached is not None or not merge_tables:
-                # one whole-scan action completes the observation: it
-                # builds the shared cache before the concurrent merges read
-                # it (a merge could otherwise finish on a partition another
-                # merge cached but has not yet reported), or, when D10
-                # leaves no table to merge, it is the batch's only read
-                data_scan.write.format("noop").mode("overwrite").save()
-            prev_sids = dict(snapshot_ids)
-            schemas_used = {n: st.schema for n, st in self.tables.items()}
-            # C3 adaptive skew: choose this batch's fold shape per table
-            # from the key-hash histogram the PREVIOUS batch observed
-            salted_tables = {
-                n: (
-                    self.cfg.skew_mode == "salted"
-                    or (
-                        self.cfg.skew_mode == "adaptive"
-                        and self._hot_share.get(n, 0.0) >= SKEW_THRESHOLD
+            try:
+                merge_tables = [n for n in self.tables if self._table_allowed(n)]
+                if cached is not None or not merge_tables:
+                    # one whole-scan action completes the observation: it
+                    # builds the shared cache before the concurrent merges read
+                    # it (a merge could otherwise finish on a partition another
+                    # merge cached but has not yet reported), or, when D10
+                    # leaves no table to merge, it is the batch's only read
+                    data_scan.write.format("noop").mode("overwrite").save()
+                prev_sids = dict(snapshot_ids)
+                schemas_used = {n: st.schema for n, st in self.tables.items()}
+                # C3 adaptive skew: choose this batch's fold shape per table
+                # from the key-hash histogram the PREVIOUS batch observed
+                salted_tables = {
+                    n: (
+                        self.cfg.skew_mode == "salted"
+                        or (
+                            self.cfg.skew_mode == "adaptive"
+                            and self._hot_share.get(n, 0.0) >= SKEW_THRESHOLD
+                        )
                     )
-                )
-                for n in self.tables
-            }
-            salted_used = sorted(n for n, v in salted_tables.items() if v)
-            attempts: dict[str, tuple] = {}
-            with ThreadPoolExecutor(max_workers=max(1, len(merge_tables))) as ex:
-                def _timed(fn, *a):
-                    s0 = time.monotonic()
-                    out = fn(*a)
-                    return out, round(time.monotonic() - s0, 3)
-
-                merge_futures = {
-                    n: ex.submit(
-                        _timed,
-                        self._merge_attempt,
-                        data_scan.where(F.col("table_name") == n),
-                        n,
-                        schemas_used[n],
-                        batch_id,
-                        active,
-                        0,
-                        salted_tables[n],
-                    )
-                    for n in merge_tables
+                    for n in self.tables
                 }
-                for n, fut in merge_futures.items():
-                    attempts[n], t_merge = fut.result()
-                    timings[f"merge_{n}_s"] = t_merge
-            timings["overlap_s"] = round(time.monotonic() - t_stage, 3)
-            seen = scan_obs.get
+                salted_used = sorted(n for n, v in salted_tables.items() if v)
+                attempts: dict[str, tuple] = {}
+                with ThreadPoolExecutor(max_workers=max(1, len(merge_tables))) as ex:
+                    def _timed(fn, *a):
+                        s0 = time.monotonic()
+                        out = fn(*a)
+                        return out, round(time.monotonic() - s0, 3)
 
-            # merge observed schemas per table (additive, widening)
-            observed: dict[str, set] = {}
-            for s in seen["schemas"]:
-                if s["tbl"] in self.tables and s["cols"] and self._table_allowed(s["tbl"]):
-                    observed.setdefault(s["tbl"], set()).add(s["cols"])
-            for name, col_jsons in sorted(observed.items()):
-                st = self.tables[name]
-                for s_json in sorted(col_jsons):
-                    incoming = TableSchema.from_column_types_json(name, s_json)
-                    st.schema = merge_schemas(st.schema, incoming)
+                    merge_futures = {
+                        n: ex.submit(
+                            _timed,
+                            self._merge_attempt,
+                            data_scan.where(F.col("table_name") == n),
+                            n,
+                            schemas_used[n],
+                            batch_id,
+                            active,
+                            0,
+                            salted_tables[n],
+                        )
+                        for n in merge_tables
+                    }
+                    for n, fut in merge_futures.items():
+                        attempts[n], t_merge = fut.result()
+                        timings[f"merge_{n}_s"] = t_merge
+                timings["overlap_s"] = round(time.monotonic() - t_stage, 3)
+                seen = scan_obs.get
 
-            # resolve each table's optimistic attempt
-            tables_with_data = set(observed)
-            for name, st in self.tables.items():
-                if name not in attempts:  # filtered out by D10: untouched
-                    continue
-                opt_sid, opt_obs, per_token, _fold_obs = attempts[name]
-                if name not in tables_with_data:
-                    # optimistic merge ran on an empty slice: discard the
-                    # empty snapshot (pointer flip; orphan files are inert)
-                    if opt_sid != prev_sids[name]:
+                # merge observed schemas per table (additive, widening)
+                observed: dict[str, set] = {}
+                for s in seen["schemas"]:
+                    if s["tbl"] in self.tables and s["cols"] and self._table_allowed(s["tbl"]):
+                        observed.setdefault(s["tbl"], set()).add(s["cols"])
+                for name, col_jsons in sorted(observed.items()):
+                    st = self.tables[name]
+                    for s_json in sorted(col_jsons):
+                        incoming = TableSchema.from_column_types_json(name, s_json)
+                        st.schema = merge_schemas(st.schema, incoming)
+
+                # resolve each table's optimistic attempt
+                tables_with_data = set(observed)
+                for name, st in self.tables.items():
+                    if name not in attempts:  # filtered out by D10: untouched
+                        continue
+                    opt_sid, opt_obs, per_token, _fold_obs = attempts[name]
+                    if name not in tables_with_data:
+                        # optimistic merge ran on an empty slice: discard the
+                        # empty snapshot (pointer flip; orphan files are inert)
+                        if opt_sid != prev_sids[name]:
+                            st.table.rollback(prev_sids[name])
+                        attempts[name] = (prev_sids[name], None, per_token, None)
+                    elif (
+                        st.schema.column_types_json()
+                        != schemas_used[name].column_types_json()
+                    ):
+                        # schema evolved mid-batch: invalidate and retry with
+                        # the merged schema so the new columns are decoded
+                        self.meter.schema_retries_total += 1
                         st.table.rollback(prev_sids[name])
-                    attempts[name] = (prev_sids[name], None, per_token, None)
-                elif (
-                    st.schema.column_types_json()
-                    != schemas_used[name].column_types_json()
-                ):
-                    # schema evolved mid-batch: invalidate and retry with
-                    # the merged schema so the new columns are decoded
-                    self.meter.schema_retries_total += 1
-                    st.table.rollback(prev_sids[name])
-                    t_retry = time.monotonic()
-                    attempts[name] = self._merge_attempt(
-                        data_scan.where(F.col("table_name") == name),
-                        name,
-                        st.schema,
-                        batch_id,
-                        active,
-                        attempt=1,
-                        use_salted=salted_tables[name],
-                    )
-                    timings["schema_retry_s"] = round(time.monotonic() - t_retry, 3)
-                snapshot_ids[name] = attempts[name][0]
-            if cached is not None:
-                cached.unpersist()
+                        t_retry = time.monotonic()
+                        attempts[name] = self._merge_attempt(
+                            data_scan.where(F.col("table_name") == name),
+                            name,
+                            st.schema,
+                            batch_id,
+                            active,
+                            attempt=1,
+                            use_salted=salted_tables[name],
+                        )
+                        timings["schema_retry_s"] = round(time.monotonic() - t_retry, 3)
+                    snapshot_ids[name] = attempts[name][0]
+            finally:
+                # release the shared slice also when a merge or a schema
+                # retry raises: the session outlives the batch
+                if cached is not None:
+                    cached.unpersist()
 
             # per-token progress from the control rows. Set semantics for
             # end markers and child announcements: a duplicated control
@@ -1009,9 +1013,6 @@ class CdcReplayEngine:
                             timings["compact_apply_s"] = round(
                                 time.monotonic() - t_stage, 3
                             )
-                            grown = self._maybe_grow(st, batch_id)
-                            if grown is not None:
-                                snapshot_ids[name] = grown
                     elif fut is None and st.table.delta_depth() >= COMPACT_EVERY:
                         self._compact_futures[name] = self._pool(
                             "_maint_pool", "cdc-maint"
@@ -1147,16 +1148,6 @@ class CdcReplayEngine:
         with open(self.metrics_path, "a") as f:
             f.write(json.dumps(metric) + "\n")
         return metric
-
-    def _maybe_grow(self, st: TableState, batch_id: int) -> int | None:
-        """Auto-bucket scaling check, run right after a compaction (the
-        moment base sizes are authoritative)."""
-        if self.cfg.grow_bucket_bytes is None:
-            return None
-        t = st.table
-        if t.base_bytes() / t.n_buckets() <= self.cfg.grow_bucket_bytes:
-            return None
-        return t.grow_buckets(2, summary={"batch_id": batch_id})
 
     def _gc_metadata(self, snapshot_ids: dict[str, int]) -> None:
         """Bound engine checkpoints + table snapshots/files (see GC_EVERY).

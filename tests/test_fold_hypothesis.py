@@ -4,12 +4,12 @@ random base rows), decode -> fold -> MERGE must reproduce a direct
 pandas state-machine simulation — in BOTH fold shapes (fused and
 salted) and BOTH sink modes (MOR delta and CoW rewrite). A second
 property stacks several MOR deltas, with additive schema changes between
-them, and checks current, older-snapshot and bucket-subset reads. A
-third stacks per-bucket deltas (the earlier delta layout, which tables
-written before shared deltas still hold) under shared ones, and checks
-reads, compaction and snapshot expiry. A fourth rewrites a table's
-manifests in the two older layouts, which list deltas under ``buckets``,
-and checks the same through a fresh LakeTable.
+them, and checks current and older-snapshot reads. A third stacks
+per-bucket deltas (the earlier delta layout, which tables written before
+shared deltas still hold) under shared ones, and checks reads,
+compaction and snapshot expiry. A fourth rewrites a table's manifests in
+older layouts (deltas listed under ``buckets``, or a metadata-only
+bucket-count doubling) and checks the same through a fresh LakeTable.
 
 Complements the targeted semantics tests with shrinking random
 coverage of the delete-barrier / written-flag / identity-dedup
@@ -41,7 +41,6 @@ from debezium_connector_spanner_spark.sources.lake import (
     LakeTable,
     _set_flag_fields,
     atomic_write,
-    bucket_expr,
 )
 
 KEYS = [("r1", "p1"), ("r1", "p2"), ("r2", "p1")]
@@ -191,17 +190,10 @@ def _base_table(spark, base_rows):
 
 
 def _state(df, cols):
-    return {(r["repo"], r["path"]): {c: r[c] for c in cols} for r in df.collect()}
-
-
-def _bucket_of(spark):
-    """KEYS -> bucket in a 2-bucket table."""
-    return {
-        (r["repo"], r["path"]): r["b"]
-        for r in spark.createDataFrame(KEYS, ["repo", "path"])
-        .select("repo", "path", bucket_expr(["repo", "path"], 2).alias("b"))
-        .collect()
-    }
+    rows = df.collect()
+    state = {(r["repo"], r["path"]): {c: r[c] for c in cols} for r in rows}
+    assert len(state) == len(rows), "a key read more than once"
+    return state
 
 
 def _fold_batch(spark, batch, schema=REPOS_SCHEMA_V1):
@@ -233,16 +225,14 @@ batch_st = st.tuples(
 @given(
     batches=st.lists(batch_st, min_size=2, max_size=3),
     base_mask=base_st,
-    subset=st.sets(st.integers(0, 1)),
     tie=st.sampled_from([1, 3, 32]),  # 32: every batch shares one ts
 )
-def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, subset, tie):
+def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, tie):
     """Stacked MOR deltas fold in (ts, rank) order: after each batch, the
-    current read, a read of an older snapshot and a bucket-subset read
-    each equal the state machine at that point of the log."""
+    current read and a read of an older snapshot each equal the state
+    machine at that point of the log."""
     base_rows = _base_rows(base_mask)
     t = _base_table(spark, base_rows)
-    bucket = _bucket_of(spark)
 
     version = 0
     rows = []
@@ -262,8 +252,6 @@ def test_multi_delta_mor_reads_match_state_machine(spark, batches, base_mask, su
         assert _state(t.read(), cols) == want, ("current", rows)
         old_sid, old_cols, old_want = history[pick % (len(history) - 1)]
         assert _state(t.read(sid=old_sid), old_cols) == old_want, ("older", old_sid, rows)
-        sub = {k: v for k, v in want.items() if bucket[k] in subset}
-        assert _state(t.read(buckets=sorted(subset)), cols) == sub, ("subset", subset, rows)
 
 
 def _per_bucket_mor_commit(t, folded):
@@ -304,13 +292,11 @@ def _per_bucket_mor_commit(t, folded):
 )
 def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, base_mask):
     """Per-bucket deltas followed by shared ones (a table written before
-    shared deltas, then resumed): full, bucket-subset and older-snapshot
-    reads, a compaction prepared between the two layouts and applied
-    after both, a full compaction and snapshot expiry each equal the
-    state machine."""
+    shared deltas, then resumed): full and older-snapshot reads, a
+    compaction prepared between the two layouts and applied after both, a
+    full compaction and snapshot expiry each equal the state machine."""
     base_rows = _base_rows(base_mask)
     t = _base_table(spark, base_rows)
-    bucket = _bucket_of(spark)
     rows = []
     history = [(t.current_snapshot_id(), _simulate([], base_rows))]
     prep = None
@@ -328,9 +314,6 @@ def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, b
 
     want = history[-1][1]
     assert _state(t.read(), COLS) == want, rows
-    for b in (0, 1):
-        sub = {k: v for k, v in want.items() if bucket[k] == b}
-        assert _state(t.read(buckets=[b]), COLS) == sub, ("subset", b, rows)
     for sid, old_want in history[:-1]:
         assert _state(t.read(sid=sid), COLS) == old_want, ("older", sid, rows)
     t.compact_apply(prep)
@@ -341,11 +324,14 @@ def test_mixed_delta_layouts_match_state_machine(spark, batches, n_per_bucket, b
     assert _state(t.read(), COLS) == want, ("compacted + expired", rows)
 
 
-def _write_legacy_manifests(root, per_bucket):
-    """Rewrite every manifest under ``root`` in an older layout with no
-    ``deltas`` list: each delta file listed under every bucket with
-    ``n_write`` 1, or (``per_bucket``) under the key bucket it was written
-    for, as a 5-field entry."""
+def _write_legacy_manifests(root, layout):
+    """Rewrite every manifest under ``root`` in an older layout. ``False``
+    and ``True`` drop the ``deltas`` list and list each delta file under
+    every bucket with ``n_write`` 1 or (``True``) under the key bucket it
+    was written for, as a 5-field entry. ``"grown"`` keeps ``deltas`` and
+    doubles ``n_buckets`` without rewriting a file, as bucket growth once
+    did: each base file of bucket ``b`` gains ``n_write``, the count it
+    was written under, and is listed under ``b`` and ``b + n_write``."""
     meta = os.path.join(root, "_meta")
     for fn in os.listdir(meta):
         if not fn.startswith("snap-"):
@@ -353,52 +339,61 @@ def _write_legacy_manifests(root, per_bucket):
         path = os.path.join(meta, fn)
         with open(path) as f:
             snap = json.load(f)
+        n = snap["n_buckets"]
         buckets = snap["buckets"]
-        for rel, sch_id, rank, sid in snap.pop("deltas"):
-            if per_bucket:
-                b = os.path.basename(os.path.dirname(rel)).split("=", 1)[1]
-                buckets.setdefault(b, []).append([rel, sch_id, rank, "delta", sid])
-            else:
-                for b in range(snap["n_buckets"]):
-                    buckets.setdefault(str(b), []).append([rel, sch_id, rank, "delta", sid, 1])
+        if layout == "grown":
+            snap["n_buckets"] = 2 * n
+            snap["buckets"] = {}
+            for b, fs in buckets.items():
+                if fs:
+                    for child in (int(b), int(b) + n):
+                        snap["buckets"][str(child)] = [[*e, n] for e in fs]
+        else:
+            for rel, sch_id, rank, sid in snap.pop("deltas"):
+                if layout is True:
+                    b = os.path.basename(os.path.dirname(rel)).split("=", 1)[1]
+                    buckets.setdefault(b, []).append([rel, sch_id, rank, "delta", sid])
+                else:
+                    for b in range(n):
+                        buckets.setdefault(str(b), []).append(
+                            [rel, sch_id, rank, "delta", sid, 1]
+                        )
         atomic_write(path, json.dumps(snap))
 
 
-@pytest.mark.parametrize("per_bucket", [False, True])
+@pytest.mark.parametrize("layout", [False, True, "grown"])
 @settings(max_examples=3, deadline=None)
 @given(
     batches=st.lists(st.lists(event_st, min_size=1, max_size=8), min_size=2, max_size=3),
     base_mask=base_st,
 )
-def test_legacy_manifests_match_state_machine(spark, per_bucket, batches, base_mask):
+def test_legacy_manifests_match_state_machine(spark, layout, batches, base_mask):
     """A table whose manifests list deltas under ``buckets`` (every file
-    under every bucket, or each under its own key bucket) opened by a
-    fresh LakeTable: full, bucket-subset and older-snapshot reads,
-    delta_depth, a compaction and snapshot expiry each equal the state
-    machine, and the compaction writes the current layout."""
+    under every bucket, or each under its own key bucket), or list each
+    base file under two buckets of a doubled bucket count, opened by a
+    fresh LakeTable: full and older-snapshot reads, delta_depth, a
+    compaction and snapshot expiry each equal the state machine, and the
+    compaction writes the current layout at the manifest's bucket count,
+    each base file listed once, under the bucket it was written for."""
     base_rows = _base_rows(base_mask)
     t = _base_table(spark, base_rows)
-    bucket = _bucket_of(spark)
     rows = []
     history = [(t.current_snapshot_id(), _simulate([], base_rows))]
     for stream in batches:
         batch = _mk_rows(stream, first=len(rows))
         rows += batch
         folded = _fold_batch(spark, batch)
-        if per_bucket:
+        if layout is True:
             sid = _per_bucket_mor_commit(t, folded)
         else:
             sid = merge_into(t, folded, target_schema=REPOS_SCHEMA_V1.spark_struct(), mode="mor")
         history.append((sid, _simulate(rows, base_rows)))
-    _write_legacy_manifests(t.root, per_bucket)
+    _write_legacy_manifests(t.root, layout)
 
     t = LakeTable(spark, t.root)
     want = history[-1][1]
     assert t.delta_depth() == len(batches)
     assert _state(t.read(), COLS) == want, rows
-    for b in (0, 1):
-        sub = {k: v for k, v in want.items() if bucket[k] == b}
-        assert _state(t.read(buckets=[b]), COLS) == sub, ("subset", b, rows)
     for sid, old_want in history[:-1]:
         assert _state(t.read(sid=sid), COLS) == old_want, ("older", sid, rows)
     sid = t.compact_apply(t.compact_prepare())
@@ -406,6 +401,10 @@ def test_legacy_manifests_match_state_machine(spark, per_bucket, batches, base_m
     with open(t._snap_path(sid)) as f:
         snap = json.load(f)
     assert snap["deltas"] == []
-    assert all(e[3] == "base" for fs in snap["buckets"].values() for e in fs)
+    assert snap["n_buckets"] == (4 if layout == "grown" else 2)
+    for b, fs in snap["buckets"].items():
+        for e in fs:
+            assert len(e) == 5 and e[3] == "base", e
+            assert os.path.basename(os.path.dirname(e[0])) == f"__bucket={b}", (b, e)
     t.expire_snapshots(sid)
     assert _state(LakeTable(spark, t.root).read(), COLS) == want, ("compacted + expired", rows)

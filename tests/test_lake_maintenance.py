@@ -270,44 +270,3 @@ def test_metadata_gc_bounds_files_and_resumes(spark, tmp_root, monkeypatch):
     want = fold_final_state(fx).sort_values(["repo", "path"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
 
-
-def test_bucket_growth_metadata_only(spark, tmp_root, monkeypatch):
-    """Auto-bucket scaling: when avg base bytes/bucket exceeds the target,
-    the engine doubles n_buckets via a METADATA-ONLY renumbering (no data
-    rewrite); legacy files are filtered by key hash on subset reads, new
-    writes/compactions use the new count, and state stays exact."""
-    cfg = GeneratorConfig(n_repos=8, paths_per_repo=5, hot_repos=2, events_per_key_mean=5)
-    fx = os.path.join(tmp_root, "fx")
-    write_fixture(fx, cfg)
-    monkeypatch.setattr(engine_mod, "COMPACT_EVERY", 2)
-    eng = CdcReplayEngine(
-        spark,
-        fx,
-        os.path.join(tmp_root, "tbl"),
-        os.path.join(tmp_root, "ckpt"),
-        start_us=EPOCH_MICROS,
-        end_us=EPOCH_MICROS + cfg.duration_s * 1_000_000,
-        n_batches=8,
-        initial_schema=REPOS_SCHEMA_V1,
-        base_df=spark.read.parquet(os.path.join(fx, "base_repos.parquet")),
-        n_buckets=2,
-        grow_bucket_bytes=1,  # tiny target -> growth triggers immediately
-    )
-    eng.run()
-    t = eng.table
-    assert t.n_buckets() > 2
-    ops = [
-        t.snapshot(i).get("summary", {}).get("op")
-        for i in range(max(0, t.current_snapshot_id() - 6), t.current_snapshot_id() + 1)
-        if os.path.exists(t._snap_path(i))
-    ]
-    assert "grow_buckets" in ops or t.n_buckets() == 4
-    got = (
-        eng.final_state().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    )
-    want = fold_final_state(fx).sort_values(["repo", "path"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
-    # subset reads partition the key space exactly (legacy files filtered)
-    n = t.n_buckets()
-    per = [t.read(buckets=[b]).count() for b in range(n)]
-    assert sum(per) == t.read().count()

@@ -1,7 +1,8 @@
 """LakeTable.read() plan building and reuse:
 
 - the read plan is reused while its snapshot manifest is cached, and a
-  snapshot id reused after a rollback never serves the old plan
+  snapshot id reused after a rollback never serves a plan built from
+  another manifest
 - expire_snapshots drops the plans of the snapshots it expires
 - building a read launches no Spark job: no schema inference, and no
   parallel file listing, also when a file group holds more paths than
@@ -72,12 +73,13 @@ def _build_jobs(spark, build):
     return df, {j for j in set(tracker.getJobIdsForGroup(None)) - before if j < control}
 
 
-def test_read_plan_reused_until_rollback_reuses_sid(spark, tmp_root):
+def test_read_plan_reused_until_rollback_reuses_sid(spark, tmp_root, monkeypatch):
     t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=2)
     sid = _commit(t, spark, [("r1", "p1", "a")])
     assert t.read() is t.read()  # one plan per live snapshot
-    assert t.read(buckets=[1, 0]) is t.read(buckets=[0, 1])
+    assert t.read(sid=sid) is t.read()
     assert _commits(t.read()) == [("r1", "p1", "a")]
+    rolled_back = t.snapshot(sid)
 
     t.rollback(sid - 1)
     assert _commits(t.read()) == []
@@ -85,7 +87,10 @@ def test_read_plan_reused_until_rollback_reuses_sid(spark, tmp_root):
     assert _commit(t, spark, [("r2", "p2", "b")]) == sid
     assert _commits(t.read()) == [("r2", "p2", "b")]
     assert _commits(t.read(sid=sid)) == [("r2", "p2", "b")]
-    assert _commits(t.read(buckets=[0, 1])) == [("r2", "p2", "b")]
+    # a reader that resolved the rolled-back manifest before the commit
+    # replaced it gets a plan of that manifest, not the kept one
+    monkeypatch.setattr(t, "snapshot", lambda sid=None: rolled_back)
+    assert _commits(t.read(sid=sid)) == [("r1", "p1", "a")]
 
 
 def test_expire_snapshots_drops_their_read_plans(spark, tmp_root):
@@ -93,10 +98,9 @@ def test_expire_snapshots_drops_their_read_plans(spark, tmp_root):
     sids = [_commit(t, spark, [("r1", "p1", f"c{i}")]) for i in range(3)]
     for s in sids:
         t.read(sid=s)
-        t.read(sid=s, buckets=[0])
-    assert {k[0] for k in t._plans} == set(sids)
+    assert set(t._plans) == set(sids)
     t.expire_snapshots(sids[-1])
-    assert {k[0] for k in t._plans} == {sids[-1]}
+    assert set(t._plans) == {sids[-1]}
     assert _commits(t.read()) == [("r1", "p1", "c2")]
 
 
@@ -104,8 +108,8 @@ def test_mor_commit_names_each_delta_file_once(spark, tmp_root):
     """A merge-on-read delta is written unbucketed: each of its files is
     named once in the manifest's ``deltas``, no bucket lists a delta, the
     commit raises delta_depth() by exactly one however many files it
-    wrote, subset reads still partition the key space, and a copy-on-write
-    commit leaves no delta."""
+    wrote, a read returns each key once, and a copy-on-write commit leaves
+    no delta."""
     t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=4)
     _commit(t, spark, [("r0", "p0", "a")])
     depth = t.delta_depth()
@@ -121,7 +125,6 @@ def test_mor_commit_names_each_delta_file_once(spark, tmp_root):
         assert json.load(f)["deltas"] == snap["deltas"]
     assert t.delta_depth() == depth + 1
     assert _commits(t.read()) == sorted(rows)
-    assert sum(t.read(buckets=[b]).count() for b in range(4)) == len(rows)
 
     t.commit_merge(t.read())
     assert t.snapshot()["deltas"] == []
@@ -141,8 +144,9 @@ def test_read_build_launches_no_spark_job(spark, tmp_root):
     full, jobs = _build_jobs(spark, fresh.read)
     assert jobs == set()
     assert full.count() == 200
-    _, jobs = _build_jobs(spark, lambda: fresh.read(buckets=[1, 5, 9]))
+    older, jobs = _build_jobs(spark, lambda: fresh.read(sid=fresh.current_snapshot_id() - 1))
     assert jobs == set()
+    assert older.count() == 200
 
 
 def test_64_bucket_read_launches_no_listing_job(spark, tmp_root):
@@ -166,13 +170,15 @@ def test_snapshot_and_plan_caches_under_concurrent_readers(spark, tmp_root, monk
     """More reader threads than cores, over more snapshots than the caches
     hold, while one thread keeps replacing manifests (as a commit that
     reuses a sid does): no thread fails, every read gets a plan of the sid
-    it asked for, and every kept plan belongs to a cached manifest."""
+    it asked for, and whenever an auditor holding the caches' lock looks,
+    both caches are within bounds and every kept plan belongs to the
+    cached manifest of its sid."""
     t = LakeTable.create(spark, os.path.join(tmp_root, "t"), SCHEMA, KEYS, n_buckets=2)
     for _ in range(2 * lake._CACHE_MAX):
         prev, new_id, _schema, schema_id, schemas = t._next_snapshot(None)
         t._finish_snapshot(prev, new_id, schema_id, schemas, {}, {})
     n_sids = t.current_snapshot_id() + 1
-    monkeypatch.setattr(LakeTable, "_build_read", lambda self, snap, want: snap)
+    monkeypatch.setattr(LakeTable, "_build_read", lambda self, snap: snap)
     errors = []
     stop = time.monotonic() + 1.5
 
@@ -181,8 +187,21 @@ def test_snapshot_and_plan_caches_under_concurrent_readers(spark, tmp_root, monk
             i = k
             while time.monotonic() < stop:
                 sid = i % n_sids
-                assert t.read(sid=sid, buckets=[i % 2] if i % 3 else None)["id"] == sid
+                assert t.read(sid=sid)["id"] == sid
                 i += 7
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    def audit():
+        assert len(t._snap_cache) <= lake._CACHE_MAX and len(t._plans) <= lake._CACHE_MAX
+        for sid, (snap, _df) in t._plans.items():
+            assert t._snap_cache.get(sid) is snap, sid
+
+    def auditor():
+        try:
+            while time.monotonic() < stop:
+                with t._lock:
+                    audit()
         except Exception as e:  # reported below
             errors.append(e)
 
@@ -197,7 +216,7 @@ def test_snapshot_and_plan_caches_under_concurrent_readers(spark, tmp_root, monk
             errors.append(e)
 
     workers = [threading.Thread(target=reader, args=(k,)) for k in range(2 * os.cpu_count())]
-    workers.append(threading.Thread(target=replacer))
+    workers += [threading.Thread(target=replacer), threading.Thread(target=auditor)]
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
@@ -209,6 +228,4 @@ def test_snapshot_and_plan_caches_under_concurrent_readers(spark, tmp_root, monk
         sys.setswitchinterval(interval)
     assert not any(w.is_alive() for w in workers)
     assert errors == []
-    assert len(t._snap_cache) <= lake._CACHE_MAX and len(t._plans) <= lake._CACHE_MAX
-    for (sid, _b), (snap, _df) in t._plans.items():
-        assert t._snap_cache[sid] is snap
+    audit()

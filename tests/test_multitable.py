@@ -6,13 +6,15 @@ src/test/java/.../DataTypesIT.java:33-125 type fidelity).
 One replay run carries two tables in the same change stream; each lands
 in its own LakeTable with its own schema — repos checked against the
 pandas oracle, types_probe against the generator's expected state with
-BYTES as BINARY and typed arrays.
+BYTES as BINARY and typed arrays. A batch whose merge fails still
+releases the log slice the tables share.
 """
 
 import os
 
 import pandas as pd
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import types as T
 
 from debezium_connector_spanner_spark.fixtures.generator import (
@@ -112,3 +114,27 @@ def test_table_exclude_filter_skips_table(spark, tmp_root):
     eng.run()
     assert eng.final_state("types_probe").count() == 0
     assert eng.final_state("repos").count() > 0
+
+
+def test_failed_merge_releases_shared_slice(spark, tmp_root, monkeypatch):
+    """A multi-table batch persists the decoded log slice once for every
+    table's merge; a merge that raises must still unpersist it, or the
+    long-lived session keeps the slice cached."""
+    cfg = GeneratorConfig(
+        n_repos=3, paths_per_repo=2, events_per_key_mean=3, types_probe_keys=6
+    )
+    fx = os.path.join(tmp_root, "fx")
+    write_fixture(fx, cfg)
+    eng = _engine(spark, fx, tmp_root, cfg)
+    merge_attempt = CdcReplayEngine._merge_attempt
+
+    def failing_merge(self, scan, name, *a, **kw):
+        if name == "types_probe":
+            raise RuntimeError("types_probe merge failed")
+        return merge_attempt(self, scan, name, *a, **kw)
+
+    monkeypatch.setattr(CdcReplayEngine, "_merge_attempt", failing_merge)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="types_probe merge failed"):
+        eng.run()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
