@@ -639,7 +639,7 @@ FROM folded WHERE NOT last_is_del
 def _trace_sql_parts(fx: str, sf_name: str = "sf0.01") -> tuple[str, str]:
     """Shared builder for the batch-loop re-simulation (O1 gate, O9
     watermark, K2 offset advance, O14 drain) — the semantics of
-    engine.py:_run/_run_batch re-derived independently over the raw log.
+    engine.py:_run/_batch re-derived independently over the raw log.
     Returns (cte_blocks, trace_union) for composition into the
     watermark-trace and stamped-envelope oracles.
 

@@ -16,11 +16,13 @@ state machine. Per batch (reference parity in parentheses, files under
    Token dirs + sorted row groups give partition/rowgroup pruning.
 3. **Progress**: one ``Observation`` on that scan, below every table and
    record-type filter, collects the control rows (heartbeats, child
-   partitions, end markers) and the distinct data-row schemas while the
-   merges consume the scan — one log scan per batch, like the
-   reference's single change-stream query (db/dao/ChangeStreamDao.java:
-   65-84). The driver derives per-token progress from it, which drives
-   offsets, heartbeat handling (K2) and per-partition lineage (M1/M3).
+   partitions, end markers), the distinct data-row schemas and, per
+   token, the count and max commit ts of the data rows of the tables the
+   batch merges, while the merges consume the scan — one log scan and one
+   observation per batch, like the reference's single change-stream
+   query (db/dao/ChangeStreamDao.java:65-84). The driver derives
+   per-token progress from it, which drives offsets, heartbeat handling
+   (K2) and per-partition lineage (M1/M3).
 4. **Decode + fold + MERGE** (D1-D9, O5/O12, K1): events are routed BY
    TABLE (processor/SpannerEventDispatcher.java:45-87,
    schema/KafkaSpannerTableSchemaFactory.java:104-142): each configured
@@ -31,10 +33,11 @@ state machine. Per batch (reference parity in parentheses, files under
 5. **Watermark** (O9, task/LowWatermarkCalculator.java:47-169):
    min over non-finished partitions of coalesce(offset, start_ts).
 6. **Commit**: all table snapshots committed FIRST, then the checkpoint
-   (offsets, DAG state, per-table schema version + snapshot id), each
-   metadata file via ``atomic_write`` (temp file, fsync, rename, directory
-   fsync). On resume, any snapshot newer than the checkpoint is rolled
-   back -> exactly-once (replaces FinishingPartitionManager.java:55-114).
+   (offsets, DAG state, per-table schema version + snapshot id), written
+   on the batch thread, each metadata file via ``atomic_write`` (temp
+   file, fsync, rename, directory fsync). On resume, any snapshot newer
+   than the checkpoint is rolled back -> exactly-once (replaces
+   FinishingPartitionManager.java:55-114).
 7. **Schema registry** (db/metadata/SchemaRegistry.java:78-179,
    SchemaMerger.java:24-53): distinct (table, column_types) observed in
    the batch are merged additively per table (union of columns, new wins
@@ -48,6 +51,11 @@ state machine. Per batch (reference parity in parentheses, files under
    batches, rebase-commit in the loop); every GC_EVERY batches, snapshots
    and checkpoints older than the last GC_KEEP expire.
 
+``_batch`` runs these steps as named stages (``_stage``): each stage's
+Spark jobs are tagged ``b<id>:<stage>[:<table>]`` and scheduled in the
+FAIR pool ``ingest`` (the compaction lane: ``maint``), and its wall time
+lands in the batch's ``timings``.
+
 Every caller-facing option is declared once, with its default and reason,
 in ``config.EngineConfig``; tuning numbers no caller sets are the module
 constants below.
@@ -58,9 +66,11 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from debezium_connector_spanner_spark.config import (
@@ -97,9 +107,9 @@ COMPACT_EVERY = 6
 # metadata GC (O13 for FILES): every GC_EVERY batches, expire table
 # snapshots + engine checkpoints older than the last GC_KEEP committed
 # ones and remove data files only they referenced (incl. rollback
-# orphans + pre-compaction deltas). GC_KEEP >= 2 guarantees the resume
-# target always survives a crash with the newest checkpoint write still
-# in flight.
+# orphans + pre-compaction deltas). GC runs after the batch's checkpoint
+# is durable; GC_KEEP >= 2 keeps a parseable fallback beside it for
+# _load_latest_checkpoint.
 GC_EVERY = 8
 GC_KEEP = 4
 # adaptive skew: salt the fold when the previous batch's hottest key held
@@ -133,6 +143,31 @@ class TableState:
 
     schema: TableSchema
     table: LakeTable
+
+
+@dataclass
+class _Batch:
+    """One replay batch's state, filled in by its stages in order."""
+
+    id: int
+    end_us: int = 0
+    active: list[str] = field(default_factory=list)
+    per_token: list[str] = field(default_factory=list)  # lineage-observed
+    timings: dict[str, float] = field(default_factory=dict)
+    snapshot_ids: dict[str, int] = field(default_factory=dict)
+    merge_tables: list[str] = field(default_factory=list)  # D10 keeps these
+    salted: list[str] = field(default_factory=list)
+    data_scan: DataFrame | None = None  # None: no active partition
+    obs: Observation | None = None
+    seen: dict | None = None  # the observation's result, once merges ran
+    attempts: dict[str, tuple] = field(default_factory=dict)  # (sid, fold_obs)
+    events: int = 0
+    mods: int = 0
+    lineage: list[dict] = field(default_factory=list)
+    finished: list[str] = field(default_factory=list)
+    new_children: dict[str, tuple[list[str], int]] = field(default_factory=dict)
+    stuck: list[str] = field(default_factory=list)
+    requeried: list[str] = field(default_factory=list)
 
 
 _WIDTH = {"INT64": 1, "FLOAT32": 2, "FLOAT64": 3}
@@ -181,16 +216,12 @@ class CdcReplayEngine:
         self.cfg = EngineConfig(
             events_path, table_root, checkpoint_dir, start_us, end_us, **options
         )
-        # async-compaction maintenance lane: one background driver thread
-        # runs compact_prepare's Spark job; the commit stays in the loop.
-        # Created lazily (only mor uses it) and shut down at the end of
-        # run() so no non-daemon thread outlives the engine.
-        self._maint_pool = None
+        # async-compaction maintenance lane: one driver thread runs
+        # compact_prepare's Spark job (the commit stays in the loop); made
+        # lazily (only mor uses it), shut down when run() ends.
+        self._maint_pool: ThreadPoolExecutor | None = None
         self._compact_futures: dict[str, object] = {}
-        # serial checkpoint writer: the JSON dump + renames happen off the
-        # batch loop; single worker preserves write order, run() joins it
-        self._ckpt_pool = None
-        self._ckpt_future = None
+        self._b: _Batch | None = None  # the batch in flight (see _stage)
         # adaptive-skew state: per-table hottest-key share of the LAST
         # batch's mods (drives this batch's fused-vs-salted choice,
         # one-batch reaction lag like the reference's rebalancer). Derived
@@ -218,11 +249,9 @@ class CdcReplayEngine:
         self._salt_width = spark.sparkContext.defaultParallelism
 
         # normalize the single-table legacy shape to the multi-table one
-        if tables is None:
-            if initial_schema is not None:
-                tables = {initial_schema.table: (initial_schema, base_df)}
-            else:
-                tables = {}
+        if tables is None and initial_schema is not None:
+            tables = {initial_schema.table: (initial_schema, base_df)}
+        tables = tables or {}
 
         ckpt = self._load_latest_checkpoint()
         # collected-errors validation BEFORE any side effect (table
@@ -233,55 +262,9 @@ class CdcReplayEngine:
             raise ConfigValidationError(cfg_errors)
         os.makedirs(checkpoint_dir, exist_ok=True)
         if ckpt is None:
-            self._primary = next(iter(tables))
-            self.start_us, self.end_us = start_us, end_us
-            self.n_batches = self.cfg.n_batches
-            self.batch_id = -1
-            self.frontier_us = start_us
-            self.tokens: dict[str, TokenState] = {
-                INITIAL_PARTITION_TOKEN: TokenState(
-                    INITIAL_PARTITION_TOKEN, [], start_us, READY, None
-                )
-            }
-            self.tables: dict[str, TableState] = {}
-            for name, (schema, bdf) in tables.items():
-                self.tables[name] = TableState(
-                    schema,
-                    LakeTable.create(
-                        spark,
-                        self._table_path(name),
-                        schema.spark_struct(),
-                        schema.key_columns,
-                        n_buckets=self.cfg.n_buckets,
-                        initial_df=bdf,
-                        overwrite=False,
-                    ),
-                )
-            self.watermark_us = start_us
-            self._checkpoint(self._snapshot_ids())
+            self._bootstrap(tables)
         else:
-            self.start_us, self.end_us = ckpt["start_us"], ckpt["end_us"]
-            self.n_batches = ckpt["n_batches"]
-            self.batch_id = ckpt["batch_id"]
-            self.frontier_us = ckpt["frontier_us"]
-            self.tokens = {
-                t: TokenState(t, s["parents"], s["start_us"], s["state"], s["offset_us"])
-                for t, s in ckpt["tokens"].items()
-            }
-            self._primary = next(iter(ckpt["tables"]))
-            self.tables = {}
-            for name, ts in ckpt["tables"].items():
-                lake = LakeTable(spark, self._table_path(name))
-                # exactly-once resume: discard any snapshot not covered by
-                # the checkpoint (crash between data and state commits)
-                if lake.current_snapshot_id() != ts["snapshot_id"]:
-                    lake.rollback(ts["snapshot_id"])
-                self.tables[name] = TableState(
-                    TableSchema.from_column_types_json(name, ts["schema_cols"]), lake
-                )
-            self.watermark_us = ckpt["watermark_us"]
-            self._rate_ev_per_us = ckpt.get("rate_ev_per_us")
-            self._hot_share = ckpt.get("hot_share", {})
+            self._restore(ckpt)
         self.metrics_path = os.path.join(checkpoint_dir, "metrics.jsonl")
         # M1-M3 counter/gauge/sketch surface (SpannerMeter.java:298-384);
         # snapshots ride every metrics jsonl line
@@ -289,31 +272,86 @@ class CdcReplayEngine:
 
         self.meter = EngineMeter()
         self.meter.event_queue_total_capacity = self.cfg.max_events_per_batch
-        # Scale-adaptive scan split size (guide §2.2/§6.1): a fixed split
-        # size cannot serve both ends — a batch window scans ~log_bytes/
-        # n_batches, and the split size should put ~4 task waves on the
-        # cores working on THAT volume. At sf0.1 (1.3GB log, 8 batches)
-        # this lands on the session's 2MB floor (the swept local optimum);
-        # at sf1 (13.4GB) a 2MB split spawns ~6,600 tasks per scan of
-        # which >90% own no row group — measured 6.8s vs 0.4s for the SAME
-        # pruned window at 13/32MB splits (the split-size sweep recorded
-        # in OPTIMIZATION_r06.md). The value is derived from input size
-        # and core count, never a constant tuned to one scale; _run() sets
-        # it for the replay's jobs and close() restores the session
-        # default. Validation guarantees the log dir exists; an empty log
-        # keeps the session default.
+        self._scan_split_bytes = self._split_bytes()
+        self._prev_confs: dict[str, str | None] | None = None
+
+    def _bootstrap(self, tables: dict[str, tuple[TableSchema, DataFrame | None]]) -> None:
+        """First start: create every table and write checkpoint 0."""
+        self._primary = next(iter(tables))
+        self.start_us, self.end_us = self.cfg.start_us, self.cfg.end_us
+        self.n_batches = self.cfg.n_batches
+        self.batch_id = -1
+        self.frontier_us = self.start_us
+        self.tokens: dict[str, TokenState] = {
+            INITIAL_PARTITION_TOKEN: TokenState(
+                INITIAL_PARTITION_TOKEN, [], self.start_us, READY, None
+            )
+        }
+        self.tables: dict[str, TableState] = {}
+        for name, (schema, bdf) in tables.items():
+            self.tables[name] = TableState(
+                schema,
+                LakeTable.create(
+                    self.spark,
+                    self._table_path(name),
+                    schema.spark_struct(),
+                    schema.key_columns,
+                    n_buckets=self.cfg.n_buckets,
+                    initial_df=bdf,
+                    overwrite=False,
+                ),
+            )
+        self.watermark_us = self.start_us
+        self._checkpoint(self._snapshot_ids())
+
+    def _restore(self, ckpt: dict) -> None:
+        """Resume from a checkpoint, rolling each table back to it."""
+        self.start_us, self.end_us = ckpt["start_us"], ckpt["end_us"]
+        self.n_batches = ckpt["n_batches"]
+        self.batch_id = ckpt["batch_id"]
+        self.frontier_us = ckpt["frontier_us"]
+        self.tokens = {
+            t: TokenState(t, s["parents"], s["start_us"], s["state"], s["offset_us"])
+            for t, s in ckpt["tokens"].items()
+        }
+        self._primary = next(iter(ckpt["tables"]))
+        self.tables = {}
+        for name, ts in ckpt["tables"].items():
+            lake = LakeTable(self.spark, self._table_path(name))
+            # exactly-once resume: discard any snapshot not covered by
+            # the checkpoint (crash between data and state commits)
+            if lake.current_snapshot_id() != ts["snapshot_id"]:
+                lake.rollback(ts["snapshot_id"])
+            self.tables[name] = TableState(
+                TableSchema.from_column_types_json(name, ts["schema_cols"]), lake
+            )
+        self.watermark_us = ckpt["watermark_us"]
+        self._rate_ev_per_us = ckpt.get("rate_ev_per_us")
+        self._hot_share = ckpt.get("hot_share", {})
+
+    def _split_bytes(self) -> int | None:
+        """Scale-adaptive scan split size (guide §2.2/§6.1): a fixed split
+        size cannot serve both ends — a batch window scans ~log_bytes/
+        n_batches, and the split size should put ~4 task waves on the
+        cores working on THAT volume. At sf0.1 (1.3GB log, 8 batches)
+        this lands on the session's 2MB floor (the swept local optimum);
+        at sf1 (13.4GB) a 2MB split spawns ~6,600 tasks per scan of
+        which >90% own no row group — measured 6.8s vs 0.4s for the SAME
+        pruned window at 13/32MB splits (the split-size sweep recorded
+        in OPTIMIZATION_r06.md). The value is derived from input size
+        and core count, never a constant tuned to one scale; _run() sets
+        it for the replay's jobs and close() restores the session
+        default. Validation guarantees the log dir exists; an empty log
+        keeps the session default (None)."""
         ev_dir = os.path.join(self.cfg.events_path, WIRE_LOG_DIR[self.cfg.wire_format])
         total = sum(
             os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(ev_dir) for f in fs
         )
-        self._scan_split_bytes = None
-        if total:
-            cores = max(1, spark.sparkContext.defaultParallelism)
-            per_batch = total / max(1, self.n_batches)
-            self._scan_split_bytes = int(
-                min(max(per_batch / (4 * cores), 2 * 1024 * 1024), 64 * 1024 * 1024)
-            )
-        self._prev_confs: dict[str, str | None] | None = None
+        if not total:
+            return None
+        cores = max(1, self.spark.sparkContext.defaultParallelism)
+        per_batch = total / max(1, self.n_batches)
+        return int(min(max(per_batch / (4 * cores), 2 * 1024 * 1024), 64 * 1024 * 1024))
 
     # ------------------------------------------------------------- layout
     def _table_path(self, name: str) -> str:
@@ -379,35 +417,12 @@ class CdcReplayEngine:
             )
         return None
 
-    def _maint_compact_prepare(self, table, base_sid):
-        # Runs on the maintenance-lane thread. That thread was spawned from
-        # the batch loop, so it INHERITED the 'ingest' scheduler pool
-        # (InheritableThreadLocal) — override to the low-weight 'maint'
-        # pool so the compaction fold backfills stage-tail idle cores
-        # instead of competing with batch jobs (see fair_pools.xml).
-        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "maint")
-        return table.compact_prepare(base_sid)
-
-    def _pool(self, attr: str, prefix: str):
-        pool = getattr(self, attr)
-        if pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix=prefix)
-            setattr(self, attr, pool)
-        return pool
-
     def close(self) -> None:
-        """Join the checkpoint writer and stop the maintenance lane. Safe
+        """Stop the maintenance lane and restore the session confs. Safe
         to call repeatedly; run() calls it on every exit path."""
-        if self._ckpt_future is not None:
-            self._ckpt_future.result()
-            self._ckpt_future = None
-        for attr in ("_ckpt_pool", "_maint_pool"):
-            pool = getattr(self, attr)
-            if pool is not None:
-                pool.shutdown(wait=True, cancel_futures=True)
-                setattr(self, attr, None)
+        if self._maint_pool is not None:
+            self._maint_pool.shutdown(wait=True, cancel_futures=True)
+            self._maint_pool = None
         self._compact_futures.clear()
         # restore the session confs _run() scoped to this replay's jobs;
         # queries after run() see the session defaults again
@@ -447,19 +462,7 @@ class CdcReplayEngine:
                 for t, s in self.tokens.items()
             },
         }
-        path = self._ckpt_path(self.batch_id)
-        # the state dict is fully materialized here (no shared mutable
-        # refs), so the serialization + atomic renames can run on the
-        # writer thread. Exactly-once is unaffected: data commits still
-        # strictly precede their checkpoint; a crash before the write
-        # lands just resumes one batch earlier (rollback + idempotent
-        # re-apply). run()/close() join the writer, so by the time a
-        # caller can construct a resumed engine the file is durable.
-        if self._ckpt_future is not None:
-            self._ckpt_future.result()  # keep ordering + surface errors
-        self._ckpt_future = self._pool("_ckpt_pool", "cdc-ckpt").submit(
-            self._write_checkpoint, state, path
-        )
+        self._write_checkpoint(state, self._ckpt_path(self.batch_id))
 
     def _write_checkpoint(self, state: dict, path: str) -> None:
         # the checkpoint is durable before LATEST names it, so LATEST
@@ -536,16 +539,12 @@ class CdcReplayEngine:
         try:
             return self._run(max_batches)
         finally:
-            # join the checkpoint writer + stop the maintenance lane on
-            # EVERY exit path (incl. raise with a compact_prepare in
-            # flight) — no leaked threads, no unjoined background job
+            # stop the maintenance lane on EVERY exit path (incl. raise
+            # with a compact_prepare in flight) — no leaked threads, no
+            # unjoined background job
             self.close()
 
     def _run(self, max_batches: int | None = None) -> dict:
-        # batch jobs (the per-table merges) run in the high-weight ingest pool;
-        # per-batch worker threads inherit this via InheritableThreadLocal.
-        # The maintenance lane overrides to 'maint' in its own thread.
-        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "ingest")
         if self._prev_confs is None:
             # AQE replaces a query stage whose output is empty with an
             # empty relation, and the batch scan's progress Observation
@@ -563,9 +562,9 @@ class CdcReplayEngine:
         done = 0
         totals = {"events": 0, "mods": 0, "wall_s": 0.0}
 
-        def step(batch_end_us: int) -> None:
+        def step(target_end_us: int) -> None:
             nonlocal done
-            m = self._run_batch(self.batch_id + 1, batch_end_us)
+            m = self._batch(target_end_us)
             totals["events"] += m["events"]
             totals["mods"] += m["mods"]
             totals["wall_s"] += m["wall_s"]
@@ -574,8 +573,7 @@ class CdcReplayEngine:
         while self.frontier_us < self.end_us:
             if max_batches is not None and done >= max_batches:
                 break
-            active = self._gate()
-            step(self._size_batch(active, self._next_boundary()))
+            step(self._next_boundary())
 
         # Drain: a child gated open by a parent finishing in the LAST
         # scheduled batch still has to stream its window (the reference
@@ -733,208 +731,212 @@ class CdcReplayEngine:
             return re.search(self.cfg.table_exclude, name) is None
         return True
 
-    def _run_batch(self, batch_id: int, batch_end_us: int) -> dict:
-        # Balance the M3 active-queries gauge when the batch aborts
-        # between on_query() and on_query_done() (stuck_policy='fail'
-        # raise, failed schema retry, merge error): the gauge is a
-        # per-batch 0/1, so an abort mid-window must decrement it or the
-        # final metrics line reports a phantom in-flight query.
-        issued0 = self.meter.queries_issued_total
-        try:
-            return self._run_batch_impl(batch_id, batch_end_us)
-        except BaseException:
-            if self.meter.active_queries and self.meter.queries_issued_total > issued0:
-                self.meter.on_query_done()
-            raise
-
-    def _run_batch_impl(self, batch_id: int, batch_end_us: int) -> dict:
+    # ------------------------------------------------------------ batch
+    def _batch(self, target_end_us: int) -> dict:
+        """One micro-batch, stage by stage (the module docstring's steps)."""
         t0 = time.monotonic()
-        timings: dict[str, float] = {}
-        active = self._gate()
-        scan = self._active_scan(active, batch_end_us) if active else None
-        if scan is not None:
-            self.meter.on_query()  # one change-stream query per batch window
+        b = self._b = _Batch(self.batch_id + 1, snapshot_ids=self._snapshot_ids())
+        with self._scan(b, target_end_us):
+            if b.data_scan is not None:
+                self._merge(b)
+                self._resolve(b)
+        if b.seen is not None:
+            self._harvest(b)
+            self._maintain(b)
+        self._advance(b)
+        self._commit(b)
+        return self._metrics_line(b, time.monotonic() - t0)
 
-        events = 0
-        mods = 0
-        lineage = []
-        new_children: dict[str, tuple[list[str], int]] = {}
-        finished: list[str] = []
-        salted_used: list[str] = []
-        snapshot_ids = self._snapshot_ids()
+    @contextmanager
+    def _stage(self, name: str, table: str | None = None):
+        """Run the block as stage ``name`` of the batch in flight: the Spark
+        jobs this thread submits in it are tagged ``b<id>:<name>[:<table>]``
+        and run in the FAIR pool ``maint`` (the maintenance lane's
+        ``compact`` stage) or ``ingest``. PySpark pins each Python thread to
+        a JVM thread that inherits no local property, so every thread that
+        submits jobs enters its own stage; both properties are restored on
+        exit. The block's wall time adds to the batch's timings as
+        ``<name>[_<table>]_s``, except in the lane, which runs beside later
+        batches."""
+        b = self._b
+        lane = name == "compact"
+        sc = self.spark.sparkContext
+        props = {
+            "spark.scheduler.pool": "maint" if lane else "ingest",
+            "spark.job.description": f"b{b.id}:{name}" + (f":{table}" if table else ""),
+        }
+        prev = {k: sc.getLocalProperty(k) for k in props}
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)
+        t0 = time.monotonic()
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
+            if not lane:
+                key = f"{name}_{table}_s" if table else f"{name}_s"
+                b.timings[key] = round(b.timings.get(key, 0.0) + time.monotonic() - t0, 3)
 
-        if scan is not None:
-            from concurrent.futures import ThreadPoolExecutor
+    @contextmanager
+    def _scan(self, b: _Batch, target_end_us: int):
+        """Gate, size and scan the window (b.data_scan stays None when no
+        partition is active). While the block runs, the query gauge counts
+        the scan in flight; on exit, raised or not, the gauge is balanced
+        and the shared multi-table slice released (the session outlives
+        the batch)."""
+        with self._stage("scan"):
+            b.active = self._gate()
+            b.end_us = self._size_batch(b.active, target_end_us)
+            if b.active:
+                b.merge_tables = [n for n in self.tables if self._table_allowed(n)]
+                b.data_scan = self._data_scan(self._observed_scan(b))
+                if len(self.tables) > 1:
+                    # one physical scan for N tables: persist the slim decode
+                    # projection (bounded by max_events_per_batch) instead of
+                    # re-reading the log once per table — table_name row-group
+                    # stats can't prune (tables interleave within a token file)
+                    b.data_scan = b.data_scan.where(
+                        F.col("record_type") == DATA_CHANGE
+                    ).select(
+                        "partition_token", "commit_ts", "record_sequence",
+                        "server_txn_id", "table_name", "mod_type",
+                        "value_capture_type", "column_types", "mods",
+                    ).persist()
+        if b.data_scan is None:
+            yield
+            return
+        self.meter.on_query()  # one change-stream query per batch window
+        try:
+            yield
+        finally:
+            if b.data_scan.is_cached:
+                b.data_scan.unpersist()
+            self.meter.on_query_done()
 
-            from pyspark.sql import Observation
+    def _observed_scan(self, b: _Batch) -> DataFrame:
+        """The window's scan with the batch's one progress Observation.
 
-            t_stage = time.monotonic()
-            # --- progress + schema observation, riding the merge scan.
-            # It sits below the D10 filter, the per-table filters and the
-            # DATA_CHANGE filter (Catalyst does not push filters through
-            # CollectMetrics), so it sees every row of the pruned window:
-            # the control rows (heartbeats / child partitions / end
-            # markers, ~2% of records) and the distinct data-row
-            # (table, column_types) pairs. Each merge's first action is a
-            # whole-scan write (merge_into takes every bucket), so the
-            # observation is complete when the merges return (an empty
-            # slice included: _run turns off AQE's empty-stage pruning). ---
-            is_data = F.col("record_type") == DATA_CHANGE
-            scan_obs = Observation(f"scan-{batch_id}")
-            scan = scan.observe(
-                scan_obs,
-                F.collect_list(
-                    F.when(
-                        ~is_data,
-                        F.struct(
-                            "partition_token",
-                            "record_type",
-                            F.unix_micros("commit_ts").alias("ts_us"),
-                            "child_partitions",
-                        ),
-                    )
-                ).alias("ctrl"),
-                F.collect_set(
-                    F.when(
-                        is_data,
-                        F.struct(
-                            F.col("table_name").alias("tbl"),
-                            F.col("column_types").alias("cols"),
-                        ),
-                    )
-                ).alias("schemas"),
+        It sits below the D10 filter, the per-table filters and the
+        DATA_CHANGE filter (Catalyst does not push filters through
+        CollectMetrics), so it sees every row of the window: the control
+        rows (heartbeats / child partitions / end markers, ~2% of
+        records), the distinct data-row (table, column_types) pairs, and
+        the data records of the tables this batch merges, counted in
+        total and, with max commit ts, per token. Each merge's first
+        action is a whole-scan write (merge_into takes every bucket), so
+        the observation is complete when the merges return (an empty slice
+        included: _run turns off AQE's empty-stage pruning)."""
+        is_data = F.col("record_type") == DATA_CHANGE
+        merged = (
+            is_data & F.col("table_name").isin(b.merge_tables)
+            if b.merge_tables
+            else F.lit(False)  # D10 kept no table, and IN () is not valid SQL
+        )
+        ts_us = F.unix_micros("commit_ts")
+        ctrl = F.struct(
+            "partition_token", "record_type", ts_us.alias("ts_us"), "child_partitions"
+        )
+        cols = F.struct(F.col("table_name").alias("tbl"), F.col("column_types").alias("cols"))
+        aggs = [
+            F.collect_list(F.when(~is_data, ctrl)).alias("ctrl"),
+            F.collect_set(F.when(is_data, cols)).alias("schemas"),
+            F.count(F.when(merged, 1)).alias("_n_rec_total"),
+        ]
+        # per-token lineage rides along when the active set is small;
+        # beyond the cap only the global counters are observed
+        b.per_token = b.active if len(b.active) <= 64 else []
+        for i, tok in enumerate(b.per_token):
+            mine = merged & (F.col("partition_token") == tok)
+            aggs.append(F.count(F.when(mine, 1)).alias(f"_n_{i}"))
+            aggs.append(F.max(F.when(mine, ts_us)).alias(f"_ts_{i}"))
+        b.obs = Observation(f"scan-{b.id}")
+        return self._active_scan(b.active, b.end_us).observe(b.obs, *aggs)
+
+    def _merge(self, b: _Batch) -> None:
+        """OPTIMISTIC decode: every table D10 keeps is merged concurrently
+        with its CURRENT schema; _resolve then retries a table whose
+        observed schema evolved — the reference's
+        cache-invalidate-and-retry (db/metadata/SchemaRegistry.java:78-86),
+        paid only on the rare schema-change batch."""
+        with self._stage("overlap"):
+            if b.data_scan.is_cached or not b.merge_tables:
+                # one whole-scan action completes the observation: it
+                # builds the shared cache before the concurrent merges read
+                # it (a merge could otherwise finish on a partition another
+                # merge cached but has not yet reported), or, when D10
+                # leaves no table to merge, it is the batch's only read
+                b.data_scan.write.format("noop").mode("overwrite").save()
+            # C3 adaptive skew: choose this batch's fold shape per table
+            # from the key-hash histogram the PREVIOUS batch observed
+            b.salted = sorted(
+                n
+                for n in self.tables
+                if self.cfg.skew_mode == "salted"
+                or (
+                    self.cfg.skew_mode == "adaptive"
+                    and self._hot_share.get(n, 0.0) >= SKEW_THRESHOLD
+                )
             )
-            # OPTIMISTIC decode: each per-table merge decodes with the
-            # table's CURRENT schema; if the observation then reveals new
-            # column_types for a table, that table's optimistic snapshot is
-            # rolled back and re-merged with the evolved schema — exactly
-            # the reference's cache-invalidate-and-retry
-            # (db/metadata/SchemaRegistry.java:78-86), paid only on the
-            # rare schema-change batch.
-            data_scan = self._data_scan(scan)
-            cached = None
-            if len(self.tables) > 1:
-                # one physical scan for N tables: persist the slim decode
-                # projection (bounded by max_events_per_batch) instead of
-                # re-reading the log once per table — table_name row-group
-                # stats can't prune (tables interleave within a token file)
-                cached = data_scan.where(
-                    F.col("record_type") == DATA_CHANGE
-                ).select(
-                    "partition_token",
-                    "commit_ts",
-                    "record_sequence",
-                    "server_txn_id",
-                    "table_name",
-                    "mod_type",
-                    "value_capture_type",
-                    "column_types",
-                    "mods",
-                ).persist()
-                data_scan = cached
-            try:
-                merge_tables = [n for n in self.tables if self._table_allowed(n)]
-                if cached is not None or not merge_tables:
-                    # one whole-scan action completes the observation: it
-                    # builds the shared cache before the concurrent merges read
-                    # it (a merge could otherwise finish on a partition another
-                    # merge cached but has not yet reported), or, when D10
-                    # leaves no table to merge, it is the batch's only read
-                    data_scan.write.format("noop").mode("overwrite").save()
-                prev_sids = dict(snapshot_ids)
-                schemas_used = {n: st.schema for n, st in self.tables.items()}
-                # C3 adaptive skew: choose this batch's fold shape per table
-                # from the key-hash histogram the PREVIOUS batch observed
-                salted_tables = {
-                    n: (
-                        self.cfg.skew_mode == "salted"
-                        or (
-                            self.cfg.skew_mode == "adaptive"
-                            and self._hot_share.get(n, 0.0) >= SKEW_THRESHOLD
-                        )
-                    )
-                    for n in self.tables
-                }
-                salted_used = sorted(n for n, v in salted_tables.items() if v)
-                attempts: dict[str, tuple] = {}
-                with ThreadPoolExecutor(max_workers=max(1, len(merge_tables))) as ex:
-                    def _timed(fn, *a):
-                        s0 = time.monotonic()
-                        out = fn(*a)
-                        return out, round(time.monotonic() - s0, 3)
+            with ThreadPoolExecutor(max_workers=max(1, len(b.merge_tables))) as ex:
+                futures = {n: ex.submit(self._merge_table, b, n) for n in b.merge_tables}
+                b.attempts = {n: fut.result() for n, fut in futures.items()}
+            b.seen = b.obs.get
 
-                    merge_futures = {
-                        n: ex.submit(
-                            _timed,
-                            self._merge_attempt,
-                            data_scan.where(F.col("table_name") == n),
-                            n,
-                            schemas_used[n],
-                            batch_id,
-                            active,
-                            0,
-                            salted_tables[n],
-                        )
-                        for n in merge_tables
-                    }
-                    for n, fut in merge_futures.items():
-                        attempts[n], t_merge = fut.result()
-                        timings[f"merge_{n}_s"] = t_merge
-                timings["overlap_s"] = round(time.monotonic() - t_stage, 3)
-                seen = scan_obs.get
+    def _merge_table(self, b: _Batch, name: str, attempt: int = 0) -> tuple:
+        """One table's merge, for the optimistic attempt and the schema
+        retry alike: the table's slice of the batch scan, decoded with the
+        table's schema as of now."""
+        with self._stage("merge", name):
+            return self._merge_attempt(
+                b.data_scan.where(F.col("table_name") == name),
+                name,
+                self.tables[name].schema,
+                b.id,
+                attempt,
+                name in b.salted,
+            )
 
-                # merge observed schemas per table (additive, widening)
-                observed: dict[str, set] = {}
-                for s in seen["schemas"]:
-                    if s["tbl"] in self.tables and s["cols"] and self._table_allowed(s["tbl"]):
-                        observed.setdefault(s["tbl"], set()).add(s["cols"])
-                for name, col_jsons in sorted(observed.items()):
-                    st = self.tables[name]
-                    for s_json in sorted(col_jsons):
-                        incoming = TableSchema.from_column_types_json(name, s_json)
-                        st.schema = merge_schemas(st.schema, incoming)
+    def _resolve(self, b: _Batch) -> None:
+        """Merge each table's observed schemas into its registry entry
+        (additive, widening), then settle its optimistic attempt: an empty
+        slice's snapshot is rolled back (a pointer flip; orphan files are
+        inert), and a table whose schema evolved mid-batch is rolled back
+        and merged again so the new columns are decoded."""
+        with self._stage("resolve"):
+            observed: dict[str, set] = {}
+            for s in b.seen["schemas"]:
+                if s["tbl"] in b.attempts and s["cols"]:
+                    observed.setdefault(s["tbl"], set()).add(s["cols"])
+            retried = False
+            for name in b.merge_tables:
+                st = self.tables[name]
+                used = st.schema.column_types_json()
+                for s_json in sorted(observed.get(name, ())):
+                    incoming = TableSchema.from_column_types_json(name, s_json)
+                    st.schema = merge_schemas(st.schema, incoming)
+                prev = b.snapshot_ids[name]
+                if name not in observed:
+                    if b.attempts[name][0] != prev:
+                        st.table.rollback(prev)
+                    b.attempts[name] = (prev, None)
+                elif st.schema.column_types_json() != used:
+                    self.meter.schema_retries_total += 1
+                    retried = True
+                    with self._stage("schema_retry"):
+                        st.table.rollback(prev)
+                        b.attempts[name] = self._merge_table(b, name, attempt=1)
+                b.snapshot_ids[name] = b.attempts[name][0]
+            if retried:
+                self.meter.on_error()  # a batch's retries count as one error
 
-                # resolve each table's optimistic attempt
-                tables_with_data = set(observed)
-                for name, st in self.tables.items():
-                    if name not in attempts:  # filtered out by D10: untouched
-                        continue
-                    opt_sid, opt_obs, per_token, _fold_obs = attempts[name]
-                    if name not in tables_with_data:
-                        # optimistic merge ran on an empty slice: discard the
-                        # empty snapshot (pointer flip; orphan files are inert)
-                        if opt_sid != prev_sids[name]:
-                            st.table.rollback(prev_sids[name])
-                        attempts[name] = (prev_sids[name], None, per_token, None)
-                    elif (
-                        st.schema.column_types_json()
-                        != schemas_used[name].column_types_json()
-                    ):
-                        # schema evolved mid-batch: invalidate and retry with
-                        # the merged schema so the new columns are decoded
-                        self.meter.schema_retries_total += 1
-                        st.table.rollback(prev_sids[name])
-                        t_retry = time.monotonic()
-                        attempts[name] = self._merge_attempt(
-                            data_scan.where(F.col("table_name") == name),
-                            name,
-                            st.schema,
-                            batch_id,
-                            active,
-                            attempt=1,
-                            use_salted=salted_tables[name],
-                        )
-                        timings["schema_retry_s"] = round(time.monotonic() - t_retry, 3)
-                    snapshot_ids[name] = attempts[name][0]
-            finally:
-                # release the shared slice also when a merge or a schema
-                # retry raises: the session outlives the batch
-                if cached is not None:
-                    cached.unpersist()
-
-            # per-token progress from the control rows. Set semantics for
-            # end markers and child announcements: a duplicated control
-            # row cannot change DAG state.
+    def _harvest(self, b: _Batch) -> None:
+        """Per-token progress, lineage and counters from the scan
+        observation, and each table's hot-key share from its fold. Set
+        semantics for end markers and child announcements: a duplicated
+        control row cannot change DAG state."""
+        with self._stage("harvest"):
+            seen = b.seen
             n_ctrl: dict[str, int] = {}
             n_hb: dict[str, int] = {}
             ctrl_max_ts: dict[str, int] = {}
@@ -952,197 +954,185 @@ class CdcReplayEngine:
                         announced.add(
                             (r["ts_us"], cp["token"], tuple(cp["parent_partition_tokens"]))
                         )
-            finished = sorted(ended)
+            b.finished = sorted(ended)
             # O3 dedup: register each child once, whichever parent
             # announced it (O2 merge-owner collapses under one driver)
             for start_us, tok, parents in sorted(announced):
-                if tok not in self.tokens and tok not in new_children:
-                    new_children[tok] = (list(parents), start_us)
-
-            # --- harvest the data-pass observations (per-token lineage
-            # rode along with the merge jobs; no extra Spark job) ---
-            data_counts: dict[str, int] = {}
-            data_max_ts: dict[str, int] = {}
-            for name in attempts:
-                opt_sid, opt_obs, per_token, fold_obs = attempts[name]
-                if opt_obs is None:
-                    continue
-                got = opt_obs.get
-                mods += got["_n_rec_total"]
-                if fold_obs is not None:
-                    fg = fold_obs.get
-                    if fg.get("_sum_key_mods"):
-                        self._hot_share[name] = round(
-                            (fg.get("_max_key_mods") or 0)
-                            / fg["_sum_key_mods"],
-                            4,
-                        )
-                for i, tok in enumerate(per_token):
-                    if got[f"_n_{i}"]:
-                        data_counts[tok] = data_counts.get(tok, 0) + got[f"_n_{i}"]
-                        data_max_ts[tok] = max(
-                            data_max_ts.get(tok, 0), got[f"_ts_{i}"] or 0
-                        )
-            self.meter.on_query_done()
-            if data_max_ts:
-                # getDelayChangeStreamEvents analogue: how far behind the
-                # batch window's end the freshest observed event sits
-                self.meter.delay_change_stream_events_s.add(
-                    max(0.0, (batch_end_us - max(data_max_ts.values())) / 1e6)
-                )
-            # MOR compaction: bound read-time delta depth; amortizes the
-            # rewrite across COMPACT_EVERY batches (O13-adjacent state
-            # bounding for the data files themselves). Maintenance-lane
-            # shape: the fold + file write runs as a concurrent Spark job
-            # in a driver maintenance thread against an immutable
-            # snapshot, and only the metadata rebase-commit happens here
-            # in the (single-threaded) batch loop — the ingest path never
-            # stalls on a table rewrite, exactly like Iceberg
-            # rewrite_data_files / Delta OPTIMIZE running beside the stream.
-            if self.cfg.sink_mode == "mor":
-                for name, st in self.tables.items():
-                    fut = self._compact_futures.get(name)
-                    if fut is not None and fut.done():
-                        del self._compact_futures[name]
-                        prep = fut.result()  # surfaces worker errors
-                        if prep is not None:
-                            t_stage = time.monotonic()
-                            snapshot_ids[name] = st.table.compact_apply(
-                                prep, summary={"batch_id": batch_id}
-                            )
-                            timings["compact_apply_s"] = round(
-                                time.monotonic() - t_stage, 3
-                            )
-                    elif fut is None and st.table.delta_depth() >= COMPACT_EVERY:
-                        self._compact_futures[name] = self._pool(
-                            "_maint_pool", "cdc-maint"
-                        ).submit(
-                            self._maint_compact_prepare,
-                            st.table,
-                            st.table.current_snapshot_id(),
-                        )
-                        timings["compact_submitted"] = 1.0
-
-            for tok in active:
+                if tok not in self.tokens and tok not in b.new_children:
+                    b.new_children[tok] = (list(parents), start_us)
+            data = {
+                tok: (seen[f"_n_{i}"], seen[f"_ts_{i}"])
+                for i, tok in enumerate(b.per_token)
+                if seen[f"_n_{i}"]
+            }
+            for tok in b.active:
                 n_c = n_ctrl.get(tok, 0)
-                n_d = data_counts.get(tok, 0)
+                n_d, ts_d = data.get(tok, (0, 0))
                 if n_c or n_d:
-                    lineage.append(
+                    b.lineage.append(
                         {
                             "token": tok,
                             "events": n_c + n_d,
                             "data": n_d,
                             "heartbeats": n_hb.get(tok, 0),
-                            "max_ts_us": max(
-                                ctrl_max_ts.get(tok, 0), data_max_ts.get(tok, 0)
-                            ),
+                            "max_ts_us": max(ctrl_max_ts.get(tok, 0), ts_d),
                         }
                     )
             # global counters stay exact even past the per-token
             # observation cap (lineage is then control-rows-only)
-            events = sum(n_ctrl.values()) + mods
-
-        # O7/O8 liveness: flag active partitions with no progress
-        progressed = {ln["token"] for ln in lineage}
-        stuck = []
-        for tok in active:
-            if tok in progressed or tok in finished:
-                self._stale_counts.pop(tok, None)
-            else:
-                n = self._stale_counts.get(tok, 0) + 1
-                self._stale_counts[tok] = n
-                if n >= self.max_stale_batches:
-                    stuck.append(tok)
-
-        # watchdog actions (O7/O8)
-        requeried: list[str] = []
-        self.meter.stuck_heartbeat_intervals += len(stuck)
-        if stuck and self.cfg.stuck_policy == "fail":
-            over = [t for t in stuck if self._stale_counts[t] >= 2 * self.max_stale_batches]
-            if over:
-                self.meter.on_error()
-                raise RuntimeError(
-                    f"stuck partitions exceeded watchdog threshold: {sorted(over)}"
+            b.mods = seen["_n_rec_total"]
+            b.events = sum(n_ctrl.values()) + b.mods
+            if data:
+                # getDelayChangeStreamEvents analogue: how far behind the
+                # batch window's end the freshest observed event sits
+                self.meter.delay_change_stream_events_s.add(
+                    max(0.0, (b.end_us - max(ts for _, ts in data.values())) / 1e6)
                 )
+            for name, (_, fold_obs) in b.attempts.items():
+                fg = fold_obs.get if fold_obs is not None else {}
+                if fg.get("_sum_key_mods"):
+                    self._hot_share[name] = round(
+                        (fg.get("_max_key_mods") or 0) / fg["_sum_key_mods"], 4
+                    )
 
-        # state transitions AFTER the data commit (O6 happens-before)
-        for tok, (parents, start_us) in new_children.items():
-            self.tokens[tok] = TokenState(tok, parents, start_us, CREATED, None)
-        for t in active:
-            if (
-                self.cfg.stuck_policy == "requery"
-                and t in stuck
-                and self._stale_counts.get(t, 0) < 2 * self.max_stale_batches
-            ):
-                requeried.append(t)  # hold offset: re-scan the window
-                continue
-            self.tokens[t].offset_us = batch_end_us
-        for t in finished:
-            self.tokens[t].state = FINISHED
+    def _maintain(self, b: _Batch) -> None:
+        """MOR compaction bounds read-time delta depth and amortizes the
+        rewrite across COMPACT_EVERY batches (O13-adjacent state bounding
+        for the data files themselves). The fold + file write runs in the
+        maintenance lane, a driver thread whose Spark job reads an
+        immutable snapshot beside later batches; only the metadata
+        rebase-commit happens here in the batch loop, so the ingest path
+        never stalls on a table rewrite — like Iceberg rewrite_data_files
+        or Delta OPTIMIZE running beside the stream."""
+        if self.cfg.sink_mode != "mor":
+            return
+        with self._stage("maintenance"):
+            for name, st in self.tables.items():
+                fut = self._compact_futures.get(name)
+                if fut is not None and fut.done():
+                    del self._compact_futures[name]
+                    prep = fut.result()  # surfaces worker errors
+                    if prep is not None:
+                        with self._stage("compact_apply"):
+                            b.snapshot_ids[name] = st.table.compact_apply(
+                                prep, summary={"batch_id": b.id}
+                            )
+                elif fut is None and st.table.delta_depth() >= COMPACT_EVERY:
+                    if self._maint_pool is None:
+                        self._maint_pool = ThreadPoolExecutor(
+                            max_workers=1, thread_name_prefix="cdc-maint"
+                        )
+                    self._compact_futures[name] = self._maint_pool.submit(
+                        self._compact, name, st.table.current_snapshot_id()
+                    )
 
-        # O9 low watermark: min over non-finished of coalesce(offset, start)
-        live = [s for s in self.tokens.values() if s.state != FINISHED]
-        self.watermark_us = (
-            min((s.offset_us if s.offset_us is not None else s.start_us) for s in live)
-            if live
-            else batch_end_us
-        )
-        # O13 GC: drop FINISHED tokens none of whose live tokens reference
-        referenced = {p for s in self.tokens.values() for p in s.parents if s.state != FINISHED}
-        for t in [
-            t
-            for t, s in self.tokens.items()
-            if s.state == FINISHED and t not in referenced and t != INITIAL_PARTITION_TOKEN
-        ]:
-            # keep bounded at 10^10 scale; safe because gate treats unknown
-            # parents as finished ("no parent exists anymore")
-            del self.tokens[t]
+    def _compact(self, name: str, base_sid: int) -> dict | None:
+        # the maintenance lane's one job, in the low-weight 'maint' pool so
+        # the compaction fold backfills stage-tail idle cores instead of
+        # competing with batch jobs
+        with self._stage("compact", name):
+            return self.tables[name].table.compact_prepare(base_sid)
 
-        self.batch_id = batch_id
-        self._observe_rate(events, self.frontier_us, batch_end_us)
-        self.frontier_us = max(self.frontier_us, batch_end_us)
-        self._checkpoint(snapshot_ids)
-        if batch_id > 0 and batch_id % GC_EVERY == 0:
-            t_stage = time.monotonic()
-            self._gc_metadata(snapshot_ids)
-            timings["gc_s"] = round(time.monotonic() - t_stage, 3)
+    def _advance(self, b: _Batch) -> None:
+        """After the data commit (O6 happens-before): the O7/O8 watchdog,
+        DAG transitions and offsets, the O9 low watermark, the O13 GC of
+        finished tokens, and the frontier."""
+        with self._stage("advance"):
+            progressed = {ln["token"] for ln in b.lineage}
+            for tok in b.active:
+                if tok in progressed or tok in b.finished:
+                    self._stale_counts.pop(tok, None)
+                else:
+                    n = self._stale_counts.get(tok, 0) + 1
+                    self._stale_counts[tok] = n
+                    if n >= self.max_stale_batches:
+                        b.stuck.append(tok)
+            self.meter.stuck_heartbeat_intervals += len(b.stuck)
+            limit = 2 * self.max_stale_batches
+            if b.stuck and self.cfg.stuck_policy == "fail":
+                over = [t for t in b.stuck if self._stale_counts[t] >= limit]
+                if over:
+                    self.meter.on_error()
+                    raise RuntimeError(
+                        f"stuck partitions exceeded watchdog threshold: {sorted(over)}"
+                    )
+            for tok, (parents, start_us) in b.new_children.items():
+                self.tokens[tok] = TokenState(tok, parents, start_us, CREATED, None)
+            for t in b.active:
+                if (
+                    self.cfg.stuck_policy == "requery"
+                    and t in b.stuck
+                    and self._stale_counts.get(t, 0) < limit
+                ):
+                    b.requeried.append(t)  # hold offset: re-scan the window
+                    continue
+                self.tokens[t].offset_us = b.end_us
+            for t in b.finished:
+                self.tokens[t].state = FINISHED
+            # O9 low watermark: min over non-finished of coalesce(offset, start)
+            live = [s for s in self.tokens.values() if s.state != FINISHED]
+            self.watermark_us = (
+                min((s.offset_us if s.offset_us is not None else s.start_us) for s in live)
+                if live
+                else b.end_us
+            )
+            # O13 GC: drop FINISHED tokens no live token references; safe
+            # because the gate treats unknown parents as finished ("no
+            # parent exists anymore"), and bounded at 10^10 scale
+            referenced = {
+                p for s in self.tokens.values() for p in s.parents if s.state != FINISHED
+            }
+            for t in [
+                t
+                for t, s in self.tokens.items()
+                if s.state == FINISHED and t not in referenced and t != INITIAL_PARTITION_TOKEN
+            ]:
+                del self.tokens[t]
+            self.batch_id = b.id
+            self._observe_rate(b.events, self.frontier_us, b.end_us)
+            self.frontier_us = max(self.frontier_us, b.end_us)
 
-        wall = time.monotonic() - t0
-        self.meter.detected_partition_count += len(new_children)
-        self.meter.requeried_tokens_total += len(requeried)
-        if self.meter.schema_retries_total and "schema_retry_s" in timings:
-            self.meter.on_error()  # retried attempt counts as one error
+    def _commit(self, b: _Batch) -> None:
+        """The checkpoint, after every snapshot it names; every GC_EVERY
+        batches, the metadata GC."""
+        with self._stage("commit"):
+            self._checkpoint(b.snapshot_ids)
+            if b.id > 0 and b.id % GC_EVERY == 0:
+                with self._stage("gc"):
+                    self._gc_metadata(b.snapshot_ids)
+
+    def _metrics_line(self, b: _Batch, wall: float) -> dict:
+        """Update the meter and append the batch's metrics.jsonl line."""
+        self.meter.detected_partition_count += len(b.new_children)
+        self.meter.requeried_tokens_total += len(b.requeried)
         if self.cfg.max_events_per_batch is not None:
             self.meter.event_queue_remaining_capacity = max(
-                0, self.cfg.max_events_per_batch - events
+                0, self.cfg.max_events_per_batch - b.events
             )
         self.meter.maintenance_queue_remaining_capacity = len(self.tables) - len(
             self._compact_futures
         )
         self.meter.batch_wall_s.add(wall)
-        self.meter.watermark_lag_s.add(
-            max(0.0, (batch_end_us - self.watermark_us) / 1e6)
-        )
-        primary = next(iter(self.tables), None)
+        self.meter.watermark_lag_s.add(max(0.0, (b.end_us - self.watermark_us) / 1e6))
         metric = {
-            "batch_id": batch_id,
-            "batch_end_us": batch_end_us,
-            "events": events,
-            "mods": mods,
-            "active_tokens": len(active),
-            "finished": finished,
-            "new_tokens": sorted(new_children),
+            "batch_id": b.id,
+            "batch_end_us": b.end_us,
+            "events": b.events,
+            "mods": b.mods,
+            "active_tokens": len(b.active),
+            "finished": b.finished,
+            "new_tokens": sorted(b.new_children),
             "watermark_us": self.watermark_us,
-            "stuck_tokens": stuck,
-            "requeried_tokens": requeried,
-            "salted_tables": salted_used,
+            "stuck_tokens": b.stuck,
+            "requeried_tokens": b.requeried,
+            "salted_tables": b.salted,
             "hot_share": dict(self._hot_share),
-            "snapshot_id": snapshot_ids.get(primary),
-            "snapshot_ids": snapshot_ids,
+            "snapshot_id": b.snapshot_ids.get(next(iter(self.tables), None)),
+            "snapshot_ids": b.snapshot_ids,
             "wall_s": round(wall, 4),
-            "events_per_sec": round(events / wall, 2) if wall > 0 else 0.0,
-            "timings": timings,
-            "lineage": lineage,
+            "events_per_sec": round(b.events / wall, 2) if wall > 0 else 0.0,
+            "timings": b.timings,
+            "lineage": b.lineage,
             "meter": self.meter.snapshot(),
         }
         with open(self.metrics_path, "a") as f:
@@ -1172,36 +1162,16 @@ class CdcReplayEngine:
         name: str,
         schema: TableSchema,
         batch_id: int,
-        active: list[str],
         attempt: int,
         use_salted: bool = False,
     ):
-        """decode -> fold -> MERGE one table with per-token lineage
-        Observation.
+        """decode -> fold -> MERGE one table.
 
-        Returns (snapshot_id, observation, per_token_list, fold_obs).
-        Commits a snapshot; the caller may roll it back (schema retry /
-        empty slice).
+        Returns (snapshot_id, fold_obs). Commits a snapshot; the caller may
+        roll it back (schema retry / empty slice).
         """
-        from pyspark.sql import Observation
-
         table = self.tables[name].table
         decoded = decode_mods(scan, schema)
-        obs = Observation(f"batch-{batch_id}-{name}-a{attempt}")
-        is_rec = F.col("mod_number") == 0  # 1 per record, not per mod
-        obs_aggs = [
-            F.count(F.lit(1)).alias("_n_mods_total"),
-            F.sum(F.when(is_rec, 1).otherwise(0)).alias("_n_rec_total"),
-        ]
-        # per-token lineage rides along when the active set is small;
-        # beyond the cap only global counters are observed
-        per_token = active if len(active) <= 64 else []
-        for i, tok in enumerate(per_token):
-            cond = F.col("partition_token") == tok
-            obs_aggs.append(F.sum(F.when(cond & is_rec, 1).otherwise(0)).alias(f"_n_{i}"))
-            obs_aggs.append(F.max(F.when(cond, F.col("seq.ts"))).alias(f"_ts_{i}"))
-        decoded = decoded.observe(obs, *obs_aggs)
-
         if use_salted:
             from debezium_connector_spanner_spark.operators.merge import (
                 fold_changes_salted,
@@ -1234,7 +1204,7 @@ class CdcReplayEngine:
             summary={"batch_id": batch_id, "attempt": attempt, "table": name},
             mode=self.cfg.sink_mode,
         )
-        return sid, obs, per_token, fold_obs
+        return sid, fold_obs
 
     # ------------------------------------------------------------ views
     @property

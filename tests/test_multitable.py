@@ -22,8 +22,9 @@ from debezium_connector_spanner_spark.fixtures.generator import (
     GeneratorConfig,
     write_fixture,
 )
-from debezium_connector_spanner_spark.fixtures.oracle import fold_final_state
+from debezium_connector_spanner_spark.fixtures.oracle import fold_final_state, read_events
 from debezium_connector_spanner_spark.sources.event_schema import (
+    DATA_CHANGE,
     REPOS_SCHEMA_V1,
     TYPES_PROBE_SCHEMA,
 )
@@ -60,6 +61,16 @@ def test_multitable_replay_and_resume(spark, tmp_root):
     eng.run(max_batches=2)  # crash...
     eng = _engine(spark, fx, tmp_root, cfg, with_base=False)  # ...resume
     eng.run()
+
+    # the timings keys perfbench/cdc.py reads: engine.merge_s sums every
+    # merge_* key, engine.overlap_s reads overlap_s, engine.ctrl_s ctrl_s
+    for m in eng.metrics():
+        t = m["timings"]
+        assert {k for k in t if k.startswith("merge_")} == {
+            "merge_repos_s",
+            "merge_types_probe_s",
+        }, t
+        assert "overlap_s" in t and "ctrl_s" not in t, t
 
     # repos: pandas-oracle equality (explicit nulls, NEW_VALUES slice incl.)
     got = (
@@ -114,6 +125,42 @@ def test_table_exclude_filter_skips_table(spark, tmp_root):
     eng.run()
     assert eng.final_state("types_probe").count() == 0
     assert eng.final_state("repos").count() > 0
+
+
+def test_lineage_counts_exact(spark, tmp_root):
+    """Per-partition lineage and the batch counters against the raw log:
+    summed over batches, each token's ``data`` is its count of repos
+    data records (the excluded table's records interleave in the same
+    token files and must not count) and its ``max_ts_us`` the newest
+    commit ts among its control and repos records; Σmods is every repos
+    data record and Σevents adds every control record."""
+    cfg = GeneratorConfig(
+        n_repos=3, paths_per_repo=2, events_per_key_mean=3, types_probe_keys=6
+    )
+    fx = os.path.join(tmp_root, "fx")
+    write_fixture(fx, cfg)
+    eng = _engine(spark, fx, tmp_root, cfg, table_exclude="^types_probe$")
+    eng.run()
+    ms = eng.metrics()
+
+    log = read_events(fx)
+    log["ts_us"] = log["commit_ts"].astype("datetime64[us, UTC]").astype("int64")
+    is_data = log["record_type"] == DATA_CHANGE
+    repos = log[is_data & (log["table_name"] == "repos")]
+    assert (is_data & (log["table_name"] == "types_probe")).any()
+    counted = pd.concat([repos, log[~is_data]])
+
+    data: dict[str, int] = {}
+    max_ts: dict[str, int] = {}
+    for m in ms:
+        for ln in m["lineage"]:
+            data[ln["token"]] = data.get(ln["token"], 0) + ln["data"]
+            max_ts[ln["token"]] = max(max_ts.get(ln["token"], 0), ln["max_ts_us"])
+    want_data = repos.groupby("partition_token").size().to_dict()
+    assert {t: n for t, n in data.items() if n} == want_data
+    assert max_ts == counted.groupby("partition_token")["ts_us"].max().to_dict()
+    assert sum(m["mods"] for m in ms) == len(repos)
+    assert sum(m["events"] for m in ms) == len(repos) + int((~is_data).sum())
 
 
 def test_failed_merge_releases_shared_slice(spark, tmp_root, monkeypatch):

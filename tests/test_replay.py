@@ -218,6 +218,53 @@ def test_async_compaction_matches_oracle(spark, tmp_root, monkeypatch):
     assert eng_a.table.delta_depth() < 6
 
 
+def test_stage_pools_and_job_tags(spark, tmp_root, monkeypatch):
+    """Every merge job runs in the FAIR pool 'ingest' and is tagged with
+    its batch, stage and table; the maintenance lane's compaction fold runs
+    in 'maint'. Merges run on worker threads, which inherit no local
+    property from the batch thread, so each must set its own."""
+    from debezium_connector_spanner_spark.sources.lake import LakeTable
+
+    fx = os.path.join(tmp_root, "fx")
+    write_fixture(fx, CFG)
+    monkeypatch.setattr(engine_mod, "COMPACT_EVERY", 2)
+    sc = spark.sparkContext
+    seen = []
+
+    def props():
+        return (
+            sc.getLocalProperty("spark.scheduler.pool"),
+            sc.getLocalProperty("spark.job.description"),
+        )
+
+    merge_into = engine_mod.merge_into
+
+    def recording_merge(table, folded, *a, summary, **kw):
+        seen.append(("merge", summary, *props()))
+        return merge_into(table, folded, *a, summary=summary, **kw)
+
+    compact_prepare = LakeTable.compact_prepare
+
+    def recording_prepare(self, *a, **kw):
+        seen.append(("prepare", None, *props()))
+        return compact_prepare(self, *a, **kw)
+
+    monkeypatch.setattr(engine_mod, "merge_into", recording_merge)
+    monkeypatch.setattr(LakeTable, "compact_prepare", recording_prepare)
+    _mk_engine(spark, fx, tmp_root).run()
+
+    merges = [s for s in seen if s[0] == "merge"]
+    assert len(merges) >= 6
+    for _, summary, pool, desc in merges:
+        assert pool == "ingest"
+        assert desc == f"b{summary['batch_id']}:merge:{summary['table']}"
+    prepares = [s for s in seen if s[0] == "prepare"]
+    assert prepares
+    assert all(pool == "maint" for _, _, pool, _ in prepares)
+    # the stage restores the calling thread's properties on exit
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
+
+
 def test_semijoin_token_filter_matches_inlist(spark, tmp_root, monkeypatch):
     """S1 at 10^5-token scale: with TOKEN_INLIST_MAX=0 the literal IN-list
     is skipped and token filtering rides the broadcast offsets equi-join
