@@ -1,7 +1,11 @@
 """Decode operators D1-D7 (SURVEY.md §2.2).
 
 Record-type demux, mod explosion with positional mod_number, JSON row
-images -> typed structs via ``from_json`` (JVM, whole-stage codegen).
+images -> typed structs via ``from_json`` (JVM-side). Plans are built
+from SQL strings, one ``selectExpr`` per step; column names from the
+change log's ``column_types`` (outside input) enter that text only
+through ``_q`` (identifiers) and ``_str`` (string literals) of
+sources/lake.py.
 A schema that changes mid-stream is handled by the engine's optimistic
 decode plus rollback-and-retry, mirroring the reference's
 cache-invalidate-and-retry (db/metadata/SchemaRegistry.java:78-86).
@@ -17,63 +21,58 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from debezium_connector_spanner_spark.sources.event_schema import (
     DATA_CHANGE,
     TableSchema,
 )
+from debezium_connector_spanner_spark.sources.lake import _q, _str
 
-SEQ_TYPE = T.StructType(
-    [
-        T.StructField("ts", T.LongType()),      # commit_ts in epoch micros
-        T.StructField("rs", T.LongType()),      # record_sequence (numeric)
-        T.StructField("mod", T.IntegerType()),  # mod_number (position in mods)
-    ]
+# txn metadata columns ride along for the envelope path; Catalyst
+# column-prunes them out of the MERGE hot path (fold never reads them)
+_PASSTHROUGH = (
+    "table_name",
+    "is_last_in_txn_in_partition",
+    "number_of_records_in_transaction",
+    "number_of_partitions_in_transaction",
+    "transaction_tag",
+    "is_system_transaction",
 )
 
+# Total order within a key: (commit_ts, record_sequence, mod_number). This
+# is the reference's record identity order
+# (context/offset/SpannerOffsetContextFactory.java:24-33) minus the
+# token/txn disambiguators, which never differ for one key's events.
+# record_sequence is a Spanner-assigned numeric string of arbitrary length;
+# it is normalized to a BIGINT so '10' orders after '9' (lexicographic
+# string order would mis-sort same-commit-ts records).
+_SEQ = (
+    "named_struct('ts', unix_micros(commit_ts), 'rs', CAST(record_sequence AS BIGINT),"
+    " 'mod', mod_number)"
+)
 
-def seq_col() -> F.Column:
-    """Total order within a key: (commit_ts, record_sequence, mod_number).
-
-    This is the reference's record identity order
-    (context/offset/SpannerOffsetContextFactory.java:24-33) minus the
-    token/txn disambiguators, which never differ for one key's events.
-
-    record_sequence is a Spanner-assigned numeric string of arbitrary
-    length; it is normalized to a BIGINT here so '10' orders after '9'
-    (lexicographic string order would mis-sort same-commit-ts records).
-    """
-    return F.struct(
-        F.unix_micros(F.col("commit_ts")).alias("ts"),
-        F.col("record_sequence").cast("long").alias("rs"),
-        F.col("mod_number").alias("mod"),
-    )
+# Per-mod op from the null pattern first. NEW_ROW / NEW_VALUES capture
+# can't distinguish c/u by null pattern (old_values is always null); it
+# falls back to the record-level ModType mapping, as the reference always
+# does (processor/SpannerChangeRecordEmitter.java:42-52,
+# db/model/ValueCaptureType.java:12-18).
+_OP = (
+    "CASE WHEN mod.new_values IS NULL THEN 'd'"
+    " WHEN value_capture_type IN ('NEW_ROW', 'NEW_VALUES') THEN"
+    " CASE WHEN mod_type = 'INSERT' THEN 'c' WHEN mod_type = 'DELETE' THEN 'd' ELSE 'u' END"
+    " WHEN mod.old_values IS NULL THEN 'c' ELSE 'u' END"
+)
 
 
 def explode_mods(events: DataFrame) -> DataFrame:
     """D3: one row per (record, mod), positional mod_number. Accepts
     pre-filtered slim frames that already dropped record_type."""
     data = (
-        events.where(F.col("record_type") == DATA_CHANGE)
+        events.where(f"record_type = {_str(DATA_CHANGE)}")
         if "record_type" in events.columns
         else events
     )
-    # txn metadata columns ride along for the envelope path; Catalyst
-    # column-prunes them out of the MERGE hot path (fold never reads them)
-    passthrough = [
-        c
-        for c in (
-            "table_name",
-            "is_last_in_txn_in_partition",
-            "number_of_records_in_transaction",
-            "number_of_partitions_in_transaction",
-            "transaction_tag",
-            "is_system_transaction",
-        )
-        if c in data.columns
-    ]
-    return data.select(
+    return data.selectExpr(
         "partition_token",
         "commit_ts",
         "record_sequence",
@@ -81,8 +80,8 @@ def explode_mods(events: DataFrame) -> DataFrame:
         "mod_type",
         "value_capture_type",
         "column_types",
-        *passthrough,
-        F.posexplode("mods").alias("mod_number", "mod"),
+        *[c for c in _PASSTHROUGH if c in events.columns],
+        "posexplode(mods) AS (mod_number, mod)",
     )
 
 
@@ -95,96 +94,59 @@ def decode_mods(
 
     Output columns: key columns (flattened), ``seq`` (ordering struct),
     ``op`` ('c'/'u'/'d'), ``vals`` (new-value struct), ``olds``
-    (old-value struct), plus identity columns for dedup/envelope.
+    (old-value struct), ``wrt`` (per value column: written by the mod),
+    plus identity columns for dedup/envelope.
 
     ``include_old=False`` (the MERGE hot path) skips parsing old_values —
     the fold never reads before-images; only the envelope path needs them.
+
+    The plan is built from SQL strings, one JVM call per select-list
+    entry rather than one per expression node: each JSON image is parsed
+    by ``from_json`` against the schema passed as its JSON text, once,
+    and the Connect casts read the parsed struct.
     """
-    key_struct = schema.spark_struct(schema.key_columns, json_shape=True)
-    val_struct = schema.spark_struct(schema.value_columns, json_shape=True)
-
-    m = explode_mods(events)
-    keys = F.from_json(F.col("mod.keys"), key_struct)
-    vals = F.from_json(F.col("mod.new_values"), val_struct)
-    olds = (
-        F.from_json(F.col("mod.old_values"), val_struct)
-        if include_old
-        else F.lit(None).cast(val_struct)
+    key_t = _str(schema.spark_struct(schema.key_columns, json_shape=True).json())
+    val_t = _str(schema.spark_struct(schema.value_columns, json_shape=True).json())
+    old = "mod.old_values" if include_old else "CAST(NULL AS STRING)"
+    m = explode_mods(events).selectExpr(
+        "*",
+        f"from_json(mod.keys, {key_t}) AS keys",
+        f"from_json(mod.new_values, {val_t}) AS vals",
+        f"from_json({old}, {val_t}) AS olds",
     )
-
+    vals, olds = "vals", "olds"
     if schema.needs_cast():
         # JSON shape != sink shape (BYTES base64 string -> binary): apply
         # the Connect-mapping casts, preserving null-in -> null-struct-out
-        phys = schema.spark_struct(schema.value_columns)
-
-        def _cast(col: F.Column, raw: F.Column) -> F.Column:
-            return F.when(raw.isNull(), F.lit(None).cast(phys)).otherwise(
-                apply_spanner_casts(col, schema)
-            )
-
-        vals = _cast(vals, F.col("mod.new_values"))
-        if include_old:
-            olds = _cast(olds, F.col("mod.old_values"))
-        else:
-            olds = F.lit(None).cast(phys)
-
-    # NEW_ROW / NEW_VALUES capture can't distinguish c/u by null pattern
-    # (old_values is always null); fall back to the record-level ModType
-    # mapping, as the reference always does
-    # (processor/SpannerChangeRecordEmitter.java:42-52,
-    # db/model/ValueCaptureType.java:12-18).
-    mod_op = (
-        F.when(F.col("mod_type") == "INSERT", F.lit("c"))
-        .when(F.col("mod_type") == "DELETE", F.lit("d"))
-        .otherwise(F.lit("u"))
-    )
-    op = (
-        F.when(F.col("mod.new_values").isNull(), F.lit("d"))
-        .when(F.col("value_capture_type").isin("NEW_ROW", "NEW_VALUES"), mod_op)
-        .when(F.col("mod.old_values").isNull(), F.lit("c"))
-        .otherwise(F.lit("u"))
-    )
-
+        vals, olds = (
+            f"CASE WHEN {raw} IS NULL THEN NULL ELSE {apply_spanner_casts(v, schema)} END"
+            for raw, v in (("mod.new_values", "vals"), (old, "olds"))
+        )
     # Per-column written flags: key PRESENCE in the new-values JSON, so an
     # UPDATE that sets a column to an explicit null is distinguished from
     # one that doesn't touch the column (the reference emits the null —
     # schema/mapper/JsonNodeStructValueConvertor.java:27-103 — and the LWW
     # fold must apply it). One extra JSON tokenize per mod, JVM-side.
-    wrt = F.struct(
-        *[
-            F.array_contains(F.json_object_keys(F.col("mod.new_values")), c).alias(c)
-            for c in schema.value_columns
-        ]
+    wrt = ", ".join(
+        f"{_str(c)}, array_contains(json_object_keys(mod.new_values), {_str(c)})"
+        for c in schema.value_columns
     )
-
-    passthrough = [
-        c
-        for c in (
-            "table_name",
-            "is_last_in_txn_in_partition",
-            "number_of_records_in_transaction",
-            "number_of_partitions_in_transaction",
-            "transaction_tag",
-            "is_system_transaction",
-            "value_capture_type",
-        )
-        if c in m.columns
-    ]
-    out = m.select(
+    return m.selectExpr(
         "partition_token",
         "commit_ts",
         "record_sequence",
         "server_txn_id",
         "mod_number",
-        *passthrough,
-        seq_col().alias("seq"),
-        op.alias("op"),
-        keys.alias("keys"),
-        vals.alias("vals"),
-        olds.alias("olds"),
-        wrt.alias("wrt"),
+        *[c for c in _PASSTHROUGH if c in events.columns],
+        "value_capture_type",
+        f"{_SEQ} AS seq",
+        f"{_OP} AS op",
+        "keys",
+        f"{vals} AS vals",
+        f"{olds} AS olds",
+        f"named_struct({wrt}) AS wrt",
+        *[f"keys.{_q(k)} AS {_q(k)}" for k in schema.key_columns],
     )
-    return out.select("*", *[F.col(f"keys.{k}").alias(k) for k in schema.key_columns])
 
 
 def table_filter(
@@ -202,25 +164,26 @@ def table_filter(
     return events
 
 
-def apply_spanner_casts(struct_col: F.Column, schema: TableSchema) -> F.Column:
+def apply_spanner_casts(struct: str, schema: TableSchema) -> str:
     """D7 type fidelity (schema/mapper/JsonNodeStructValueConvertor.java:27-103):
     BYTES columns arrive base64-encoded in the JSON row image and become
     binary; FLOAT32 is down-cast from the JSON double; everything else
     keeps the Connect mapping (timestamps/dates/numerics stay strings).
-    Input/output: a struct column decoded by decode_json/from_json (the
-    value-column struct by default; pass column_names for other shapes)."""
+    ``struct`` is a SQL expression for the value-column struct decoded by
+    ``from_json``; returns the SQL expression of the cast struct."""
     fields = []
-    cols = [c for c in schema.columns if not c.is_primary_key]
-    for c in cols:
-        v = struct_col.getField(c.name)
+    for c in schema.columns:
+        if c.is_primary_key:
+            continue
+        v = f"{struct}.{_q(c.name)}"
         if c.type_code == "BYTES":
-            v = F.unbase64(v)
+            v = f"unbase64({v})"
         elif c.type_code == "FLOAT32":
-            v = v.cast("float")
+            v = f"CAST({v} AS FLOAT)"
         elif c.type_code == "ARRAY" and c.array_element_type == "BYTES":
-            v = F.transform(v, F.unbase64)
-        fields.append(v.alias(c.name))
-    return F.struct(*fields)
+            v = f"transform({v}, x -> unbase64(x))"
+        fields.append(f"{_str(c.name)}, {v}")
+    return f"named_struct({', '.join(fields)})"
 
 
 def dedup_identity(decoded: DataFrame) -> DataFrame:

@@ -1,8 +1,10 @@
 """Last-writer-wins fold + bucketed MERGE (SURVEY.md §2.3 O5/O12, §2.4 K1).
 
 The fold is a SINGLE aggregation per batch built only from
-max/max-of-struct aggregates (associative + idempotent). Two physical
-shapes, chosen by workload:
+max/max-of-struct aggregates (associative + idempotent): the one
+last-writer-wins aggregate, ``lww_aggs`` in sources/lake.py, that the
+merge-on-read read folds deltas with too. Its plan is built from SQL
+strings. Two physical shapes of it, chosen by workload:
 
 - **fused** (``fold_changes``, default): one ``groupBy(keys)`` — one
   shuffle per batch, with map-side partial aggregation (a key's events
@@ -14,7 +16,8 @@ shapes, chosen by workload:
   (key, salt)->key combine for hot keys — the north rule's "hot-key
   repos salted before the merge-apply shuffle". A mega-key's events
   spread over n_salts reducers and are pre-reduced before the final
-  per-key combine. Identical results (property-tested).
+  per-key combine, a ``max`` of each partial aggregate: two shuffles.
+  Identical results (property-tested).
 
 No window functions (a window would shuffle the full event set
 un-combined and cannot pre-reduce at all). Measured (PLANS.md,
@@ -29,14 +32,17 @@ The SortAggregate (struct-typed max has no hash-agg buffer) costs one
 in-memory per-partition sort, which spills safely; accepted.
 
 Fold semantics per key over a batch of decoded mods, ordered by
-seq = (commit_ts, record_sequence, mod_number):
+``_o`` = seq = (commit_ts, record_sequence, mod_number):
 
-- ``_last``     max(struct(seq, op))                  -> was the final event a DELETE?
-- ``_del``      max(seq) where op = 'd'               -> the delete barrier
-- per column c  max(struct(seq, c)) where c non-null  -> latest written value
+- ``_top``      max(struct(_o, op = 'd'))               -> was the final event a DELETE?
+- ``_barrier``  max(_o) where op = 'd'                  -> the delete barrier
+- per column c  max(struct(_o, c)) where the mod wrote c -> latest written value
+  (written = c's key present in the new-values JSON, so an explicit NULL
+  counts; a delete mod writes nothing)
 
-Reconstruction: a column's folded value survives iff its seq is after the
-delete barrier; otherwise the delete wiped it. Existing table rows rank
+Reconstruction: a column's folded value survives iff its seq is at or
+after the delete barrier (no value shares a delete's seq, so this is
+"after"); otherwise the delete wiped it. Existing table rows rank
 before every batch event (batches are applied in commit-ts order by the
 engine's partition-DAG gate), so on MERGE an existing value survives only
 if the batch had no delete for that key. Exact duplicate records (O12)
@@ -60,7 +66,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from debezium_connector_spanner_spark.sources.lake import LakeTable
+from debezium_connector_spanner_spark.sources.lake import (
+    LakeTable,
+    _q,
+    lww_aggs,
+    lww_survives,
+)
 
 CDC_TS_COL = "__cdc_ts"  # last applied commit_ts (epoch micros) per row
 
@@ -72,9 +83,12 @@ def fold_changes(
 ) -> DataFrame:
     """One row per key: post-fold values + delete flags (single agg pass).
 
-    Input: decode_mods output (key cols flattened, seq struct, op, vals).
+    Input: decode_mods output (key cols flattened, seq struct, op, vals, wrt).
     """
-    return _fold(decoded, key_cols, value_cols)
+    g = _lww_input(decoded, key_cols, value_cols).groupBy(*key_cols).agg(
+        *_fold_aggs(value_cols)
+    )
+    return _project_lww(g, key_cols, value_cols)
 
 
 def fold_changes_salted(
@@ -95,78 +109,61 @@ def fold_changes_salted(
     spanning thousands of input partitions — and as the documented skew
     strategy. Results are identical to fold_changes (property-tested).
     """
-    salt = F.pmod(
-        F.xxhash64(F.col("seq.ts"), F.col("seq.rs"), F.col("seq.mod")), F.lit(n_salts)
-    ).alias("_salt")
-    partial = _fold(decoded.withColumn("_salt", salt), ["_salt", *key_cols], value_cols, project=False)
-    # combine partial folds: same max-based aggregates one level up
-    aggs = [
-        F.max("_last").alias("_last"),
-        F.max("_del").alias("_del"),
-        F.sum("_n_mods").alias("_n_mods"),
-    ]
-    for c in value_cols:
-        aggs.append(F.max(f"_m_{c}").alias(f"_m_{c}"))
-    g = partial.groupBy(*key_cols).agg(*aggs)
-    return _project_fold(g, key_cols, value_cols)
+    salt = f"pmod(xxhash64(seq.ts, seq.rs, seq.mod), {int(n_salts)}) AS _salt"
+    partial = _lww_input(decoded, key_cols, value_cols, salt).groupBy("_salt", *key_cols).agg(
+        *_fold_aggs(value_cols)
+    )
+    # combine the partial folds: the same max-based aggregates one level up
+    parts = ["_top", "_barrier", *[f"_m_{c}" for c in value_cols]]
+    g = partial.groupBy(*key_cols).agg(
+        *[F.expr(f"max({_q(a)}) AS {_q(a)}") for a in parts], F.expr("sum(_n_mods) AS _n_mods")
+    )
+    return _project_lww(g, key_cols, value_cols)
 
 
-def _fold(
-    decoded: DataFrame,
-    group_cols: list[str],
-    value_cols: list[str],
-    project: bool = True,
+def _lww_input(
+    decoded: DataFrame, key_cols: list[str], value_cols: list[str], *extra: str
 ) -> DataFrame:
-    # written = key present in the new-values JSON (wrt flags from
-    # decode_mods) so an explicit-null write participates in the fold;
-    # frames without wrt (hand-built test inputs) fall back to value
-    # non-null, which conflates explicit null with 'not written'.
-    has_wrt = "wrt" in decoded.columns
-
-    def written(c: str) -> F.Column:
-        return F.col(f"wrt.{c}") if has_wrt else F.col(f"vals.{c}").isNotNull()
-
-    aggs = [
-        F.max(F.struct(F.col("seq"), F.col("op"))).alias("_last"),
-        F.max(F.when(F.col("op") == "d", F.col("seq"))).alias("_del"),
-        F.count(F.lit(1)).alias("_n_mods"),
-    ]
-    for c in value_cols:
-        aggs.append(
-            F.max(
-                F.when(
-                    written(c),
-                    F.struct(F.col("seq").alias("s"), F.col(f"vals.{c}").alias("v")),
-                )
-            ).alias(f"_m_{c}")
-        )
-    g = decoded.groupBy(*group_cols).agg(*aggs)
-    if not project:
-        return g
-    return _project_fold(g, group_cols, value_cols)
+    """decode_mods rows in the input contract of sources/lake.py
+    ``lww_aggs``: a mod is ordered by its seq, a delete mod is its own
+    barrier, and a column counts as written when its key is present in
+    the new-values JSON (so an explicit NULL is applied). A delete mod
+    writes no value, so no value shares the barrier's order."""
+    return decoded.selectExpr(
+        *[_q(k) for k in key_cols],
+        *extra,
+        "seq AS _o",
+        "op = 'd' AS _is_delete",
+        "op = 'd' AS _had_delete",
+        *[f"vals.{_q(c)} AS {_q(c)}" for c in value_cols],
+        *[f"wrt.{_q(c)} AND op <> 'd' AS {_q(f'__w_{c}')}" for c in value_cols],
+    )
 
 
-def _project_fold(g: DataFrame, group_cols: list[str], value_cols: list[str]) -> DataFrame:
+def _fold_aggs(value_cols: list[str]) -> list:
+    """The shared LWW aggregates plus each key's mod count, which the
+    engine's adaptive-skew probe reads."""
+    return [F.expr(a) for a in [*lww_aggs(value_cols), "count(1) AS _n_mods"]]
+
+
+def _project_lww(g: DataFrame, key_cols: list[str], value_cols: list[str]) -> DataFrame:
     """Project the fold aggregates to output columns.
 
     Per column: ``c`` = the surviving value (may be an explicit NULL) and
     ``_w_c`` = whether the batch wrote the column at all post-barrier —
     the MERGE needs the flag to distinguish 'set to NULL' (apply) from
     'not written' (keep target value)."""
-    cols = [F.col(c) for c in group_cols]
+    cols = [_q(k) for k in key_cols]
     for c in value_cols:
-        survives = F.col(f"_m_{c}").isNotNull() & (
-            F.col("_del").isNull() | (F.col(f"_m_{c}.s") > F.col("_del"))
-        )
-        cols.append(F.when(survives, F.col(f"_m_{c}.v")).alias(c))
-        cols.append(survives.alias(f"_w_{c}"))
+        cols.append(f"CASE WHEN {lww_survives(c)} THEN {_q(f'_m_{c}')}.v END AS {_q(c)}")
+        cols.append(f"{lww_survives(c)} AS {_q(f'_w_{c}')}")
     cols += [
-        (F.col("_last.op") == "d").alias("_is_delete"),
-        F.col("_del").isNotNull().alias("_had_delete"),
-        F.col("_last.seq.ts").alias("_ts"),
-        F.col("_n_mods"),
+        "_top._is_delete AS _is_delete",
+        "_barrier IS NOT NULL AS _had_delete",
+        "_top.o.ts AS _ts",
+        "_n_mods",
     ]
-    return g.select(*cols)
+    return g.selectExpr(*cols)
 
 
 def merge_into(
@@ -214,25 +211,13 @@ def merge_into(
             list(schema.fields) + [T.StructField(CDC_TS_COL, T.LongType(), True)]
         )
 
-    has_flags = any(c.startswith("_w_") for c in folded.columns)
-
-    def wflag(c: str) -> F.Column:
-        # written-flag per column; legacy folds without flags fall back to
-        # value-non-null (explicit nulls then read as 'not written')
-        return (
-            F.coalesce(F.col(f"_w_{c}"), F.lit(False))
-            if has_flags and f"_w_{c}" in folded.columns
-            else F.col(c).isNotNull()
-        )
-
     if mode == "mor":
-        delta = folded.select(
-            *key_cols,
-            *[F.col(c) for c in value_cols],
-            F.col("_ts").cast("long").alias(CDC_TS_COL),
+        delta = folded.selectExpr(
+            *[_q(c) for c in [*key_cols, *value_cols]],
+            f"CAST(_ts AS BIGINT) AS {_q(CDC_TS_COL)}",
             "_is_delete",
             "_had_delete",
-            *[wflag(c).alias(f"__set_{c}") for c in value_cols],
+            *[f"{_q(f'_w_{c}')} AS {_q(f'__set_{c}')}" for c in value_cols],
         )
         return table.commit_delta(delta, schema=write_schema, summary=summary)
 
@@ -252,7 +237,7 @@ def merge_into(
     src = folded.select(
         *key_cols,
         *[F.col(c).alias(f"__s_{c}") for c in value_cols],
-        *[wflag(c).alias(f"__w_{c}") for c in value_cols],
+        *[F.col(f"_w_{c}").alias(f"__w_{c}") for c in value_cols],
         "_is_delete",
         "_had_delete",
         "_ts",

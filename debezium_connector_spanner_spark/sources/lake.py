@@ -579,6 +579,12 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _str(text: str) -> str:
+    """Quote ``text`` as a SQL string literal (Spark's default parser,
+    which reads backslash escapes)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _cast_list(schema: T.StructType) -> list[str]:
     """SQL select list casting each field of ``schema`` to its type: one
     ``selectExpr``, where per-field Column chains (col, cast, alias) cost
@@ -632,33 +638,55 @@ def _rank_projection(
     return cols
 
 
-def fold_ranked(df: DataFrame, key_cols: list[str], target: T.StructType) -> DataFrame:
-    """Merge-on-read fold: one hash aggregation per key over ordered rows
-    (order ``_o`` = (commit-ts lineage, snapshot rank); base rows sort
-    first). Mirrors the event-level LWW fold in operators/merge.py one
-    level up: each delta row is itself a folded batch, with
-    ``_had_delete`` acting as the delete barrier, ``_is_delete`` of the
-    top row deciding existence, and ``__w_c`` written flags applying
-    explicit-NULL column writes.
+def lww_aggs(value_cols: list[str]) -> list[str]:
+    """The last-writer-wins fold as SQL aggregates, one row per group.
 
-    max-only aggregates -> map-side partial aggregation -> hot-key safe.
-    """
-    value_cols = [f.name for f in target.fields if f.name not in key_cols]
-    m = {c: _q(f"_m_{c}") for c in value_cols}
-    aggs = [
+    Input rows carry ``_o`` (a struct ordering the rows; a larger one is
+    applied later), ``_is_delete`` (the row leaves the key deleted),
+    ``_had_delete`` (the row holds a delete: a barrier) and, per value
+    column ``c``, the value ``c`` and its written flag ``__w_c`` (True
+    for an explicit-NULL write too). ``_top`` is the last row (does it
+    delete?), ``_barrier`` the last delete and ``_m_c`` the last write of
+    ``c``; :func:`lww_survives` says whether that write outlives the
+    barrier. max-only aggregates: associative and idempotent, so they
+    pre-reduce map-side, combine across partial folds and absorb exact
+    duplicates."""
+    return [
         "max(named_struct('o', _o, '_is_delete', _is_delete)) AS _top",
         "max(CASE WHEN _had_delete THEN _o END) AS _barrier",
     ] + [
         f"max(CASE WHEN {_q(f'__w_{c}')} THEN named_struct('o', _o, 'v', {_q(c)}) END)"
-        f" AS {m[c]}"
+        f" AS {_q(f'_m_{c}')}"
         for c in value_cols
     ]
+
+
+def lww_survives(c: str) -> str:
+    """SQL predicate over :func:`lww_aggs` output: column ``c`` was
+    written at or after the last delete (a row's own delete writes no
+    value)."""
+    m = _q(f"_m_{c}")
+    return f"{m} IS NOT NULL AND (_barrier IS NULL OR {m}.o >= _barrier)"
+
+
+def fold_ranked(df: DataFrame, key_cols: list[str], target: T.StructType) -> DataFrame:
+    """Merge-on-read fold: one hash aggregation per key over ordered rows
+    (order ``_o`` = (commit-ts lineage, snapshot rank); base rows sort
+    first). It is the event-level LWW fold of operators/merge.py, the
+    same :func:`lww_aggs`, one level up: each delta row is itself a
+    folded batch, with ``_had_delete`` acting as the delete barrier,
+    ``_is_delete`` of the top row deciding existence, and ``__w_c``
+    written flags applying explicit-NULL column writes.
+
+    max-only aggregates -> map-side partial aggregation -> hot-key safe.
+    """
+    value_cols = [f.name for f in target.fields if f.name not in key_cols]
+    aggs = lww_aggs(value_cols)
     g = df.groupBy(*key_cols).agg(*[F.expr(a) for a in aggs]).where("NOT _top._is_delete")
     return g.selectExpr(
         *[_q(c) for c in key_cols],
         *[
-            f"CASE WHEN {m[c]} IS NOT NULL AND (_barrier IS NULL OR {m[c]}.o >= _barrier)"
-            f" THEN {m[c]}.v END AS {_q(c)}"
+            f"CASE WHEN {lww_survives(c)} THEN {_q(f'_m_{c}')}.v END AS {_q(c)}"
             for c in value_cols
         ],
     )

@@ -82,6 +82,7 @@ from debezium_connector_spanner_spark.operators.decode import decode_mods, table
 from debezium_connector_spanner_spark.operators.merge import (
     CDC_TS_COL,
     fold_changes,
+    fold_changes_salted,
     merge_into,
 )
 from debezium_connector_spanner_spark.sources.event_schema import (
@@ -1168,35 +1169,34 @@ class CdcReplayEngine:
         """decode -> fold -> MERGE one table.
 
         Returns (snapshot_id, fold_obs). Commits a snapshot; the caller may
-        roll it back (schema retry / empty slice).
+        roll it back (schema retry / empty slice). Building the decode and
+        fold plan is its own stage, ``plan``: driver time that starts no
+        Spark job.
         """
         table = self.tables[name].table
-        decoded = decode_mods(scan, schema)
-        if use_salted:
-            from debezium_connector_spanner_spark.operators.merge import (
-                fold_changes_salted,
-            )
-
-            folded = fold_changes_salted(
-                decoded,
-                schema.key_columns,
-                schema.value_columns,
-                n_salts=self._salt_width,
-            )
-        else:
-            folded = fold_changes(decoded, schema.key_columns, schema.value_columns)
-        # adaptive-skew probe rides the POST-fold rows (one per key, ~10x
-        # fewer than raw mods, already being written): hot share is the
-        # hottest single key's fraction of the batch's mods, read straight
-        # from the fold's own _n_mods aggregate — no per-raw-row work.
-        fold_obs = None
-        if self.cfg.skew_mode == "adaptive":
-            fold_obs = Observation(f"fold-{batch_id}-{name}-a{attempt}")
-            folded = folded.observe(
-                fold_obs,
-                F.max("_n_mods").alias("_max_key_mods"),
-                F.sum("_n_mods").alias("_sum_key_mods"),
-            )
+        with self._stage("plan", name):
+            decoded = decode_mods(scan, schema)
+            if use_salted:
+                folded = fold_changes_salted(
+                    decoded,
+                    schema.key_columns,
+                    schema.value_columns,
+                    n_salts=self._salt_width,
+                )
+            else:
+                folded = fold_changes(decoded, schema.key_columns, schema.value_columns)
+            # adaptive-skew probe rides the POST-fold rows (one per key, ~10x
+            # fewer than raw mods, already being written): hot share is the
+            # hottest single key's fraction of the batch's mods, read straight
+            # from the fold's own _n_mods aggregate — no per-raw-row work.
+            fold_obs = None
+            if self.cfg.skew_mode == "adaptive":
+                fold_obs = Observation(f"fold-{batch_id}-{name}-a{attempt}")
+                folded = folded.observe(
+                    fold_obs,
+                    F.max("_n_mods").alias("_max_key_mods"),
+                    F.sum("_n_mods").alias("_sum_key_mods"),
+                )
         sid = merge_into(
             table,
             folded,

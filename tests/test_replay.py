@@ -79,6 +79,86 @@ def test_golden_replay(spark, tmp_root):
     _assert_matches_oracle(eng, fx)
 
 
+def _rename_value_columns(src: str, dst: str, names: dict[str, str]) -> None:
+    """Copy fixture ``src`` to ``dst`` with value columns renamed in the
+    base table, in every mod's row images and in ``column_types``."""
+    import glob
+    import json
+    import shutil
+
+    import pyarrow as pa
+
+    def images(text):
+        if text is None:
+            return None
+        return json.dumps({names.get(k, k): v for k, v in json.loads(text).items()})
+
+    def types(text):
+        if text is None:
+            return None
+        cols = json.loads(text)
+        for c in cols:
+            c["name"] = names.get(c["name"], c["name"])
+        return json.dumps(cols, sort_keys=True)
+
+    shutil.copytree(src, dst)
+    base = pq.read_table(os.path.join(dst, "base_repos.parquet"))
+    pq.write_table(
+        base.rename_columns([names.get(c, c) for c in base.column_names]),
+        os.path.join(dst, "base_repos.parquet"),
+    )
+    for path in glob.glob(os.path.join(dst, "events", "*", "*.parquet")):
+        t = pq.read_table(path)
+        rows = t.to_pylist()
+        for r in rows:
+            r["column_types"] = types(r["column_types"])
+            for m in r["mods"] or []:
+                m["new_values"] = images(m["new_values"])
+                m["old_values"] = images(m["old_values"])
+        pq.write_table(pa.Table.from_pylist(rows, schema=t.schema), path)
+
+
+def test_quoted_column_names_replay_matches_oracle(spark, tmp_root):
+    """Column names come from the change log's ``column_types``, which is
+    outside input: value columns whose names hold a single quote and a
+    backslash replay (merge-on-read) to the independent pandas fold of the
+    same log."""
+    import dataclasses
+
+    from debezium_connector_spanner_spark.sources.event_schema import TableSchema
+
+    names = {"commit": "it's\\x", "lang": "l\\'ang"}
+    fx = os.path.join(tmp_root, "fx")
+    write_fixture(fx, CFG)
+    qfx = os.path.join(tmp_root, "qfx")
+    _rename_value_columns(fx, qfx, names)
+    schema = TableSchema(
+        "repos",
+        tuple(
+            dataclasses.replace(c, name=names.get(c.name, c.name))
+            for c in REPOS_SCHEMA_V1.columns
+        ),
+    )
+    eng = CdcReplayEngine(
+        spark,
+        qfx,
+        os.path.join(tmp_root, "repos_table"),
+        os.path.join(tmp_root, "ckpt"),
+        start_us=EPOCH_MICROS,
+        end_us=EPOCH_MICROS + CFG.duration_s * 1_000_000,
+        n_batches=4,
+        initial_schema=schema,
+        base_df=spark.read.parquet(os.path.join(qfx, "base_repos.parquet")),
+        n_buckets=8,
+        sink_mode="mor",
+    )
+    eng.run()
+    want = fold_final_state(fx).rename(columns=names)
+    got = _final_pd(eng)
+    assert eng.schema.value_columns == [names["commit"], names["lang"], "content"]
+    pd.testing.assert_frame_equal(got[want.columns.tolist()], want)
+
+
 def test_resume_from_checkpoint(spark, tmp_root):
     fx = os.path.join(tmp_root, "fx")
     write_fixture(fx, CFG)
@@ -251,7 +331,19 @@ def test_stage_pools_and_job_tags(spark, tmp_root, monkeypatch):
 
     monkeypatch.setattr(engine_mod, "merge_into", recording_merge)
     monkeypatch.setattr(LakeTable, "compact_prepare", recording_prepare)
-    _mk_engine(spark, fx, tmp_root).run()
+    eng = _mk_engine(spark, fx, tmp_root)
+    eng.run()
+
+    # building the decode + fold plan is timed as its own stage and
+    # starts no Spark job
+    merging = [m["timings"] for m in eng.metrics() if "merge_repos_s" in m["timings"]]
+    assert merging and all("plan_repos_s" in t for t in merging)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descs = [jobs.apply(i).description() for i in range(jobs.size())]
+    descs = [d.get() for d in descs if d.isDefined()]
+    assert any(":merge:repos" in d for d in descs)
+    assert not any(":plan:" in d for d in descs)
 
     merges = [s for s in seen if s[0] == "merge"]
     assert len(merges) >= 6
